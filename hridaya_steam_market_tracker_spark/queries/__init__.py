@@ -63,75 +63,62 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
 # tests/test_sample_order.py asserts this head EQUALS the derived order, so
 # neither a rewrite nor a hand-reorder can ship un-resampled. Regenerate with
 # `python tools/sample_order.py`.
-# Round-13 composition (cost-aware — the r12 empty-record lesson): the
-# twelve never-driver-sampled queries lead (the six r12 CDT/fuzzy
-# queries whose r12 record came back empty, plus the five new hybrid/
-# density queries and the avc1 I_PCM decode), then the cohort whose
-# transitive fingerprints changed in the round-13 OPTIMIZATION work
-# (bind1 rewrites touch the n-gram/shingle/chunk/embedding families;
-# the precomputed-norm rewrite touches the similarity family; the DSIR
-# single-pass restructure flags dsir_importance_weights directly; the
-# second round-13 batch flags the apss probe, the widened brute tiers,
-# the components consumers and the media twins; the fourth sitting's
-# array-signature/plane-bank, LSH table-lambda, bound-jaccard and
-# textrank degree-join rewrites re-flag the minhash/LSH/textrank
-# families and rotate minhash_estimate_error + textrank_keywords in),
-# then the staleness
-# rotation. WITHIN each tier the order is measured
-# per-query cost, CHEAP FIRST (tools/query_costs.json) — so a
-# time-budgeted driver run records as many rows as possible before any
-# cutoff.
+# The head leads with the flagged queries (never-sampled first, then
+# oldest green row), then the staleness rotation; WITHIN each tier the
+# order is measured per-query cost, CHEAP FIRST (tools/query_costs.json),
+# so a time-budgeted correctness run records as many rows as possible
+# before any cutoff.
 _SAMPLE_FIRST: tuple[str, ...] = (
-    "multimodal_audio_cdt_anchors_checked",
-    "multimodal_avc1_ipcm_decode_checked",
-    "multimodal_image_cdt_anchors_checked",
-    "multimodal_audio_cdt_density_checked",
-    "multimodal_image_cdt_density_checked",
-    "multimodal_audio_cdt_excerpt_pairs",
-    "multimodal_image_cdt_crop_pairs",
-    "multimodal_audio_hybrid_excerpt_pairs",
-    "multimodal_image_hybrid_crop_pairs",
-    "fuzzy_decontaminate_pairs",
+    "corpus_excerpt_admission_twin",
+    "media_ingest_admission_twin",
+    "duplicate_span_pairs",
+    "cdc_chunks_checked",
+    "emb_cosine_near_dup",
+    "clip_duplicate_spans_stats",
+    "multimodal_audio_dedup_keep_list",
+    "multimodal_image_dedup_keep_list",
+    "cdc_dup_chunk_mass",
+    "chargram_lang_id",
+    "cdc_offset_dup_pairs",
+    "semantic_dedup_keep_list",
+    "multimodal_video_dedup_keep_list",
+    "bpe_train_merges",
+    "perceptron_quality_scores",
+    "semantic_dedup_text_e2e",
+    "media_phase_excerpt_admission_twin",
+    "emb_near_dup_clusters",
+    "bpe_doc_token_stats",
+    "media_excerpt_admission_twin",
+    "dedup_recall_audit",
+    "any_media_ingest_admission_twin",
+    "pretrain_pipeline_e2e",
+    "dedup_keep_best_quality",
+    "cluster_weighted_sample",
+    "curation_pipeline_kept_docs",
+    "dedup_clusters",
+    "dedup_clusters_star",
     "media_cdt_excerpt_admission_twin",
     "media_hybrid_admission_twin",
-    "tfidf_cosine_pairs_tiled",
-    "tfidf_cosine_pairs_posting",
-    "tfidf_cosine_pairs",
-    "strip_source_prefix_stats",
-    "doc_repetition_stats",
-    "chunk_dedup_reassemble",
-    "stupid_backoff_eval_scores",
-    "dsir_importance_weights",
-    "ccnet_perplexity_buckets",
-    "doc_embeddings_hashed",
-    "domain_mix_weights",
-    "bigram_lm_doc_scores",
-    "textrank_keywords",
-    "ann_pq_recall_vs_brute",
-    "minhash_estimate_error",
-    "mmr_diverse_topk",
-    "source_prefix_boilerplate",
-    "vocab_growth_curve",
-    "containment_pairs",
-    "duplicate_span_stats",
-    "multimodal_video_subclip_pairs",
-    "strip_then_span_stats",
-    "hybrid_rrf_search",
-    "multimodal_dhash_oriented_checked",
-    "multimodal_audio_fingerprint_checked",
-    "multimodal_image_exif_checked",
-    "multimodal_image_tile_fingerprints",
-    "multimodal_image_whash_checked",
-    "multimodal_audio_clip_fingerprints",
-    "multimodal_audio_offset_clip_fingerprints",
-    "multimodal_audio_segments",
-    "multimodal_image_offset_tile_fingerprints",
-    "multimodal_dhash_oriented_near_pairs_checked",
-    "multimodal_whash_near_pairs",
-    "multimodal_audio_excerpt_pairs",
-    "multimodal_image_crop_pairs",
-    "multimodal_image_offset_crop_pairs",
-    "multimodal_audio_offset_excerpt_pairs",
+    "i1_json_extract",
+    "g2_minor_units_conversion",
+    "g3_parse_volume",
+    "g4_extract_currency",
+    "h1_parse_steam_datetime",
+    "range_join_views_before_purchase",
+    "value_histogram",
+    "value_percentiles_per_stream",
+    "f3_payload_dup_check",
+    "g5_activity_price_currency",
+    "x2_cube_flag_status",
+    "x3_pivot_status_by_segment",
+    "x4_above_customer_avg_orders",
+    "x5_grouping_sets_events",
+    "g1_parse_steam_price",
+    "i3_json_payload_build",
+    "x1_rollup_region_nation",
+    "i5_spread_per_key_day",
+    "text_quality_stats",
+    "sessionize_events",
 )
 
 

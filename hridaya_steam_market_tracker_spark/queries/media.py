@@ -3153,8 +3153,10 @@ def media_hybrid_admission_twin(
         checked_audio_hybrid_df,
         checked_image_hybrid_df,
     )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
+    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
         media_excerpt_rejects,
+    )
+    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
         media_winnow_fps,
     )
 
@@ -3424,7 +3426,7 @@ def _excerpt_twin_oracle() -> str:
     doc=(
         "The excerpt/crop admission DECISION, value-checked end to "
         "end: the LITERAL streaming decision function "
-        "(streaming/media_ingest.py:media_excerpt_rejects — df-capped "
+        "(streaming/corpus_ingest.py:media_excerpt_rejects — df-capped "
         "evidence, unpruned denominator, distinct shared fps, stored "
         "+ lower-id leader-keeps, >= tau) runs against planted "
         "store/batch waves spanning ALL THREE planes — a video "
@@ -3449,8 +3451,10 @@ def media_excerpt_admission_twin(
         checked_image_crop_df,
         checked_video_clip_df,
     )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
+    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
         media_excerpt_rejects,
+    )
+    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
         media_winnow_fps,
     )
 
@@ -3578,8 +3582,10 @@ def media_phase_excerpt_admission_twin(
         checked_audio_offset_clip_df,
         checked_image_offset_crop_df,
     )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
+    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
         media_excerpt_rejects,
+    )
+    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
         media_winnow_fps,
     )
 
@@ -3703,8 +3709,10 @@ def media_cdt_excerpt_admission_twin(
         checked_audio_cdt_excerpt_df,
         checked_image_cdt_crop_df,
     )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
+    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
         media_excerpt_rejects,
+    )
+    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
         media_winnow_fps,
     )
 

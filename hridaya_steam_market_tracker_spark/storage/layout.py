@@ -49,11 +49,30 @@ def write_partitioned(
     )
 
 
+def _rename_aside(tmp: str, live: str) -> None:
+    """Swap the fully written ``tmp`` dir in for ``live``: live →
+    ``.compact.old``, tmp → live, drop old. ``live`` is absent only
+    between two atomic renames, never for the duration of an
+    ``rmtree``; every state a crash can leave is one
+    `_check_partition_integrity` recognises. Shared by
+    `compact_partition` and the near-dup gate stores
+    (streaming/corpus_ingest.py `compact_store`)."""
+    old = live + ".compact.old"
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+    os.rename(live, old)
+    os.rename(tmp, live)
+    shutil.rmtree(old)
+
+
 def _check_partition_integrity(path: str, repair: bool = False) -> None:
-    """Guard every crash state `compact_partition`'s rename-aside can
-    leave, so readers get either clean results or a guided error —
-    never a raw ``date.fromisoformat`` crash on a ``date=X.compact.*``
-    entry (those start with ``date=`` too).
+    """Guard every crash state `_rename_aside` can leave among the
+    directories under ``path`` (date partitions of a table, or the
+    docs/bands/wfps components of a gate store), so readers get either
+    clean results or a guided error — never a raw
+    ``date.fromisoformat`` crash on a ``date=X.compact.*`` entry (those
+    start with ``date=`` too) and never a gate store silently read as
+    empty.
 
     ``repair`` gates the destructive arm and is set ONLY by the writer
     (`compact_partition` start): deleting a superseded ``.compact.*``
@@ -68,7 +87,7 @@ def _check_partition_integrity(path: str, repair: bool = False) -> None:
     * ``.compact.tmp`` WITHOUT live (crash between tmp write-out and
       the swap completing): the tmp dir may be the only surviving
       copy — refuse loudly; recovery must be a deliberate single
-      ``os.rename``. Mirrors corpus_ingest._check_store_integrity.
+      ``os.rename``.
     * ``.compact.old`` WITHOUT live (and no tmp): the pre-compaction
       copy is the only data left — refuse with the rename that
       restores it.
@@ -94,14 +113,14 @@ def _check_partition_integrity(path: str, repair: bool = False) -> None:
                     shutil.rmtree(orphan)
             elif suffix == ".compact.tmp":
                 raise RuntimeError(
-                    f"half-compacted partition: {orphan!r} exists without "
+                    f"half-compacted directory: {orphan!r} exists without "
                     f"{live!r}; a compaction crashed mid-swap. Recover with "
-                    f"os.rename({orphan!r}, {live!r}) before reading or "
-                    f"compacting this table."
+                    f"os.rename({orphan!r}, {live!r}) before reading, "
+                    f"ingesting or compacting."
                 )
             elif not os.path.isdir(live + ".compact.tmp"):
                 raise RuntimeError(
-                    f"half-compacted partition: {orphan!r} exists without "
+                    f"half-compacted directory: {orphan!r} exists without "
                     f"{live!r} or a .compact.tmp; the pre-compaction copy is "
                     f"the only data left. Recover with "
                     f"os.rename({orphan!r}, {live!r})."
@@ -166,13 +185,12 @@ def compact_partition(
 ) -> int:
     """Rewrite one date partition into `target_files` key-sorted files
     (compress-after-age analog). Returns rows rewritten. Only the one
-    partition directory is read and replaced via rename-aside (live →
-    ``.compact.old``, tmp → live, drop old), so the partition is absent
-    only between two atomic renames — a crash mid-swap leaves the fully
-    written ``.compact.tmp`` for a one-rename recovery, never a
-    partially deleted live dir. Refuses loudly (rather than clobbering
-    the only surviving copy) if the table already holds a
-    half-compacted partition from a previous crash."""
+    partition directory is read and replaced via `_rename_aside` — a
+    crash mid-swap leaves the fully written ``.compact.tmp`` for a
+    one-rename recovery, never a partially deleted live dir. Refuses
+    loudly (rather than clobbering the only surviving copy) if the
+    table already holds a half-compacted partition from a previous
+    crash."""
     _check_partition_integrity(path, repair=True)
     part_dir = os.path.join(path, f"{PARTITION_COL}={part.isoformat()}")
     df = spark.read.parquet(part_dir)
@@ -184,12 +202,7 @@ def compact_partition(
         .write.mode("overwrite")
         .parquet(tmp_dir)
     )
-    old_dir = part_dir + ".compact.old"
-    if os.path.isdir(old_dir):
-        shutil.rmtree(old_dir)
-    os.rename(part_dir, old_dir)
-    os.rename(tmp_dir, part_dir)
-    shutil.rmtree(old_dir)
+    _rename_aside(tmp_dir, part_dir)
     return n
 
 

@@ -1,6 +1,7 @@
 """Streaming near-dup-gated corpus ingest — the CONTINUOUS twin of the
 batch `dedup_incremental_delta` query (operators/dedup.py
-`minhash_delta_near_duplicates`).
+`minhash_delta_near_duplicates`) — and the gate STORE PROTOCOL the
+text gate here and the media gate (streaming/media_ingest.py) share.
 
 Reference analog: the ingest plane's replay-safe delta insert
 (src/SQLinserts.py:515-584 upsert discipline, re-expressed for a
@@ -24,16 +25,27 @@ same assumption streaming/ingest.py documents):
   that actually collides, via a semi-join pushdown on doc_id.
 * ``wfps/``  — (excerpt-aware stores only) winnowing content
   fingerprints (doc_id, fp; fp=NULL presence rows), the text twin of
-  the unified media gate's excerpt tier: rejects batch docs whose
+  the media gate's excerpt tier: rejects batch docs whose
   fingerprint content is already stored (quotes, chunk re-uploads —
   the class whole-document MinHash is blind to). Governed by the
   ``_GATE_MODE`` store-lifetime marker.
 
-Store existence is checked with ``os.path.isdir`` — NOT a broad
-except around the read — so a corrupted footer / permission error /
-transient FS failure fails the micro-batch loudly instead of being
-misread as "first batch: empty store" and silently admitting
-duplicates into the persistent state.
+The store protocol, written once here for both gates:
+
+* existence is checked with ``os.path.isdir`` — NOT a broad except
+  around the read — so a corrupted footer / permission error /
+  transient FS failure fails the micro-batch loudly instead of being
+  misread as "first batch: empty store" and silently admitting
+  duplicates into the persistent state;
+* a half-compacted store is refused (storage/layout.py
+  `_check_partition_integrity`, the same check date partitions get);
+* `set_gate_mode` / `_check_gate_mode` enforce the store-lifetime
+  ``_GATE_MODE`` marker;
+* `_repair_index` re-indexes docs/ rows a crash left missing from an
+  index component;
+* `compact_store` rewrites every component with the shared
+  rename-aside swap (storage/layout.py `_rename_aside`);
+* `_start_gate` wires a gate into ``foreachBatch``.
 
 Admission policy per micro-batch: a document is REJECTED when it has
 an exact-Jaccard-verified near-dup among stored docs, or among
@@ -41,21 +53,15 @@ lower-id docs of the same batch (leader-keeps: the smallest id of a
 within-batch dup group is admitted; its satellites are not). Replay of
 a micro-batch is a no-op: already-stored doc_ids are anti-joined away
 before any work, mirroring idempotent_append.
-
-Maintenance: every micro-batch appends part files; after thousands of
-batches the equi-join pays an ever-growing file-listing + tiny-file
-scan cost. ``compact_store`` rewrites both stores down to a bounded
-file count (tmp-dir-swap, the storage/layout.py compact_partition
-pattern) without changing a single admission decision — call it every
-N micro-batches or from a maintenance cron.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.operators.dedup import (
@@ -63,45 +69,129 @@ from hridaya_steam_market_tracker_spark.operators.dedup import (
     banded_buckets,
     shingles,
     signatures_from_sets,
+    winnow_fingerprints,
+)
+from hridaya_steam_market_tracker_spark.storage.layout import (
+    _check_partition_integrity,
+    _rename_aside,
 )
 
 _BAND_COLS = ("doc_id", "band", "bucket")
+_TEXT_WFP_COLS = ("doc_id", "fp")
+# Hive partition columns of each store component — what `compact_store`
+# needs to rewrite a component in place.
+_TEXT_LAYOUT = {"docs": (), "bands": ("band",), "wfps": ()}
+
+_GATE_MODE_MARKER = "_GATE_MODE"
 
 
-def _swap_dir(tmp: str, live: str) -> None:
-    """Replace ``live`` with ``tmp`` via rename-aside: the live directory
-    is absent only between two atomic renames, not for the duration of an
-    ``rmtree`` over the whole store. A crash in that narrow window leaves
-    ``<live>.compact.tmp`` on disk without ``live`` — a state
-    ``ingest_batch`` refuses loudly (see ``_check_store_integrity``)
-    instead of silently treating the store as empty and re-admitting
-    duplicates."""
-    old = live + ".compact.old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old)
+def set_gate_mode(store_path: str, mode: str) -> None:
+    """Deliberately (re)declare a gate store's admission mode — the
+    explicit act `_check_gate_mode`'s refusal demands before a store
+    may switch modes. ``mode`` is ``"plain"`` or ``"excerpt"`` for the
+    text gate, a `media_ingest.media_gate_mode` string for the media
+    gate. Switching an existing store to a DIFFERENT excerpt-aware mode
+    drops wfps/ (re-keying the index is what switching means), and the
+    next excerpt-aware batch's repair pass fingerprints every stored
+    item once — a text re-read of docs/ for the text gate, one payload
+    re-decode per stored row for the media gate. Without the drop,
+    stored items would keep fingerprints of the old mode and an
+    excerpt of an OLD item could still sail through."""
+    os.makedirs(store_path, exist_ok=True)
+    marker = os.path.join(store_path, _GATE_MODE_MARKER)
+    old_mode = None
+    if os.path.isfile(marker):
+        with open(marker) as f:
+            old_mode = f.read().strip()
+    wfps_path = os.path.join(store_path, "wfps")
+    if old_mode not in (None, mode) and mode != "plain" and os.path.isdir(wfps_path):
+        shutil.rmtree(wfps_path)
+    with open(marker, "w") as f:
+        f.write(mode)
 
 
-def _check_store_integrity(
-    store_path: str, subdirs: tuple[str, ...] = ("docs", "bands")
-) -> None:
-    """Fail loudly on the one half-compacted state rename-aside can
-    leave: a ``.compact.tmp`` (the fully-written compacted store) present
-    without its live counterpart. Recovery is a single rename, which must
-    be a deliberate operator action — never an implicit 'store is empty'.
-    ``subdirs`` lists the store components (the excerpt-aware media gate
-    adds ``wfps``)."""
-    for sub in subdirs:
-        live = os.path.join(store_path, sub)
-        tmp = live + ".compact.tmp"
-        if os.path.isdir(tmp) and not os.path.isdir(live):
-            raise RuntimeError(
-                f"half-compacted store: {tmp!r} exists without {live!r}; "
-                f"a compaction crashed mid-swap. Recover with "
-                f"os.rename({tmp!r}, {live!r}) before ingesting."
-            )
+def _check_gate_mode(store_path: str, mode: str) -> None:
+    """A store is EITHER plain OR excerpt-aware (in one excerpt mode)
+    for its whole life. Mixed-mode ingest is refused loudly — plain
+    batches into an excerpt store leave wfps/ stale AND stop rejecting
+    excerpts; excerpt batches into a plain store silently pay a
+    full-store re-fingerprint in repair. Marker-less stores are
+    grandfathered by INFERENCE from the one durable fact on disk —
+    wfps/ exists iff the store ever ingested excerpt-aware — then the
+    marker is written so the inference happens once."""
+    marker = os.path.join(store_path, _GATE_MODE_MARKER)
+    stored_mode = None
+    if os.path.isfile(marker):
+        with open(marker) as f:
+            stored_mode = f.read().strip()
+    elif os.path.isdir(os.path.join(store_path, "docs")):
+        wfps = os.path.isdir(os.path.join(store_path, "wfps"))
+        stored_mode = "excerpt" if wfps else "plain"
+    if stored_mode not in (None, mode):
+        raise ValueError(
+            f"store {store_path!r} was ingested in {stored_mode!r} mode "
+            f"but this batch requests {mode!r}: mixed-mode ingest "
+            "silently weakens the gate (stale wfps/, unrejected "
+            "excerpts). Keep the excerpt settings consistent for the "
+            "store's lifetime, or switch deliberately with "
+            f"set_gate_mode({store_path!r}, {mode!r})."
+        )
+    if not os.path.isfile(marker):
+        set_gate_mode(store_path, mode)
+
+
+def _repair_index(
+    spark: SparkSession,
+    store_path: str,
+    component: str,
+    id_col: str,
+    rebuild: Callable[[DataFrame], DataFrame],
+    partition_cols: tuple[str, ...] = (),
+    candidates: Column | None = None,
+) -> int:
+    """Re-index any docs/ rows missing from the ``component`` index —
+    the crash state a failure between a gate batch's appends leaves
+    behind (admitted rows permanently unindexed; replay anti-joins them
+    away as already-stored, so their near-dups are admitted forever),
+    and the one-time backfill after a `set_gate_mode` switch.
+    ``candidates`` (a Column over docs/) narrows the rows that must be
+    indexed; every candidate writes at least one index row (fp=NULL
+    presence rows where there is nothing to fingerprint), so orphan
+    detection is one id-column anti-join and only actual orphans are
+    re-signed by ``rebuild``. Returns index rows written."""
+    docs_path = os.path.join(store_path, "docs")
+    index_path = os.path.join(store_path, component)
+    if not os.path.isdir(docs_path):
+        return 0
+    docs = spark.read.parquet(docs_path)
+    orphans = (docs if candidates is None else docs.filter(candidates)).select(id_col)
+    if os.path.isdir(index_path):
+        indexed = spark.read.parquet(index_path).select(id_col).distinct()
+        orphans = orphans.join(indexed, id_col, "left_anti")
+    # Cut lineage BEFORE the append refreshes index_path (the
+    # ingest_batch localCheckpoint lesson — the orphan set reads it).
+    orphans = orphans.localCheckpoint(eager=True)
+    if orphans.isEmpty():
+        return 0
+    repaired = rebuild(docs.join(orphans, id_col, "left_semi")).localCheckpoint(
+        eager=True
+    )
+    cnt = repaired.count()
+    repaired.write.mode("append").partitionBy(*partition_cols).parquet(index_path)
+    return cnt
+
+
+def _text_bands(docs: DataFrame, num_hashes: int, bands: int, n: int) -> DataFrame:
+    return banded_buckets(
+        signatures_from_sets(
+            _spread(docs, "doc_id").select(
+                "doc_id", shingles(F.col("text"), n).alias("sh")
+            ),
+            num_hashes,
+        ),
+        num_hashes,
+        bands,
+    )
 
 
 def repair_band_index(
@@ -111,100 +201,21 @@ def repair_band_index(
     bands: int = 16,
     n: int = 3,
 ) -> int:
-    """Re-index any docs/ rows missing from bands/ — the crash state a
-    failure between `ingest_batch`'s two appends leaves behind
-    (admitted docs permanently unindexed; replay anti-joins them away
-    as already-stored, so their near-dups are admitted forever). Every
-    text doc should have band rows, so orphan detection is one
-    id-column anti-join per batch; only actual orphans are re-shingled.
-    The media plane's `repair_media_band_index` is the same contract
-    with a decode_ok restriction. Signature params MUST match the
-    ingest's, or the repaired rows land in a different bucket space.
-    Returns band rows written."""
-    docs_path = os.path.join(store_path, "docs")
-    bands_path = os.path.join(store_path, "bands")
-    if not os.path.isdir(docs_path):
-        return 0
-    docs = spark.read.parquet(docs_path)
-    cand = docs.select("doc_id")
-    if os.path.isdir(bands_path):
-        band_ids = spark.read.parquet(bands_path).select("doc_id").distinct()
-        orphans = cand.join(band_ids, "doc_id", "left_anti")
-    else:
-        orphans = cand
-    # Cut lineage BEFORE the bands append refreshes bands_path (the
-    # module's localCheckpoint lesson — the orphan set reads it).
-    orphans = orphans.localCheckpoint(eager=True)
-    if orphans.isEmpty():
-        return 0
-    orphan_docs = docs.join(orphans, "doc_id", "left_semi")
-    repaired = banded_buckets(
-        signatures_from_sets(
-            _spread(orphan_docs, "doc_id").select(
-                "doc_id", shingles(F.col("text"), n).alias("sh")
-            ),
-            num_hashes,
-        ),
-        num_hashes,
-        bands,
-    ).localCheckpoint(eager=True)
-    cnt = repaired.count()
-    repaired.write.mode("append").partitionBy("band").parquet(bands_path)
-    return cnt
+    """`_repair_index` for the text gate's bands/: every doc has band
+    rows, so every docs/ row is a candidate. Signature params MUST
+    match the ingest's, or the repaired rows land in a different bucket
+    space. Returns band rows written."""
+    return _repair_index(
+        spark, store_path, "bands", "doc_id",
+        lambda d: _text_bands(d, num_hashes, bands, n), ("band",),
+    )
 
 
-_TEXT_WFP_COLS = ("doc_id", "fp")
-
-_GATE_MODE_MARKER = "_GATE_MODE"
-
-
-def set_corpus_gate_mode(store_path: str, excerpt: bool) -> None:
-    """Deliberately (re)declare a corpus store's admission mode — the
-    explicit act `_check_corpus_gate_mode`'s refusal demands before a
-    store may switch between plain and excerpt-aware ingest. After
-    switching TO excerpt mode, the next excerpt-aware batch's repair
-    pass fingerprints every stored doc into wfps/ once (a text re-read
-    of docs/ — the documented upgrade cost, far cheaper than the media
-    plane's payload re-decode)."""
-    os.makedirs(store_path, exist_ok=True)
-    with open(os.path.join(store_path, _GATE_MODE_MARKER), "w") as f:
-        f.write("excerpt" if excerpt else "plain")
-
-
-def _check_corpus_gate_mode(store_path: str, excerpt: bool) -> None:
-    """The media gate's store-lifetime contract (`media_ingest.py:
-    _check_gate_mode`), applied to the text plane: a store is EITHER
-    plain OR excerpt-aware for its whole life. Mixed-mode ingest is
-    refused loudly — plain batches into an excerpt store leave wfps/
-    stale AND stop rejecting quotes; excerpt batches into a plain
-    store silently pay a full-store re-fingerprint in repair.
-    Marker-less stores are grandfathered by inference from wfps/
-    existence, then the marker is written once."""
-    mode = "excerpt" if excerpt else "plain"
-    marker = os.path.join(store_path, _GATE_MODE_MARKER)
-    if os.path.isfile(marker):
-        with open(marker) as f:
-            stored_mode = f.read().strip()
-    elif os.path.isdir(os.path.join(store_path, "docs")):
-        stored_mode = (
-            "excerpt"
-            if os.path.isdir(os.path.join(store_path, "wfps"))
-            else "plain"
-        )
-    else:
-        set_corpus_gate_mode(store_path, excerpt)
-        return
-    if stored_mode != mode:
-        raise ValueError(
-            f"store {store_path!r} was ingested in {stored_mode!r} mode "
-            f"but this batch requests {mode!r}: mixed-mode ingest "
-            "silently weakens the gate (stale wfps/, unrejected "
-            "excerpts). Keep excerpt_tau consistent for the store's "
-            "lifetime, or switch deliberately with "
-            f"set_corpus_gate_mode({store_path!r}, excerpt={excerpt})."
-        )
-    if not os.path.isfile(marker):
-        set_corpus_gate_mode(store_path, excerpt)
+def repair_corpus_wfps_index(spark: SparkSession, store_path: str) -> int:
+    """`_repair_index` for the text gate's wfps/ — also the one-time
+    upgrade path after `set_gate_mode(store, "excerpt")`. Returns wfps
+    rows written."""
+    return _repair_index(spark, store_path, "wfps", "doc_id", corpus_winnow_fps)
 
 
 def corpus_winnow_fps(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
@@ -217,15 +228,76 @@ def corpus_winnow_fps(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     row, so the index distinguishes 'indexed, nothing to match' from
     'orphaned' — NULL never equi-joins, so presence rows can never
     evidence a rejection (the media plane's exact discipline)."""
-    from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_fingerprints,
-    )
-
     fps = winnow_fingerprints(docs, id_col="doc_id", k=k, w=w)
     return (
         docs.select("doc_id")
         .join(fps, "doc_id", "left")
         .select(*_TEXT_WFP_COLS)
+    )
+
+
+def media_excerpt_rejects(
+    stored_wfps: DataFrame | None,
+    batch_wfps: DataFrame,
+    tau: float,
+    max_df: int = 50,
+) -> DataFrame:
+    """Batch items to REJECT as stored-content excerpts: the fraction
+    of a batch item's (media_id, plane, fp) fingerprints already
+    present — in the store, or in lower-id items of the same batch
+    (leader-keeps) — reaches ``tau``. The one excerpt decision both
+    gates run: the media gate on its image/video/audio planes, the text
+    gate through `corpus_excerpt_rejects` on plane='text', so the two
+    cannot drift apart. Plane rides the join key; a shared fingerprint
+    counts once however many stored items carry it (distinct before the
+    count), so containment is a pure batch-side fraction.
+
+    Same document-frequency cutoff as the oracled batch twin
+    `winnow_containment_pairs` (operators/dedup.py): a fingerprint
+    carried by > ``max_df`` items across store+batch is boilerplate —
+    runs of silent audio windows, black frames — and cannot EVIDENCE
+    a match (it stays in the ``n_fp`` denominator, exactly as the
+    batch op keeps boilerplate in the min-side count), so
+    common-content items are not falsely rejected and the gate's
+    semantics track the oracle-checked batch path. The df prune also
+    bounds join fan-out per fingerprint at 100 TB store sizes."""
+    bf = batch_wfps.filter(F.col("fp").isNotNull())
+    n = bf.groupBy("media_id").agg(F.count(F.lit(1)).alias("n_fp"))
+    pop = bf.select("plane", "fp")
+    if stored_wfps is not None:
+        pop = pop.unionByName(
+            stored_wfps.filter(F.col("fp").isNotNull()).select("plane", "fp")
+        )
+    rare = (
+        pop.groupBy("plane", "fp")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= max_df)
+        .select("plane", "fp")
+    )
+    bf = bf.join(rare, ["plane", "fp"], "left_semi")
+    b = bf.select(F.col("media_id").alias("j"), "plane", "fp")
+    a = bf.select(F.col("media_id").alias("i"), "plane", "fp")
+    matched = (
+        a.join(b, ["plane", "fp"])
+        .filter(F.col("i") < F.col("j"))
+        .select("j", "fp")
+    )
+    if stored_wfps is not None:
+        s = (
+            stored_wfps.filter(F.col("fp").isNotNull())
+            .join(rare, ["plane", "fp"], "left_semi")
+            .select(F.col("media_id").alias("i"), "plane", "fp")
+        )
+        matched = matched.unionByName(
+            s.join(b, ["plane", "fp"]).select("j", "fp")
+        )
+    shared = matched.distinct().groupBy("j").agg(
+        F.count(F.lit(1)).alias("n_shared")
+    )
+    return (
+        shared.join(n.withColumnRenamed("media_id", "j"), "j")
+        .filter(F.col("n_shared") / F.col("n_fp") >= tau)
+        .select(F.col("j").alias("media_id"))
     )
 
 
@@ -236,15 +308,9 @@ def corpus_excerpt_rejects(
     max_df: int = 50,
 ) -> DataFrame:
     """Batch docs to REJECT as stored-content excerpts (quotes,
-    mirrored passages, chunk re-uploads): the literal media decision
-    function (`media_ingest.py:media_excerpt_rejects` — df-capped
-    evidence, unpruned denominator, distinct shared fps, stored +
-    lower-id leader-keeps, >= tau) run on the text plane, so the two
-    gates cannot drift apart. Directional: a new doc CONTAINING a
-    stored doc is admitted (most of its fingerprints are new)."""
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
-        media_excerpt_rejects,
-    )
+    mirrored passages, chunk re-uploads): `media_excerpt_rejects` run
+    on the text plane. Directional: a new doc CONTAINING a stored doc
+    is admitted (most of its fingerprints are new)."""
 
     def as_media(df: DataFrame) -> DataFrame:
         return df.select(
@@ -262,34 +328,6 @@ def corpus_excerpt_rejects(
     return out.select(F.col("media_id").alias("doc_id"))
 
 
-def repair_corpus_wfps_index(spark: SparkSession, store_path: str) -> int:
-    """Fingerprint any docs/ rows missing from wfps/ — the crash state
-    a failure between ingest_batch's appends leaves, and the one-time
-    upgrade path after `set_corpus_gate_mode(store, excerpt=True)`.
-    Presence rows make orphan detection one id anti-join; only actual
-    orphans re-fingerprint. Returns wfps rows written."""
-    docs_path = os.path.join(store_path, "docs")
-    wfps_path = os.path.join(store_path, "wfps")
-    if not os.path.isdir(docs_path):
-        return 0
-    docs = spark.read.parquet(docs_path)
-    cand = docs.select("doc_id")
-    if os.path.isdir(wfps_path):
-        known = spark.read.parquet(wfps_path).select("doc_id").distinct()
-        orphans = cand.join(known, "doc_id", "left_anti")
-    else:
-        orphans = cand
-    orphans = orphans.localCheckpoint(eager=True)
-    if orphans.isEmpty():
-        return 0
-    repaired = corpus_winnow_fps(
-        docs.join(orphans, "doc_id", "left_semi")
-    ).localCheckpoint(eager=True)
-    cnt = repaired.count()
-    repaired.write.mode("append").parquet(wfps_path)
-    return cnt
-
-
 def _store_part_files(store_path: str) -> int:
     """Count parquet part files across the store's components — the
     quantity whose unbounded growth (one file set per micro-batch
@@ -304,6 +342,21 @@ def _store_part_files(store_path: str) -> int:
         for _, _, files in os.walk(root):
             total += sum(1 for f in files if f.endswith(".parquet"))
     return total
+
+
+def _auto_compact(
+    spark: SparkSession,
+    store_path: str,
+    max_files: int | None,
+    target_files: int,
+    layout: dict[str, tuple[str, ...]],
+) -> None:
+    """The self-enforcing bounded-growth trigger both gates run after
+    their appends: past ``max_files`` part files (None disables),
+    `compact_store` runs INSIDE the batch — safe, because foreachBatch
+    callbacks are serial on the one writer."""
+    if max_files is not None and _store_part_files(store_path) > max_files:
+        compact_store(spark, store_path, target_files, layout)
 
 
 def ingest_batch(
@@ -328,40 +381,34 @@ def ingest_batch(
     mirrored passage, or chunk re-upload of stored content, the class
     whole-document MinHash is structurally blind to (a short excerpt's
     Jaccard vs its long host is small) — maintaining a third store
-    component wfps/, the text twin of the unified media gate's
-    excerpt tier. Directional (a new host containing a stored doc is
-    admitted); same df<=max_df boilerplate cap as the oracled batch
-    containment query; the setting is a store-LIFETIME contract
-    enforced by a ``_GATE_MODE`` marker with loud mixed-mode refusal
-    (`_check_corpus_gate_mode`); switch deliberately with
-    `set_corpus_gate_mode`, after which the repair pass fingerprints
-    stored docs once.
+    component wfps/, the text twin of the media gate's excerpt tier.
+    Directional (a new host containing a stored doc is admitted); same
+    df<=max_df boilerplate cap as the oracled batch containment query;
+    the setting is a store-LIFETIME contract enforced by the
+    ``_GATE_MODE`` marker with loud mixed-mode refusal; switch
+    deliberately with ``set_gate_mode(store, "excerpt")``, after which
+    the repair pass fingerprints stored docs once.
 
     ``auto_compact_files`` (round 11): after the batch's appends, if
     the store's parquet part-file count exceeds this threshold,
-    `compact_store` runs INSIDE the batch (safe — foreachBatch
-    callbacks are serial on the one writer), rewriting each component
-    down to ``auto_compact_target_files``. This makes the documented
-    bounded-growth claim SELF-ENFORCING: the round-10 text rehearsal
-    showed late-batch cost elevation from append-file growth that
-    only a manual compact_store reset; with the trigger, per-batch
+    `compact_store` runs INSIDE the batch, rewriting each component
+    down to ``auto_compact_target_files`` per partition. This makes the
+    documented bounded-growth claim SELF-ENFORCING: the round-10 text
+    rehearsal showed late-batch cost elevation from append-file growth
+    that only a manual compact_store reset; with the trigger, per-batch
     cost stays within the early-batch band with zero operator action
-    (rep=10 rehearsal, tools/scale_rehearsal.py). None disables (the
-    epoch-cadence ``compact_every`` of `start_dedup_ingest` remains
-    available for callers that prefer a schedule)."""
+    (rep=10 rehearsal, tools/scale_rehearsal.py). 0 compacts after
+    every batch that appends; None disables."""
     from pyspark import StorageLevel
 
     spark = batch_df.sparkSession
     docs_path = os.path.join(store_path, "docs")
     bands_path = os.path.join(store_path, "bands")
+    wfps_path = os.path.join(store_path, "wfps")
 
     batch = batch_df.select("doc_id", "text").dropDuplicates(["doc_id"])
-    _check_store_integrity(
-        store_path,
-        ("docs", "bands", "wfps") if excerpt_tau is not None
-        else ("docs", "bands"),
-    )
-    _check_corpus_gate_mode(store_path, excerpt_tau is not None)
+    _check_partition_integrity(store_path)
+    _check_gate_mode(store_path, "plain" if excerpt_tau is None else "excerpt")
     repair_band_index(spark, store_path, num_hashes, bands, n)
     if excerpt_tau is not None:
         repair_corpus_wfps_index(spark, store_path)
@@ -427,7 +474,6 @@ def ingest_batch(
             .distinct()
         )
         if excerpt_tau is not None:
-            wfps_path = os.path.join(store_path, "wfps")
             batch_wfps = corpus_winnow_fps(batch).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
@@ -458,29 +504,17 @@ def ingest_batch(
             ).localCheckpoint(eager=True)
         accepted.write.mode("append").parquet(docs_path)
         (
-            banded_buckets(
-                signatures_from_sets(
-                    _spread(accepted, "doc_id").select(
-                        "doc_id", shingles(F.col("text"), n).alias("sh")
-                    ),
-                    num_hashes,
-                ),
-                num_hashes,
-                bands,
-            )
+            _text_bands(accepted, num_hashes, bands, n)
             .write.mode("append")
             .partitionBy("band")
             .parquet(bands_path)
         )
         if excerpt_tau is not None and not accepted_wfps.isEmpty():
-            accepted_wfps.write.mode("append").parquet(
-                os.path.join(store_path, "wfps")
-            )
-        if (
-            auto_compact_files is not None
-            and _store_part_files(store_path) > auto_compact_files
-        ):
-            compact_store(spark, store_path, auto_compact_target_files)
+            accepted_wfps.write.mode("append").parquet(wfps_path)
+        _auto_compact(
+            spark, store_path, auto_compact_files, auto_compact_target_files,
+            _TEXT_LAYOUT,
+        )
     finally:
         # In finally (not the try body): a failed parquet append must
         # not leak the persisted shingle frame into the long-lived
@@ -496,98 +530,74 @@ def compact_store(
     spark: SparkSession,
     store_path: str,
     target_files: int = 1,
-    band_cols: tuple[str, ...] = _BAND_COLS,
-    partition_cols: tuple[str, ...] = ("band",),
+    layout: dict[str, tuple[str, ...]] = _TEXT_LAYOUT,
 ) -> dict[str, int]:
-    """Rewrite the append-only ``docs/`` and ``bands/`` stores down to a
-    bounded part-file count. Admission decisions are a pure function of
-    store CONTENT, so compaction is semantically invisible — it only
-    removes the O(#micro-batches) file-listing and tiny-file scan cost
-    from every subsequent batch's equi-join.
+    """Rewrite a gate store's append-only components down to a bounded
+    part-file count. Admission decisions are a pure function of store
+    CONTENT, so compaction is semantically invisible — it only removes
+    the O(#micro-batches) file-listing and tiny-file scan cost from
+    every subsequent batch's equi-join.
 
-    * ``docs/``: at most ``target_files`` files.
-    * ``bands/``: at most ``target_files`` files per band partition —
-      rows shuffle on (band, pmod(hash(bucket), target_files)), so each
-      band's rows land in at most ``target_files`` tasks and the
-      partitionBy writer emits at most that many files per band dir.
+    ``layout`` maps each component (docs/, bands/, wfps/) to its hive
+    partition columns — the text gate's by default, the media gate's
+    from streaming/media_ingest.py. Rows shuffle on (partition columns,
+    pmod(hash(row), target_files)), so each partition directory holds
+    at most ``target_files`` files.
 
-    The rewrite goes to ``<store>.compact.tmp`` first and swaps in via
-    rename-aside (``_swap_dir``): live → ``.compact.old``, tmp → live,
-    then remove old — so the live directory is missing only between two
-    atomic renames, never for the duration of an ``rmtree``. A crash
-    before the swap leaves the original store intact; a crash mid-swap
-    leaves the tmp dir without a live one, which ``ingest_batch``
-    refuses loudly rather than re-admitting duplicates. Single-writer
+    Each rewrite goes to ``<component>.compact.tmp`` first and swaps in
+    via storage/layout.py `_rename_aside`, so a live component is
+    missing only between two atomic renames. A crash before the swap
+    leaves the original store intact; a crash mid-swap leaves the tmp
+    dir without a live one, which both the gates and this function
+    refuse loudly (`_check_partition_integrity`) rather than re-admit
+    duplicates or clobber the only surviving copy. Single-writer
     discipline applies: do not run concurrently with an active ingest
     query.
 
-    ``band_cols`` is the band store's logical column set — the text
-    plane's (doc_id, band, bucket) by default; the media plane passes
-    its hash-carrying shape (streaming/media_ingest.py). Both planes
-    share (band, bucket), which is all the rewrite shuffles on.
-    ``partition_cols`` is the hive layout of bands/ — ("band",) for the
-    text/image planes, ("plane", "band") for the unified media gate.
-
-    Returns rows rewritten per store.
+    Returns rows rewritten per component.
     """
-    # Same loud refusal as ingest_batch: compacting a half-compacted
-    # store would silently skip the missing live dir via the isdir()
-    # guards below and could clobber the only surviving copy in
-    # ``.compact.tmp`` on the next write. Recovery must stay a
-    # deliberate single rename.
-    _check_store_integrity(store_path, ("docs", "bands", "wfps"))
+    _check_partition_integrity(store_path, repair=True)
     rewritten: dict[str, int] = {}
-
-    docs_path = os.path.join(store_path, "docs")
-    if os.path.isdir(docs_path):
-        docs = spark.read.parquet(docs_path)
-        n = docs.count()
-        tmp = docs_path + ".compact.tmp"
-        docs.repartition(target_files).write.mode("overwrite").parquet(tmp)
-        _swap_dir(tmp, docs_path)
-        spark.catalog.refreshByPath(docs_path)
-        rewritten["docs"] = n
-
-    bands_path = os.path.join(store_path, "bands")
-    if os.path.isdir(bands_path):
-        b = spark.read.parquet(bands_path).select(*band_cols)
-        n = b.count()
-        tmp = bands_path + ".compact.tmp"
+    for comp, part_cols in layout.items():
+        live = os.path.join(store_path, comp)
+        if not os.path.isdir(live):
+            continue
+        df = spark.read.parquet(live)
+        rewritten[comp] = df.count()
+        spread = F.pmod(
+            F.hash(*[c for c in df.columns if c not in part_cols]),
+            F.lit(target_files),
+        )
+        tmp = live + ".compact.tmp"
         (
-            b.repartition(
-                *[F.col(c) for c in partition_cols],
-                F.pmod(F.hash("bucket"), F.lit(target_files)),
-            )
+            df.repartition(*part_cols, spread)
             .write.mode("overwrite")
-            .partitionBy(*partition_cols)
+            .partitionBy(*part_cols)
             .parquet(tmp)
         )
-        _swap_dir(tmp, bands_path)
-        spark.catalog.refreshByPath(bands_path)
-        rewritten["bands"] = n
-
-    # An excerpt-aware TEXT store's wfps/ component (flat (doc_id, fp)
-    # — no hive partitioning; the unified media gate compacts its own
-    # plane-partitioned wfps/ in compact_any_media_store instead, and
-    # its store never grows this directory with these columns).
-    wfps_path = os.path.join(store_path, "wfps")
-    if os.path.isdir(wfps_path) and band_cols == _BAND_COLS:
-        wf = spark.read.parquet(wfps_path).select(*_TEXT_WFP_COLS)
-        n = wf.count()
-        tmp = wfps_path + ".compact.tmp"
-        (
-            wf.repartition(
-                F.pmod(
-                    F.hash(F.coalesce("fp", "doc_id")), F.lit(target_files)
-                )
-            )
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        _swap_dir(tmp, wfps_path)
-        spark.catalog.refreshByPath(wfps_path)
-        rewritten["wfps"] = n
+        _rename_aside(tmp, live)
+        spark.catalog.refreshByPath(live)
     return rewritten
+
+
+def _start_gate(
+    ingest: Callable[..., None],
+    stream: DataFrame,
+    store_path: str,
+    checkpoint_path: str,
+    available_now: bool,
+    dedup_kwargs: dict,
+):
+    """Wire a streaming source into a gate via foreachBatch(ingest).
+    Compaction rides the gate's own ``auto_compact_files`` trigger,
+    which is safe because foreachBatch callbacks execute serially on
+    the one writer. Returns the StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(
+        lambda df, _epoch: ingest(df, store_path, **dedup_kwargs)
+    ).option("checkpointLocation", checkpoint_path)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_dedup_ingest(
@@ -595,30 +605,12 @@ def start_dedup_ingest(
     store_path: str,
     checkpoint_path: str,
     available_now: bool = True,
-    compact_every: int | None = None,
-    compact_target_files: int = 8,
     **dedup_kwargs,
 ):
     """Wire a streaming document source into the near-dup-gated store
-    via foreachBatch(ingest_batch). Returns the StreamingQuery.
-
-    ``compact_every=N`` runs `compact_store` after every Nth epoch —
-    safe because foreachBatch callbacks execute serially on the one
-    writer, so maintenance can never race an ingest append. The round-6
-    rehearsal measured the policy's economics: 16 new band part files
-    per micro-batch grow per-batch cost ~50% over 20 batches, and one
-    compaction (~half a batch of wall time) resets the curve
-    (PLANS.md, SCALE round 6). Epoch numbers restart from the stream
-    checkpoint, so the cadence survives query restarts."""
-
-    def process(df: DataFrame, epoch: int) -> None:
-        ingest_batch(df, store_path, **dedup_kwargs)
-        if compact_every and (epoch + 1) % compact_every == 0:
-            compact_store(df.sparkSession, store_path, compact_target_files)
-
-    writer = stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_path
+    via foreachBatch(ingest_batch); ``dedup_kwargs`` go to every
+    `ingest_batch` call. Returns the StreamingQuery."""
+    return _start_gate(
+        ingest_batch, stream_docs, store_path, checkpoint_path,
+        available_now, dedup_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

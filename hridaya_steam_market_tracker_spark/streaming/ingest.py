@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hridaya_steam_market_tracker_spark.storage.layout import write_partitioned
+
 KEY_COLS = ("market_hash_name", "time")
 
 
@@ -45,29 +47,7 @@ def idempotent_append(batch_df: DataFrame, sink_path: str) -> None:
     fresh = batch_df.dropDuplicates(list(KEY_COLS))
     if stored is not None:
         fresh = fresh.join(stored, list(KEY_COLS), "left_anti")
-    (
-        fresh.withColumn("date", F.to_date("time"))
-        .repartition("date")
-        .sortWithinPartitions("market_hash_name", "time")
-        .write.mode("append")
-        .partitionBy("date")
-        .parquet(sink_path)
-    )
-
-
-def merge_capability() -> str:
-    """Which MERGE implementation this environment can run.
-
-    'delta'    — delta-spark importable: real ACID MERGE INTO.
-    'snapshot' — fallback: versioned-snapshot rewrite with an atomic
-                 pointer swap (below). Always available.
-    """
-    try:
-        import delta  # noqa: F401
-
-        return "delta"
-    except ImportError:
-        return "snapshot"
+    write_partitioned(fresh, sink_path)
 
 
 _LATEST = "_LATEST"
@@ -102,10 +82,10 @@ def merge_upsert(
     (src/SQLinserts.py:515-584): 'ignore' = DO NOTHING on key match,
     'replace' = DO UPDATE (incoming row wins).
 
-    With delta-spark installed (merge_capability() == 'delta') this
-    should be a log-structured `DeltaTable.merge` — O(changed files),
-    concurrent-writer safe via optimistic concurrency. This container
-    has no Delta, so the fallback is a **versioned snapshot** table:
+    With delta-spark installed this should be a log-structured
+    `DeltaTable.merge` — O(changed files), concurrent-writer safe via
+    optimistic concurrency. Without Delta, the fallback is a
+    **versioned snapshot** table:
 
         sink/v_0000N/part-*.parquet   immutable snapshot directories
         sink/_LATEST                  pointer file naming the current one

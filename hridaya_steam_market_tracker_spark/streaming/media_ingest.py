@@ -1,27 +1,33 @@
-"""Streaming near-dup-gated MEDIA ingest — the image twin of
-`streaming/corpus_ingest.py`, with the orientation-normalized dHash as
-the signature: a camera-rotated or mirrored re-upload of a stored
-image is rejected at the gate, not discovered later by a batch sweep.
+"""Streaming near-dup-gated MEDIA ingest: one store deduping images,
+videos AND audio, each through its own signature, sharing the banded
+admission machinery — so a camera-rotated or mirrored image
+re-upload, a re-encoded video or a volume-shifted audio clip of a
+stored item is rejected at the gate, not discovered later by a batch
+sweep. The plane (image/video/audio) rides the band rows and the join
+key, so an image and an audio clip that happen to land on the same 64
+bits can never reject each other — cross-modality isolation is
+structural, not probabilistic.
 
-Same store discipline as the text plane (and deliberately the same
-code where the discipline lives): single-writer parquet, ``isdir``
-existence checks so a real read failure fails the batch loudly instead
-of aliasing to "empty store", `_check_store_integrity`'s loud refusal
-of a half-compacted store, rename-aside compaction via the shared
-`compact_store` (this plane passes its own band columns), and replay
-as a no-op (already-stored media_ids are anti-joined away first).
-Reference analog: the replay-safe delta-insert discipline of
-/root/reference/src/SQLinserts.py:515-584, re-expressed for media.
+The store protocol is the text gate's, written once in
+`streaming/corpus_ingest.py` and imported here: ``isdir`` existence
+checks so a real read failure fails the batch loudly instead of
+aliasing to "empty store", loud refusal of a half-compacted store,
+the ``_GATE_MODE`` lifetime marker, orphan-index repair, rename-aside
+compaction via `compact_store` (this gate passes its own partition
+layout), the ``foreachBatch`` starter, and replay as a no-op
+(already-stored media_ids are anti-joined away first). Reference
+analog: the replay-safe delta-insert discipline of
+src/SQLinserts.py:515-584, re-expressed for media.
 
-Two places the image plane is deliberately DIFFERENT:
+Two places the media gate is deliberately DIFFERENT from the text gate:
 
 * **The signature is sufficient for exact verify.** Text near-dup must
-  re-read colliding store documents to compute exact Jaccard; a dHash
-  match is decided by two bit_count(XOR)s over 64 bits, so band rows
-  carry (hash_hi, hash_lo) and the verify path NEVER re-reads a stored
-  payload — at 100 TB of blobs, the store's bytes are written once and
-  only ever re-read by a human or a re-featurization job, not by the
-  admission gate.
+  re-read colliding store documents to compute exact Jaccard; a
+  64-bit signature match is decided by two bit_count(XOR)s, so band
+  rows carry (hash_hi, hash_lo) and the verify path NEVER re-reads a
+  stored payload — at 100 TB of blobs, the store's bytes are written
+  once and only ever re-read by a human or a re-featurization job, not
+  by the admission gate.
 * **Undecodable blobs are ADMITTED to docs/ and excluded from
   bands/.** Dedup cannot gate on evidence it cannot read; silently
   dropping corrupt rows here would make ingest lossy in a way replay
@@ -33,19 +39,24 @@ State under ``store_path``:
 
 * ``docs/``  — accepted media rows (media_id, media_type, format,
   payload, decode_ok). ``decode_ok`` records whether the row is
-  band-indexed: true rows have band rows, false rows are the admitted
-  undecodable blobs that legitimately have none. That bit is what
-  makes the one crash state this plane could previously not see —
-  a crash between the docs/ append and the bands/ append — DETECTABLE:
-  a decode_ok=true docs row absent from bands/ is always an orphan,
-  and every ingest batch starts by repairing those (re-hash just the
-  orphans, append their band rows) before admitting anything, so
-  replay heals the index instead of anti-joining the evidence away.
-* ``bands/`` — (media_id, bucket, hash_hi, hash_lo), HIVE-PARTITIONED
-  BY ``band`` (4 static values — the 16-bit quarters of the 64-bit
-  hash). Each micro-batch equi-joins its own 4 rows/image against this
-  store on (band, bucket); by pigeonhole the blocking is lossless for
-  Hamming <= 3.
+  band-indexed: true rows have band rows, false/null rows are the
+  admitted evidence-less items that legitimately have none. That bit
+  makes a crash between the docs/ append and the bands/ append
+  DETECTABLE: a decode_ok=true docs row absent from bands/ is always
+  an orphan, and every ingest batch starts by repairing those (re-sign
+  just the orphans, append their band rows) before admitting
+  anything, so replay heals the index instead of anti-joining the
+  evidence away.
+* ``bands/`` — (media_id, bucket, hash_hi, hash_lo),
+  HIVE-PARTITIONED BY (``plane``, ``band``) (4 bands — the 16-bit
+  quarters of the 64-bit hash), so each plane's postings stay
+  physically clustered and a batch of one modality scans only its own
+  plane's directories. Each micro-batch equi-joins its own 4
+  rows/item against this store on (plane, band, bucket); by
+  pigeonhole the blocking is lossless for Hamming <= 3.
+* ``wfps/``  — (excerpt-aware stores only) content fingerprints
+  (media_id, fp), hive-partitioned by ``plane``; see
+  `media_winnow_fps`.
 """
 
 from __future__ import annotations
@@ -55,17 +66,24 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hridaya_steam_market_tracker_spark.operators.multimodal import (
-    dhash_bands,
-    image_dhash_oriented,
+from hridaya_steam_market_tracker_spark.operators.multimodal import dhash_bands
+from hridaya_steam_market_tracker_spark.storage.layout import (
+    _check_partition_integrity,
 )
 from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
-    _check_store_integrity,
+    _auto_compact,
+    _check_gate_mode,
+    _repair_index,
+    _start_gate,
     compact_store,
+    media_excerpt_rejects,
 )
 
-_MEDIA_BAND_COLS = ("media_id", "band", "bucket", "hash_hi", "hash_lo")
 _DOC_COLS = ("media_id", "media_type", "format", "payload")
+_ANY_BAND_COLS = ("media_id", "plane", "band", "bucket", "hash_hi", "hash_lo")
+_ANY_KEYS = ("plane", "band", "bucket")
+_WFP_COLS = ("media_id", "plane", "fp")
+_MEDIA_LAYOUT = {"docs": (), "bands": ("plane", "band"), "wfps": ("plane",)}
 
 
 def _hamming(hi_a, lo_a, hi_b, lo_b):
@@ -81,15 +99,16 @@ def media_admission_rejects(
     keys: tuple[str, ...] = ("band", "bucket"),
 ) -> DataFrame:
     """The admission DECISION function, factored out so the streaming
-    gate and its registered batch twin (`media_ingest_admission_twin`
-    in queries/media.py) run literally the same plan: given the store's
+    gate and its registered batch twins (`media_ingest_admission_twin`
+    and `any_media_ingest_admission_twin` in queries/media.py) run
+    literally the same plan: given the store's
     band index (None for an empty store) and the batch's band rows
     (both shaped like `dhash_bands` output), return the one-column
     (media_id) relation of batch rows to REJECT — a verified
     Hamming <= max_hamming match among stored rows, or among lower-id
     rows of the same batch (leader-keeps). Equi-join on ``keys`` —
-    (band, bucket) for the single-plane image gate, (plane, band,
-    bucket) for the unified gate, where the plane key makes
+    (band, bucket) for the image-only batch twin, (plane, band,
+    bucket) for the gate, where the plane key makes
     cross-modality collisions structurally impossible — with the
     carried hashes verified inline: 4 two-int rows per item cross the
     shuffle, never payloads, never the all-pairs square."""
@@ -121,224 +140,18 @@ def media_admission_rejects(
     return rejected.withColumnRenamed("j", "media_id")
 
 
-def repair_media_band_index(spark: SparkSession, store_path: str) -> int:
-    """Re-index any decodable docs/ rows missing from bands/ — the one
-    crash state the admission path used to be blind to (a crash between
-    the two appends of `ingest_media_batch` left admitted images
-    permanently unindexed, so their rotated re-uploads were silently
-    admitted forever; replay could not heal it because the orphans were
-    anti-joined away as already-stored). Runs at the head of every
-    ingest batch; the normal-path cost is one id/flag-column anti-join
-    between the two stores (no payload touched). Only when orphans
-    exist are their payload rows re-read and re-hashed — the
-    "stored payloads are never re-read on admission" property holds
-    for every non-crash batch. Returns the number of rows repaired.
 
-    Stores written before decode_ok landed lack the flag; docs/ is
-    read with ``mergeSchema`` so a mixed store (legacy footers plus
-    new-format appends) deterministically exposes the column with NULL
-    for legacy rows — never an arbitrary-footer schema where legacy
-    rows silently vanish from repair. A NULL flag means "unknown": the
-    row is a repair candidate and the re-hash decides (undecodable
-    legacy rows then re-decode on each batch until the store is
-    rewritten — compact after upgrading to re-establish the cheap
-    path). Only IMAGE rows are candidates: non-image rows admitted via
-    ``non_image='admit'`` carry a NULL flag by design and never belong
-    in bands/, so they must not become perpetual re-decode orphans."""
-    docs_path = os.path.join(store_path, "docs")
-    bands_path = os.path.join(store_path, "bands")
-    if not os.path.isdir(docs_path):
-        return 0
-    docs = spark.read.option("mergeSchema", "true").parquet(docs_path)
-    imgs = docs.filter(F.col("media_type") == "image")
-    cand = (
-        imgs.filter(F.col("decode_ok") | F.col("decode_ok").isNull())
-        if "decode_ok" in docs.columns
-        else imgs
-    ).select("media_id")
-    if os.path.isdir(bands_path):
-        band_ids = spark.read.parquet(bands_path).select("media_id").distinct()
-        orphans = cand.join(band_ids, "media_id", "left_anti")
-    else:
-        orphans = cand
-    # Cut lineage BEFORE the bands append below refreshes bands_path —
-    # the orphan set reads it (the corpus_ingest localCheckpoint lesson).
-    orphans = orphans.localCheckpoint(eager=True)
-    if orphans.isEmpty():
-        return 0
-    orphan_docs = docs.join(orphans, "media_id", "left_semi")
-    repaired = dhash_bands(image_dhash_oriented(orphan_docs)).localCheckpoint(
-        eager=True
-    )
-    n = repaired.count()
-    repaired.write.mode("append").partitionBy("band").parquet(bands_path)
-    return n
-
-
-def ingest_media_batch(
-    batch_df: DataFrame,
-    store_path: str,
-    max_hamming: int = 3,
-    non_image: str = "error",
-) -> None:
-    """Process ONE media micro-batch: orientation-normalized dHash,
-    band-join against the store index and the batch itself, admit
-    leaders and genuinely-new images, append accepted blobs + their
-    band rows. Designed for foreachBatch; replaying a batch is a
-    no-op (and heals a crash-orphaned band index first — see
-    `repair_media_band_index`). Rejection: an image with a verified
-    Hamming <= max_hamming match among stored images, or among
-    lower-id images of the same batch (leader-keeps).
-
-    The dHash gate is IMAGE-only. ``non_image`` makes that explicit
-    instead of silent: ``"error"`` (default) refuses a batch carrying
-    audio/video rows; ``"admit"`` stores them in docs/ WITHOUT any
-    dedup (no band rows — a re-upload of the same audio twice is
-    admitted twice) for callers that knowingly use this store as a
-    mixed blob sink."""
-    if max_hamming > 3:
-        raise ValueError(
-            f"max_hamming={max_hamming}: 16-bit banding is lossless only "
-            "for max_hamming <= 3 (pigeonhole over 4 bands)"
-        )
-    if non_image not in ("error", "admit"):
-        raise ValueError(f"non_image={non_image!r}: expected 'error' or 'admit'")
-    from pyspark import StorageLevel
-
-    spark = batch_df.sparkSession
-    docs_path = os.path.join(store_path, "docs")
-    bands_path = os.path.join(store_path, "bands")
-
-    batch = batch_df.select(*_DOC_COLS).dropDuplicates(["media_id"])
-    if non_image == "error" and not batch.filter(
-        F.col("media_type") != "image"
-    ).isEmpty():
-        raise ValueError(
-            "ingest_media_batch: batch contains non-image rows, which the "
-            "dHash gate cannot dedup (they would be admitted unconditionally). "
-            "Filter to media_type == 'image', or pass non_image='admit' to "
-            "knowingly store them without dedup."
-        )
-    _check_store_integrity(store_path)
-    repair_media_band_index(spark, store_path)
-    stored = spark.read.parquet(docs_path) if os.path.isdir(docs_path) else None
-    if stored is not None:
-        batch = batch.join(stored.select("media_id"), "media_id", "left_anti")
-    batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
-    hashes = None
-    try:
-        if batch.isEmpty():
-            return
-
-        # ONE decode pass per batch: the mapInPandas hash is the
-        # expensive step, so its output is pinned and every downstream
-        # consumer (banding, verify, accepted-index write) reuses it.
-        hashes = image_dhash_oriented(batch).persist(StorageLevel.MEMORY_AND_DISK)
-        b_bands = dhash_bands(hashes)
-
-        # The shared decision function: within-batch leader-keeps plus
-        # store-vs-batch candidates, both verified from the CARRIED
-        # hashes — no stored payload is ever re-read on this path.
-        stored_bands = (
-            spark.read.parquet(bands_path).select(*_MEDIA_BAND_COLS)
-            if os.path.isdir(bands_path)
-            else None
-        )
-        rejected = media_admission_rejects(stored_bands, b_bands, max_hamming)
-
-        # Both outputs are localCheckpoint-ed BEFORE the first append:
-        # the docs append refreshes the path cache, which would force
-        # any still-lazy plan reading docs/ (the anti-join in `batch`'s
-        # lineage) to re-evaluate against the just-extended store and
-        # write an empty band index — the corpus_ingest lesson, kept.
-        # decode_ok rides the docs row (null for non_image='admit'
-        # rows, which image_dhash_oriented never saw) so the repair
-        # pass can tell "legitimately unindexed" from "orphaned".
-        accepted = (
-            batch.join(rejected, "media_id", "left_anti")
-            .join(hashes.select("media_id", "decode_ok"), "media_id", "left")
-            .localCheckpoint(eager=True)
-        )
-        accepted_bands = (
-            dhash_bands(hashes)
-            .join(accepted.select("media_id"), "media_id", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        accepted.write.mode("append").parquet(docs_path)
-        # Never append an EMPTY frame: it creates a directory holding
-        # only _SUCCESS, which a later batch's read fails on with
-        # UNABLE_TO_INFER_SCHEMA (e.g. a first batch of solely
-        # undecodable blobs has docs rows but zero band rows).
-        if not accepted_bands.isEmpty():
-            (
-                accepted_bands.write.mode("append")
-                .partitionBy("band")
-                .parquet(bands_path)
-            )
-    finally:
-        if hashes is not None:
-            hashes.unpersist()
-        batch.unpersist()
-
-
-def compact_media_store(
-    spark: SparkSession, store_path: str, target_files: int = 1
-) -> dict[str, int]:
-    """`compact_store` with this plane's band columns — identical
-    rename-aside swap, half-compacted refusal, and admission
-    invariance (decisions are a pure function of store content)."""
-    return compact_store(
-        spark, store_path, target_files, band_cols=_MEDIA_BAND_COLS
-    )
-
-
-def start_dedup_media_ingest(
-    stream_media: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-    compact_target_files: int = 8,
-    **dedup_kwargs,
-):
-    """Wire a streaming media source into the near-dup-gated store via
-    foreachBatch(ingest_media_batch). Returns the StreamingQuery.
-    ``compact_every=N`` runs `compact_media_store` after every Nth
-    epoch — safe because foreachBatch callbacks execute serially on
-    the one writer (same cadence contract as start_dedup_ingest)."""
-
-    def process(df: DataFrame, epoch: int) -> None:
-        ingest_media_batch(df, store_path, **dedup_kwargs)
-        if compact_every and (epoch + 1) % compact_every == 0:
-            compact_media_store(df.sparkSession, store_path, compact_target_files)
-
-    writer = stream_media.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# Unified multi-plane media gate (round 9): one store deduping images,
-# videos AND audio, each through its own signature, sharing the banded
-# admission machinery. The plane rides the band rows and the join key,
-# so an image and an audio clip that happen to land on the same 64 bits
-# can never reject each other — cross-modality isolation is structural,
-# not probabilistic.
-# ---------------------------------------------------------------------------
-
-_ANY_BAND_COLS = ("media_id", "plane", "band", "bucket", "hash_hi", "hash_lo")
-_ANY_KEYS = ("plane", "band", "bucket")
-
-_GATE_MODE_MARKER = "_GATE_MODE"
-
-
-def _mode_string(
+def media_gate_mode(
     excerpt: bool, phases: int = 1, image_plane: str = "grid",
     audio_plane: str = "window",
 ) -> str:
+    """The ``_GATE_MODE`` string of a media store (`set_gate_mode`):
+    ``"plain"``, or the excerpt mode with every setting that keys the
+    wfps/ index — ``excerpt_phases``, ``excerpt_image_plane`` and
+    ``excerpt_audio_plane`` are part of the store-lifetime contract, so
+    a store indexed at one setting refuses batches at another.
+    Grandfathered marker-less stores are phases=1 grid/window, the only
+    setting that existed before the marker carried it."""
     if image_plane not in ("grid", "cdt", "hybrid"):
         raise ValueError(
             f"image_plane={image_plane!r}: expected 'grid' (phase-"
@@ -360,98 +173,6 @@ def _mode_string(
         mode += f":audio={audio_plane}"
     return mode
 
-
-def set_any_media_gate_mode(
-    store_path: str, excerpt: bool, phases: int = 1,
-    image_plane: str = "grid", audio_plane: str = "window",
-) -> None:
-    """Deliberately (re)declare a unified store's admission mode —
-    the explicit act `_check_gate_mode`'s refusal demands before a
-    store may switch between plain and excerpt-aware ingest. After
-    switching a store TO excerpt mode, the next excerpt-aware batch's
-    repair pass re-fingerprints every stored item into wfps/ (one
-    payload re-read per stored row — the documented upgrade cost).
-
-    ``phases`` (round 11) is part of the lifetime contract too — a
-    store's wfps/ index is only as phase-aware as the batches that
-    built it, so switching phases on a store that already has a
-    wfps/ index DROPS the index (that is what re-keying means): the
-    next excerpt-aware batch's repair pass rebuilds it at the new
-    phase count. Without the drop, stored items would keep their
-    old-phase fingerprints and an offset crop/excerpt of an OLD item
-    would still sail through — the exact silent weakening this
-    marker exists to refuse."""
-    import shutil
-
-    os.makedirs(store_path, exist_ok=True)
-    marker = os.path.join(store_path, _GATE_MODE_MARKER)
-    new_mode = _mode_string(excerpt, phases, image_plane, audio_plane)
-    old_mode = None
-    if os.path.isfile(marker):
-        with open(marker) as f:
-            old_mode = f.read().strip()
-    wfps_path = os.path.join(store_path, "wfps")
-    if (
-        old_mode is not None
-        and old_mode != new_mode
-        and excerpt
-        and os.path.isdir(wfps_path)
-    ):
-        shutil.rmtree(wfps_path)
-    with open(marker, "w") as f:
-        f.write(new_mode)
-
-
-def _check_gate_mode(
-    store_path: str, excerpt: bool, phases: int = 1,
-    image_plane: str = "grid", audio_plane: str = "window",
-) -> None:
-    """Enforce the excerpt-tier lifetime contract the round-9
-    docstring could only request: a store is EITHER plain (wfps/
-    never maintained) OR excerpt-aware, for its whole life, unless
-    the operator switches it deliberately. Mixed-mode ingest is the
-    silent half-state this module refuses everywhere else — plain
-    batches into an excerpt store leave the index stale AND stop
-    rejecting excerpts; excerpt batches into a plain store quietly
-    pay a full-store re-fingerprint in repair. Marker-less stores
-    (pre-round-10) are grandfathered by INFERENCE from the one
-    durable fact on disk — wfps/ exists iff the store ever ingested
-    excerpt-aware — then the marker is written so the inference
-    happens once (phases is unknowable from disk; grandfathered
-    stores are phases=1, the only value that existed before the
-    marker carried it)."""
-    mode = _mode_string(excerpt, phases, image_plane, audio_plane)
-    marker = os.path.join(store_path, _GATE_MODE_MARKER)
-    if os.path.isfile(marker):
-        with open(marker) as f:
-            stored_mode = f.read().strip()
-    elif os.path.isdir(os.path.join(store_path, "docs")):
-        stored_mode = (
-            "excerpt"
-            if os.path.isdir(os.path.join(store_path, "wfps"))
-            else "plain"
-        )
-    else:
-        set_any_media_gate_mode(
-            store_path, excerpt, phases, image_plane, audio_plane
-        )
-        return
-    if stored_mode != mode:
-        raise ValueError(
-            f"store {store_path!r} was ingested in {stored_mode!r} mode "
-            f"but this batch requests {mode!r}: mixed-mode ingest "
-            "silently weakens the gate (stale wfps/, unrejected "
-            "excerpts). Keep excerpt_tau consistent for the store's "
-            "lifetime (excerpt_phases included), or switch "
-            "deliberately with "
-            f"set_any_media_gate_mode({store_path!r}, "
-            f"excerpt={excerpt}, phases={phases}, "
-            f"image_plane={image_plane!r}, audio_plane={audio_plane!r})."
-        )
-    if not os.path.isfile(marker):
-        set_any_media_gate_mode(
-            store_path, excerpt, phases, image_plane, audio_plane
-        )
 
 
 def media_signatures(
@@ -515,35 +236,43 @@ def _any_bands(signatures: DataFrame) -> DataFrame:
     return dhash_bands(signatures, carry=("plane",)).select(*_ANY_BAND_COLS)
 
 
+
 def repair_any_media_band_index(spark: SparkSession, store_path: str) -> int:
-    """`repair_media_band_index` for the unified store: decodable docs
-    rows missing from bands/ are re-signatured through ALL planes and
-    re-indexed. Same cheap-path/crash-heal contract (and the same
-    ``mergeSchema`` read: schema inference from an arbitrary footer of
-    a mixed-schema docs/ must never silently drop the flag column)."""
-    docs_path = os.path.join(store_path, "docs")
-    bands_path = os.path.join(store_path, "bands")
-    if not os.path.isdir(docs_path):
-        return 0
-    docs = spark.read.option("mergeSchema", "true").parquet(docs_path)
-    cand = docs.filter(F.col("decode_ok")).select("media_id")
-    if os.path.isdir(bands_path):
-        band_ids = spark.read.parquet(bands_path).select("media_id").distinct()
-        orphans = cand.join(band_ids, "media_id", "left_anti")
-    else:
-        orphans = cand
-    orphans = orphans.localCheckpoint(eager=True)
-    if orphans.isEmpty():
-        return 0
-    orphan_docs = docs.join(orphans, "media_id", "left_semi")
-    repaired = _any_bands(media_signatures(orphan_docs)).localCheckpoint(
-        eager=True
+    """`_repair_index` for bands/: decodable (decode_ok=true) docs rows
+    missing from bands/ are re-signatured through ALL planes and
+    re-indexed. The normal-path cost is one id/flag-column anti-join
+    between the two stores (no payload touched); only when orphans
+    exist are their payload rows re-read and re-hashed — the "stored
+    payloads are never re-read on admission" property holds for every
+    non-crash batch. Returns band rows written."""
+    return _repair_index(
+        spark, store_path, "bands", "media_id",
+        lambda d: _any_bands(media_signatures(d)), ("plane", "band"),
+        candidates=F.col("decode_ok"),
     )
-    n = repaired.count()
-    repaired.write.mode("append").partitionBy("plane", "band").parquet(
-        bands_path
+
+
+def repair_media_wfps_index(
+    spark: SparkSession, store_path: str, phases: int = 1,
+    image_plane: str = "grid", audio_plane: str = "window",
+) -> int:
+    """`_repair_index` for wfps/: image/video/audio docs rows missing
+    from wfps/, with the fp=NULL presence rows making 'nothing to
+    fingerprint' a recorded state instead of a perpetual orphan. Also
+    how a pre-crop-plane store upgrades (its image rows have no wfps
+    rows, so the first excerpt-aware batch re-fingerprints them here,
+    once) and how a mode switch rebuilds: `set_gate_mode` drops wfps/
+    when the excerpt mode changes, so every stored item re-enters here
+    as an orphan and is re-fingerprinted at the gate's settings.
+    Returns wfps rows written."""
+    return _repair_index(
+        spark, store_path, "wfps", "media_id",
+        lambda d: media_winnow_fps(
+            d, phases=phases, image_plane=image_plane, audio_plane=audio_plane
+        ),
+        ("plane",),
+        candidates=F.col("media_type").isin("image", "video", "audio"),
     )
-    return n
 
 
 def ingest_any_media_batch(
@@ -558,7 +287,7 @@ def ingest_any_media_batch(
     auto_compact_files: int | None = 1024,
     auto_compact_target_files: int = 8,
 ) -> None:
-    """Process ONE mixed media micro-batch through the unified gate:
+    """Process ONE mixed media micro-batch through the gate:
     per-plane signatures (image dHash / video temporal dHash / audio
     Goertzel fingerprint), ONE plane-keyed band join against the store
     index and the batch itself, admit leaders and genuinely-new items,
@@ -567,13 +296,7 @@ def ingest_any_media_batch(
     first. Rows with no verifiable signature — undecodable payloads,
     too-short clips, formats outside the codec set — are admitted
     docs-only with decode_ok false/null (dedup cannot gate on evidence
-    it cannot read; the quality tier owns rejecting them), exactly the
-    image gate's undecodable policy generalized.
-
-    Store layout: docs/ as the image gate plus the same decode_ok
-    discipline; bands/ hive-partitioned by (plane, band) so each
-    plane's postings stay physically clustered and a batch of one
-    modality scans only its own plane's directories.
+    it cannot read; the quality tier owns rejecting them).
 
     ``excerpt_tau`` (optional) additionally rejects a batch item whose
     content fingerprints are >= tau already stored — a window-aligned
@@ -584,10 +307,10 @@ def ingest_any_media_batch(
     unfingerprintable items). Directional: a new host
     containing a stored clip is admitted. The setting is a
     store-LIFETIME contract, ENFORCED: a ``_GATE_MODE`` marker records
-    the store's mode at first ingest and a mixed-mode batch refuses
-    loudly (`_check_gate_mode`) instead of silently weakening the gate;
-    switch deliberately with `set_any_media_gate_mode`, after which
-    the repair pass re-fingerprints stored items once.
+    the store's mode (`media_gate_mode`) at first ingest and a
+    mixed-mode batch refuses loudly instead of silently weakening the
+    gate; switch deliberately with `set_gate_mode`, after which the
+    repair pass re-fingerprints stored items once.
 
     ``excerpt_phases`` (round 11, part of the same lifetime contract):
     phase-shifted content grids for the image/audio planes so
@@ -623,7 +346,8 @@ def ingest_any_media_batch(
     the store's parquet part-file count exceeds this threshold,
     `compact_any_media_store` runs inside the batch — the same
     self-enforcing bounded-growth trigger as the text gate
-    (streaming/corpus_ingest.ingest_batch); None disables."""
+    (streaming/corpus_ingest.ingest_batch); 0 compacts after every
+    batch that appends, None disables."""
     if max_hamming > 3:
         raise ValueError(
             f"max_hamming={max_hamming}: 16-bit banding is lossless only "
@@ -634,17 +358,14 @@ def ingest_any_media_batch(
     spark = batch_df.sparkSession
     docs_path = os.path.join(store_path, "docs")
     bands_path = os.path.join(store_path, "bands")
+    wfps_path = os.path.join(store_path, "wfps")
 
     batch = batch_df.select(*_DOC_COLS).dropDuplicates(["media_id"])
-    _check_store_integrity(
-        store_path,
-        ("docs", "bands", "wfps") if excerpt_tau is not None
-        else ("docs", "bands"),
-    )
-    _check_gate_mode(
-        store_path, excerpt_tau is not None, excerpt_phases,
+    _check_partition_integrity(store_path)
+    _check_gate_mode(store_path, media_gate_mode(
+        excerpt_tau is not None, excerpt_phases,
         excerpt_image_plane, excerpt_audio_plane,
-    )
+    ))
     repair_any_media_band_index(spark, store_path)
     if excerpt_tau is not None:
         repair_media_wfps_index(
@@ -703,7 +424,6 @@ def ingest_any_media_batch(
             stored_bands, b_bands, max_hamming, keys=_ANY_KEYS
         )
         if excerpt_tau is not None:
-            wfps_path = os.path.join(store_path, "wfps")
             batch_wfps = media_winnow_fps(
                 batch, phases=excerpt_phases,
                 image_plane=excerpt_image_plane,
@@ -735,9 +455,11 @@ def ingest_any_media_batch(
                 accepted.select("media_id"), "media_id", "left_semi"
             ).localCheckpoint(eager=True)
         accepted.write.mode("append").parquet(docs_path)
-        # Empty-append guard (see ingest_media_batch): a batch of only
-        # unbandable items (e.g. one too-short clip) must not create an
-        # unreadable schema-less bands/ or wfps/ directory.
+        # Never append an EMPTY frame: it creates a directory holding
+        # only _SUCCESS, which a later batch's read fails on with
+        # UNABLE_TO_INFER_SCHEMA (e.g. a first batch of solely
+        # unbandable items — one too-short clip — has docs rows but
+        # zero band rows).
         if not accepted_bands.isEmpty():
             (
                 accepted_bands.write.mode("append")
@@ -750,17 +472,10 @@ def ingest_any_media_batch(
                 .partitionBy("plane")
                 .parquet(wfps_path)
             )
-        from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
-            _store_part_files,
+        _auto_compact(
+            spark, store_path, auto_compact_files, auto_compact_target_files,
+            _MEDIA_LAYOUT,
         )
-
-        if (
-            auto_compact_files is not None
-            and _store_part_files(store_path) > auto_compact_files
-        ):
-            compact_any_media_store(
-                spark, store_path, auto_compact_target_files
-            )
     finally:
         if sigs is not None:
             sigs.unpersist()
@@ -774,38 +489,9 @@ def ingest_any_media_batch(
 def compact_any_media_store(
     spark: SparkSession, store_path: str, target_files: int = 1
 ) -> dict[str, int]:
-    """`compact_store` with the unified plane-tagged band shape and
-    (plane, band) hive layout; an excerpt-aware store's wfps/ component
-    is rewritten with the same rename-aside swap."""
-    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
-        _swap_dir,
-    )
-
-    _check_store_integrity(store_path, ("docs", "bands", "wfps"))
-    out = compact_store(
-        spark, store_path, target_files,
-        band_cols=_ANY_BAND_COLS, partition_cols=("plane", "band"),
-    )
-    wfps_path = os.path.join(store_path, "wfps")
-    if os.path.isdir(wfps_path):
-        wf = spark.read.parquet(wfps_path).select(*_WFP_COLS)
-        n = wf.count()
-        tmp = wfps_path + ".compact.tmp"
-        (
-            wf.repartition(
-                F.col("plane"),
-                F.pmod(
-                    F.hash(F.coalesce("fp", "media_id")), F.lit(target_files)
-                ),
-            )
-            .write.mode("overwrite")
-            .partitionBy("plane")
-            .parquet(tmp)
-        )
-        _swap_dir(tmp, wfps_path)
-        spark.catalog.refreshByPath(wfps_path)
-        out["wfps"] = n
-    return out
+    """`compact_store` with this gate's (plane, band) bands/ and
+    plane-partitioned wfps/ layout."""
+    return compact_store(spark, store_path, target_files, _MEDIA_LAYOUT)
 
 
 def start_dedup_any_media_ingest(
@@ -813,33 +499,21 @@ def start_dedup_any_media_ingest(
     store_path: str,
     checkpoint_path: str,
     available_now: bool = True,
-    compact_every: int | None = None,
-    compact_target_files: int = 8,
     **dedup_kwargs,
 ):
-    """Wire a mixed media stream into the unified near-dup-gated store
-    via foreachBatch(ingest_any_media_batch). Same serial-callback
-    compaction contract as the single-plane gates."""
-
-    def process(df: DataFrame, epoch: int) -> None:
-        ingest_any_media_batch(df, store_path, **dedup_kwargs)
-        if compact_every and (epoch + 1) % compact_every == 0:
-            compact_any_media_store(
-                df.sparkSession, store_path, compact_target_files
-            )
-
-    writer = stream_media.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_path
+    """Wire a mixed media stream into the near-dup-gated store via
+    foreachBatch(ingest_any_media_batch); ``dedup_kwargs`` go to every
+    `ingest_any_media_batch` call. Returns the StreamingQuery."""
+    return _start_gate(
+        ingest_any_media_batch, stream_media, store_path, checkpoint_path,
+        available_now, dedup_kwargs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
 # Excerpt-aware admission (round 9; image crops round 10): the banded
 # hash gate rejects whole-item near-dups; with ``excerpt_tau`` set, the
-# unified gate ALSO rejects a new item most of whose CONTENT is already
+# gate ALSO rejects a new item most of whose CONTENT is already
 # stored — a window-aligned audio excerpt, a video subclip, or a
 # tile-aligned image crop of a stored item — via a content-fingerprint
 # index (the same machinery the batch subclip/excerpt/crop queries
@@ -847,9 +521,6 @@ def start_dedup_any_media_ingest(
 # clip is admitted (most of its fingerprints are new); a new clip
 # contained in a stored host is redundant.
 # ---------------------------------------------------------------------------
-
-_WFP_COLS = ("media_id", "plane", "fp")
-
 
 def media_winnow_fps(
     batch: DataFrame,
@@ -977,104 +648,3 @@ def media_winnow_fps(
     ).select("media_id", F.col("media_type").alias("plane"))
     return ids.join(fps, "media_id", "left").select(*_WFP_COLS)
 
-
-def media_excerpt_rejects(
-    stored_wfps: DataFrame | None,
-    batch_wfps: DataFrame,
-    tau: float,
-    max_df: int = 50,
-) -> DataFrame:
-    """Batch items to REJECT as stored-content excerpts: the fraction
-    of a batch item's fingerprints already present — in the store, or
-    in lower-id items of the same batch (leader-keeps) — reaches
-    ``tau``. Plane rides the join key; a shared fingerprint counts
-    once however many stored items carry it (distinct before the
-    count), so containment is a pure batch-side fraction.
-
-    Same document-frequency cutoff as the oracled batch twin
-    `winnow_containment_pairs` (operators/dedup.py): a fingerprint
-    carried by > ``max_df`` items across store+batch is boilerplate —
-    runs of silent audio windows, black frames — and cannot EVIDENCE
-    a match (it stays in the ``n_fp`` denominator, exactly as the
-    batch op keeps boilerplate in the min-side count), so
-    common-content items are not falsely rejected and the gate's
-    semantics track the oracle-checked batch path. The df prune also
-    bounds join fan-out per fingerprint at 100 TB store sizes."""
-    bf = batch_wfps.filter(F.col("fp").isNotNull())
-    n = bf.groupBy("media_id").agg(F.count(F.lit(1)).alias("n_fp"))
-    pop = bf.select("plane", "fp")
-    if stored_wfps is not None:
-        pop = pop.unionByName(
-            stored_wfps.filter(F.col("fp").isNotNull()).select("plane", "fp")
-        )
-    rare = (
-        pop.groupBy("plane", "fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_df)
-        .select("plane", "fp")
-    )
-    bf = bf.join(rare, ["plane", "fp"], "left_semi")
-    b = bf.select(F.col("media_id").alias("j"), "plane", "fp")
-    a = bf.select(F.col("media_id").alias("i"), "plane", "fp")
-    matched = (
-        a.join(b, ["plane", "fp"])
-        .filter(F.col("i") < F.col("j"))
-        .select("j", "fp")
-    )
-    if stored_wfps is not None:
-        s = (
-            stored_wfps.filter(F.col("fp").isNotNull())
-            .join(rare, ["plane", "fp"], "left_semi")
-            .select(F.col("media_id").alias("i"), "plane", "fp")
-        )
-        matched = matched.unionByName(
-            s.join(b, ["plane", "fp"]).select("j", "fp")
-        )
-    shared = matched.distinct().groupBy("j").agg(
-        F.count(F.lit(1)).alias("n_shared")
-    )
-    return (
-        shared.join(n.withColumnRenamed("media_id", "j"), "j")
-        .filter(F.col("n_shared") / F.col("n_fp") >= tau)
-        .select(F.col("j").alias("media_id"))
-    )
-
-
-def repair_media_wfps_index(
-    spark: SparkSession, store_path: str, phases: int = 1,
-    image_plane: str = "grid", audio_plane: str = "window",
-) -> int:
-    """Re-index image/video/audio docs rows missing from wfps/ — the
-    excerpt index's analog of `repair_any_media_band_index`, with the
-    fp=NULL presence rows making 'nothing to fingerprint' a recorded
-    state instead of a perpetual orphan. Also how a pre-crop-plane
-    store upgrades: its image rows have no wfps rows, so the first
-    excerpt-aware batch re-fingerprints them here, once — and how a
-    phases switch rebuilds: `set_any_media_gate_mode` drops wfps/
-    when the phase count changes, so every stored item re-enters
-    here as an orphan and is re-fingerprinted at the gate's
-    ``phases``."""
-    docs_path = os.path.join(store_path, "docs")
-    wfps_path = os.path.join(store_path, "wfps")
-    if not os.path.isdir(docs_path):
-        return 0
-    docs = spark.read.option("mergeSchema", "true").parquet(docs_path)
-    cand = docs.filter(
-        F.col("media_type").isin("image", "video", "audio")
-    ).select("media_id")
-    if os.path.isdir(wfps_path):
-        have = spark.read.parquet(wfps_path).select("media_id").distinct()
-        orphans = cand.join(have, "media_id", "left_anti")
-    else:
-        orphans = cand
-    orphans = orphans.localCheckpoint(eager=True)
-    if orphans.isEmpty():
-        return 0
-    orphan_docs = docs.join(orphans, "media_id", "left_semi")
-    repaired = media_winnow_fps(
-        orphan_docs, phases=phases, image_plane=image_plane,
-        audio_plane=audio_plane,
-    ).localCheckpoint(eager=True)
-    cnt = repaired.count()
-    repaired.write.mode("append").partitionBy("plane").parquet(wfps_path)
-    return cnt

@@ -76,65 +76,3 @@ def track_backoff_state(poll_results: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def track_backoff_state_tws(poll_results: DataFrame) -> DataFrame:
-    """The SAME backoff state machine on Spark 4's transformWithState
-    API (StatefulProcessor + typed ValueState handles) — the current
-    recommended stateful operator, with first-class state TTL, timers,
-    and multiple state variables per key; applyInPandasWithState above
-    is the legacy twin kept for comparison. Output and semantics are
-    identical (asserted in tests).
-
-    ENVIRONMENT GATE: the transformWithState protocol needs `protobuf`
-    (pyspark.sql.streaming.proto) and the RocksDB state store provider;
-    this sandbox ships neither protobuf nor pip, so the e2e test skips
-    when `google.protobuf` is unavailable and the legacy-API test
-    remains the executed guarantee. On a real cluster install protobuf
-    and set spark.sql.streaming.stateStore.providerClass to
-    RocksDBStateStoreProvider.
-
-    The processor class is defined INSIDE this function so cloudpickle
-    ships it by value — module-level classes pickle by reference and
-    break on executors without this repo on PYTHONPATH.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    max_factor = MAX_BACKOFF_FACTOR
-
-    class BackoffProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("backoff", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd  # noqa: PLC0415 — resolve on the worker
-
-            (n_backoffs,) = self._state.get() if self._state.exists() else (0,)
-            for pdf in rows:
-                for ok in pdf.sort_values("event_time")["ok"]:
-                    n_backoffs = 0 if ok else n_backoffs + 1
-            self._state.update((n_backoffs,))
-            factor = min(2 ** (n_backoffs - 1), max_factor) if n_backoffs else 0
-            yield pd.DataFrame(
-                {
-                    "market_hash_name": [key[0]],
-                    "stream": [key[1]],
-                    "consecutive_backoffs": [n_backoffs],
-                    "cooldown_factor": [factor],
-                    "healthy": [n_backoffs == 0],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return poll_results.groupBy(
-        "market_hash_name", "stream"
-    ).transformWithStateInPandas(
-        statefulProcessor=BackoffProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )

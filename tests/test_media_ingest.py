@@ -1,8 +1,8 @@
 """Streaming near-dup-gated MEDIA ingest (streaming/media_ingest.py):
-the image twin of the corpus-ingest e2e suite. The fixture is
-checked_oriented_dhash_df — real PNGs with real eXIf orientation, so
-"duplicate" here means a camera-rotated/mirrored re-upload of a stored
-image, the case plain content hashing can never catch."""
+the media twin of the corpus-ingest e2e suite. The image-plane tests
+use checked_oriented_dhash_df — real PNGs with real eXIf orientation,
+so "duplicate" there means a camera-rotated/mirrored re-upload of a
+stored image, the case plain content hashing can never catch."""
 
 from __future__ import annotations
 
@@ -15,11 +15,15 @@ from hridaya_steam_market_tracker_spark.operators.multimodal import (
     checked_oriented_dhash_df,
     _pixel_codec,
 )
+from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
+    set_gate_mode,
+)
 from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
-    compact_media_store,
-    ingest_media_batch,
-    repair_media_band_index,
-    start_dedup_media_ingest,
+    compact_any_media_store,
+    ingest_any_media_batch,
+    media_gate_mode,
+    repair_any_media_band_index,
+    start_dedup_any_media_ingest,
 )
 
 
@@ -56,7 +60,7 @@ def test_media_ingest_two_waves_rotated_rejected(spark, tmp_path):
     admitted."""
     store = str(tmp_path / "store")
 
-    ingest_media_batch(_rows(spark, [0, 8, 16, 24, 33]), store)
+    ingest_any_media_batch(_rows(spark, [0, 8, 16, 24, 33]), store)
     assert _stored_ids(spark, store) == {0, 8, 16, 24, 33}
     band_ids = {
         r["media_id"]
@@ -66,7 +70,7 @@ def test_media_ingest_two_waves_rotated_rejected(spark, tmp_path):
 
     # ids 5 (base1, EXIF 6), 13 (base2, EXIF 6), 26 (base4, EXIF 3) are
     # stored-content re-uploads under rotation; 100 is new.
-    ingest_media_batch(
+    ingest_any_media_batch(
         _rows(spark, [5, 13, 26], extra=[_white_png_row(100)]), store
     )
     assert _stored_ids(spark, store) == {0, 8, 16, 24, 33, 100}
@@ -81,25 +85,41 @@ def test_media_ingest_replay_and_leader_keeps(spark, tmp_path):
 
     # leader-keeps: ids 2 and 3 are orientations 3 and 4 of base 1
     batch = _rows(spark, [2, 3])
-    ingest_media_batch(batch, store)
+    ingest_any_media_batch(batch, store)
     assert _stored_ids(spark, store) == {2}
 
-    ingest_media_batch(batch, store)  # replay: no-op
+    ingest_any_media_batch(batch, store)  # replay: no-op
     assert _stored_ids(spark, store) == {2}
     assert spark.read.parquet(store + "/docs").count() == 1
 
 
 def test_media_ingest_refuses_oversize_radius(spark, tmp_path):
     with pytest.raises(ValueError, match="max_hamming"):
-        ingest_media_batch(_rows(spark, [0]), str(tmp_path / "s"), max_hamming=4)
+        ingest_any_media_batch(_rows(spark, [0]), str(tmp_path / "s"), max_hamming=4)
+
+
+def _band_dir_files(store):
+    """Parquet file count of every (plane, band) partition of bands/."""
+    out = {}
+    for plane_dir in os.listdir(os.path.join(store, "bands")):
+        if not plane_dir.startswith("plane="):
+            continue
+        for band_dir in os.listdir(os.path.join(store, "bands", plane_dir)):
+            if band_dir.startswith("band="):
+                d = os.path.join(store, "bands", plane_dir, band_dir)
+                out[(plane_dir, band_dir)] = sum(
+                    f.endswith(".parquet") for f in os.listdir(d)
+                )
+    return out
 
 
 def test_media_ingest_streaming_e2e_with_compaction(spark, tmp_path):
-    """start_dedup_media_ingest wires the gate into foreachBatch with
-    inline compaction: after the stream drains, each band partition
-    holds <= compact_target_files files, and a second wave against the
-    compacted store still rejects a rotated re-upload while admitting
-    a new image — compaction changed no admission decision."""
+    """start_dedup_any_media_ingest wires the gate into foreachBatch
+    with in-batch compaction: after the stream drains, each band
+    partition holds <= auto_compact_target_files files, and a second
+    wave against the compacted store still rejects a rotated re-upload
+    while admitting a new image — compaction changed no admission
+    decision."""
     src_dir = str(tmp_path / "incoming")
     store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
@@ -107,17 +127,15 @@ def test_media_ingest_streaming_e2e_with_compaction(spark, tmp_path):
 
     _rows(spark, [0, 8, 16, 24]).write.parquet(src_dir, mode="append")
     stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(src_dir)
-    q = start_dedup_media_ingest(stream, store, ckpt, compact_every=1,
-                                 compact_target_files=1)
+    q = start_dedup_any_media_ingest(stream, store, ckpt,
+                                     auto_compact_files=0,
+                                     auto_compact_target_files=1)
     try:
         q.awaitTermination(120)
     finally:
         q.stop()
-    for bd in os.listdir(store + "/bands"):
-        if bd.startswith("band="):
-            fs = [f for f in os.listdir(os.path.join(store, "bands", bd))
-                  if f.endswith(".parquet")]
-            assert len(fs) <= 1, (bd, fs)
+    files = _band_dir_files(store)
+    assert len(files) == 4 and max(files.values()) <= 1, files
 
     # wave 2: id 7 is base 1 under EXIF 8 (stored as id 0's rotation),
     # 101 is new
@@ -125,8 +143,9 @@ def test_media_ingest_streaming_e2e_with_compaction(spark, tmp_path):
         src_dir, mode="append"
     )
     stream2 = spark.readStream.schema(MEDIA_SCHEMA).parquet(src_dir)
-    q2 = start_dedup_media_ingest(stream2, store, ckpt, compact_every=1,
-                                  compact_target_files=1)
+    q2 = start_dedup_any_media_ingest(stream2, store, ckpt,
+                                      auto_compact_files=0,
+                                      auto_compact_target_files=1)
     try:
         q2.awaitTermination(120)
     finally:
@@ -146,12 +165,12 @@ def test_media_ingest_repairs_crash_orphaned_band_index(spark, tmp_path):
     import shutil
 
     store = str(tmp_path / "store")
-    ingest_media_batch(_rows(spark, [0, 33]), store)  # base 1 + undecodable
+    ingest_any_media_batch(_rows(spark, [0, 33]), store)  # base 1 + undecodable
     shutil.rmtree(store + "/bands")  # crash state: docs written, bands not
 
     # id 5 is base 1 under EXIF orientation 6 — a rotated re-upload of
     # stored id 0. Without repair it would be admitted.
-    ingest_media_batch(_rows(spark, [5]), store)
+    ingest_any_media_batch(_rows(spark, [5]), store)
     assert _stored_ids(spark, store) == {0, 33}
     band_ids = {
         r["media_id"] for r in spark.read.parquet(store + "/bands").collect()
@@ -159,32 +178,7 @@ def test_media_ingest_repairs_crash_orphaned_band_index(spark, tmp_path):
     assert band_ids == {0}  # repaired; decode_ok=false row stayed unindexed
 
     # a healthy store repairs nothing (the cheap-path no-op)
-    assert repair_media_band_index(spark, store) == 0
-
-
-def test_media_ingest_non_image_policy(spark, tmp_path):
-    """The dHash gate is image-only; a batch carrying audio/video rows
-    must refuse by default (the silent no-dedup bypass), and
-    non_image='admit' stores them docs-only with decode_ok null."""
-    store = str(tmp_path / "store")
-    audio_row = (500, "audio", "wav", bytearray(b"RIFF...."), None, None, None)
-
-    with pytest.raises(ValueError, match="non-image"):
-        ingest_media_batch(_rows(spark, [0], extra=[audio_row]), store)
-    assert not os.path.isdir(store + "/docs")  # refused before any write
-
-    ingest_media_batch(
-        _rows(spark, [0], extra=[audio_row]), store, non_image="admit"
-    )
-    docs = {r["media_id"]: r["decode_ok"]
-            for r in spark.read.parquet(store + "/docs").collect()}
-    assert docs == {0: True, 500: None}
-    band_ids = {
-        r["media_id"] for r in spark.read.parquet(store + "/bands").collect()
-    }
-    assert band_ids == {0}
-    # the admitted audio row is NOT an orphan candidate for repair
-    assert repair_media_band_index(spark, store) == 0
+    assert repair_any_media_band_index(spark, store) == 0
 
 
 def test_media_store_halfcompacted_refusal_and_recovery(spark, tmp_path):
@@ -192,18 +186,18 @@ def test_media_store_halfcompacted_refusal_and_recovery(spark, tmp_path):
     crash state refuses both ingest and compaction, and the one-rename
     recovery restores every admission."""
     store = str(tmp_path / "store")
-    ingest_media_batch(_rows(spark, [0, 8]), store)
+    ingest_any_media_batch(_rows(spark, [0, 8]), store)
     docs = os.path.join(store, "docs")
 
     os.rename(docs, docs + ".compact.tmp")
     with pytest.raises(RuntimeError, match="half-compacted"):
-        ingest_media_batch(_rows(spark, [16]), store)
+        ingest_any_media_batch(_rows(spark, [16]), store)
     with pytest.raises(RuntimeError, match="half-compacted"):
-        compact_media_store(spark, store)
+        compact_any_media_store(spark, store)
     os.rename(docs + ".compact.tmp", docs)
-    ingest_media_batch(_rows(spark, [16]), store)
+    ingest_any_media_batch(_rows(spark, [16]), store)
     assert _stored_ids(spark, store) == {0, 8, 16}
-    rewritten = compact_media_store(spark, store)
+    rewritten = compact_any_media_store(spark, store)
     assert rewritten == {"docs": 3, "bands": 12}
 
 
@@ -336,15 +330,8 @@ def test_any_media_ingest_repairs_and_compacts(spark, tmp_path):
 
     rewritten = compact_any_media_store(spark, store)
     assert rewritten["docs"] == 3 and rewritten["bands"] == 12
-    for plane_dir in os.listdir(store + "/bands"):
-        if not plane_dir.startswith("plane="):
-            continue
-        for band_dir in os.listdir(os.path.join(store, "bands", plane_dir)):
-            if band_dir.startswith("band="):
-                fs = [f for f in os.listdir(
-                    os.path.join(store, "bands", plane_dir, band_dir))
-                    if f.endswith(".parquet")]
-                assert len(fs) <= 1
+    files = _band_dir_files(store)
+    assert len(files) == 12 and max(files.values()) <= 1, files
     # admissions invariant post-compaction
     ingest_any_media_batch(_mixed_rows(spark, aud_ids=[2001]), store)
     assert _stored_ids(spark, store) == {0, 1000, 2000}
@@ -367,8 +354,9 @@ def test_any_media_streaming_e2e(spark, tmp_path):
         src_dir, mode="append"
     )
     stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(src_dir)
-    q = start_dedup_any_media_ingest(stream, store, ckpt, compact_every=1,
-                                     compact_target_files=1)
+    q = start_dedup_any_media_ingest(stream, store, ckpt,
+                                     auto_compact_files=0,
+                                     auto_compact_target_files=1)
     try:
         q.awaitTermination(120)
     finally:
@@ -378,8 +366,9 @@ def test_any_media_streaming_e2e(spark, tmp_path):
     _mixed_rows(spark, img_ids=[5], vid_ids=[1001, 1003],
                 aud_ids=[2001]).write.parquet(src_dir, mode="append")
     stream2 = spark.readStream.schema(MEDIA_SCHEMA).parquet(src_dir)
-    q2 = start_dedup_any_media_ingest(stream2, store, ckpt, compact_every=1,
-                                      compact_target_files=1)
+    q2 = start_dedup_any_media_ingest(stream2, store, ckpt,
+                                      auto_compact_files=0,
+                                      auto_compact_target_files=1)
     try:
         q2.awaitTermination(120)
     finally:
@@ -481,46 +470,6 @@ def test_any_media_excerpt_index_repair_replay_compaction(spark, tmp_path):
     assert out["docs"] == 2 and "wfps" in out
     ingest_any_media_batch(_clip_rows(spark, [2001]), store, excerpt_tau=0.8)
     assert _stored_ids(spark, store) == {1000, 2000}  # still rejected
-
-
-def test_legacy_mixed_schema_store_repair_heals_orphans(spark, tmp_path):
-    """The repair fallback must survive a MIXED-schema docs/ — a
-    pre-decode_ok store that has since received one new-format append.
-    Without mergeSchema, spark.read.parquet infers from an arbitrary
-    footer: legacy rows could read decode_ok=NULL and be silently
-    excluded from repair (the exact orphan class repair exists to
-    heal), so a rotated re-upload of a crash-orphaned legacy image
-    would be admitted forever. decode_ok IS NULL now means "unknown —
-    re-hash decides"."""
-    store = str(tmp_path / "store")
-    os.makedirs(store)
-
-    # Legacy-era store: docs WITHOUT decode_ok, and id 0's band rows
-    # lost to a legacy-era crash (no bands/ at all). id 33 is the
-    # undecodable blob — a NULL-flag candidate whose re-hash yields
-    # nothing, every batch, until the store is rewritten (documented
-    # legacy cost; must not crash or admit anything).
-    legacy = _rows(spark, [0, 33]).select(
-        "media_id", "media_type", "format", "payload"
-    )
-    legacy.write.parquet(store + "/docs")
-
-    # New-format append lands -> docs/ now holds mixed parquet footers.
-    ingest_media_batch(_rows(spark, [16]), store)
-
-    # id 5 = base 1 under EXIF orientation 6, a rotated re-upload of
-    # the LEGACY id 0. Repair must have re-indexed id 0 for this to be
-    # rejected.
-    ingest_media_batch(_rows(spark, [5]), store)
-    assert _stored_ids(spark, store) == {0, 33, 16}
-    band_ids = {
-        r["media_id"] for r in spark.read.parquet(store + "/bands").collect()
-    }
-    assert band_ids == {0, 16}
-
-    # Re-running repair appends nothing new (id 33 stays a candidate
-    # but produces zero band rows — the documented legacy re-decode).
-    assert repair_media_band_index(spark, store) == 0
 
 
 def test_media_excerpt_rejects_df_cap_matches_batch_twin(spark):
@@ -634,14 +583,13 @@ def test_any_media_gate_mode_lifetime_contract(spark, tmp_path):
     into an excerpt store silently stops rejecting excerpts and lets
     wfps/ go stale; the reverse quietly pays a full-store
     re-fingerprint), marker-less pre-round-10 stores are inferred once
-    from wfps/ existence, and set_any_media_gate_mode is the
+    from wfps/ existence, and set_gate_mode is the
     deliberate switch after which repair upgrades the store."""
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         checked_image_crop_df,
     )
     from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
         ingest_any_media_batch,
-        set_any_media_gate_mode,
     )
 
     rows = checked_image_crop_df(spark)
@@ -660,9 +608,9 @@ def test_any_media_gate_mode_lifetime_contract(spark, tmp_path):
     # repair-driven upgrade then rejects the stored image's crop
     plain = str(tmp_path / "plain")
     ingest_any_media_batch(pick(0), plain)
-    with pytest.raises(ValueError, match="set_any_media_gate_mode"):
+    with pytest.raises(ValueError, match="set_gate_mode"):
         ingest_any_media_batch(pick(1), plain, excerpt_tau=0.8)
-    set_any_media_gate_mode(plain, excerpt=True)
+    set_gate_mode(plain, media_gate_mode(excerpt=True))
     ingest_any_media_batch(pick(1), plain, excerpt_tau=0.8)
     assert _stored_ids(spark, plain) == {0}  # crop rejected post-upgrade
 
@@ -733,7 +681,7 @@ def test_any_media_phase_mode_lifetime_and_switch(spark, tmp_path):
     phases=2 store refuses a phases=1 batch (and vice versa) because
     a mixed-phase wfps/ silently re-opens the alignment blind spot
     for whichever items were indexed at the lower phase count. The
-    deliberate switch (set_any_media_gate_mode with the new phases)
+    deliberate switch (set_gate_mode with the new phases' mode)
     DROPS wfps/ and the next batch's repair rebuilds it at the new
     phase count — after which the offset crop of an item stored
     BEFORE the switch is rejected too."""
@@ -742,7 +690,6 @@ def test_any_media_phase_mode_lifetime_and_switch(spark, tmp_path):
     )
     from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
         ingest_any_media_batch,
-        set_any_media_gate_mode,
     )
 
     rows = checked_image_offset_crop_df(spark)
@@ -766,7 +713,7 @@ def test_any_media_phase_mode_lifetime_and_switch(spark, tmp_path):
         ingest_any_media_batch(
             pick(1), old, excerpt_tau=0.8, excerpt_phases=2
         )
-    set_any_media_gate_mode(old, excerpt=True, phases=2)
+    set_gate_mode(old, media_gate_mode(excerpt=True, phases=2))
     assert not os.path.isdir(os.path.join(old, "wfps"))  # dropped
     ingest_any_media_batch(pick(1), old, excerpt_tau=0.8, excerpt_phases=2)
     assert _stored_ids(spark, old) == {0}  # rebuilt index catches it
@@ -881,8 +828,8 @@ def test_any_media_excerpt_streaming_e2e(spark, tmp_path):
     def drain():
         stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(src_dir)
         q = start_dedup_any_media_ingest(
-            stream, store, ckpt, compact_every=1, compact_target_files=1,
-            excerpt_tau=0.8,
+            stream, store, ckpt, auto_compact_files=0,
+            auto_compact_target_files=1, excerpt_tau=0.8,
         )
         try:
             q.awaitTermination(180)
@@ -1008,7 +955,6 @@ def test_any_media_cdt_gate_closes_arbitrary_offset_crop(spark, tmp_path):
     )
     from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
         ingest_any_media_batch,
-        set_any_media_gate_mode,
     )
 
     rows = checked_image_cdt_crop_df(spark)
@@ -1051,7 +997,7 @@ def test_any_media_cdt_gate_closes_arbitrary_offset_crop(spark, tmp_path):
     # host stored under the OLD (grid) plane
     old = str(tmp_path / "old")
     ingest_any_media_batch(pick(0), old, excerpt_tau=0.8)
-    set_any_media_gate_mode(old, excerpt=True, image_plane="cdt")
+    set_gate_mode(old, media_gate_mode(excerpt=True, image_plane="cdt"))
     assert not os.path.isdir(os.path.join(old, "wfps"))
     ingest_any_media_batch(pick(1), old, excerpt_tau=0.8,
                            excerpt_image_plane="cdt")

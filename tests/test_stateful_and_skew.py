@@ -164,74 +164,3 @@ def test_salted_left_join_matches_naive(spark):
         for r in salted_left_join(big, small, ["k"], buckets=8).collect()
     )
     assert salted == naive
-
-def test_backoff_state_transform_with_state(spark, tmp_path):
-    """Same scenario as test_backoff_state_in_stream, driven through
-    Spark 4's transformWithStateInPandas — the modern stateful API must
-    reproduce the legacy operator's outputs exactly, including state
-    carry across micro-batches. Skips where the transformWithState
-    wire protocol's protobuf dependency is absent (this sandbox)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from hridaya_steam_market_tracker_spark.streaming.stateful import (
-        track_backoff_state_tws,
-    )
-
-    rows = [
-        ("A", "priceoverview", False, "2024-01-01 10:00:00"),
-        ("A", "priceoverview", False, "2024-01-01 10:01:00"),
-        ("B", "priceoverview", True, "2024-01-01 10:00:30"),
-    ]
-    src = (
-        spark.createDataFrame(
-            rows, "market_hash_name string, stream string, ok boolean, et string"
-        )
-        .select("market_hash_name", "stream", "ok", F.col("et").cast("timestamp").alias("event_time"))
-    )
-    src_dir = str(tmp_path / "polls_tws")
-    src.coalesce(1).write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(src.schema).parquet(src_dir)
-    # transformWithState requires the RocksDB state store provider
-    old_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = (
-        track_backoff_state_tws(stream)
-        .writeStream.format("memory")
-        .queryName("backoff_state_tws")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        state = {
-            r["market_hash_name"]: (r["consecutive_backoffs"], r["cooldown_factor"], r["healthy"])
-            for r in spark.sql("SELECT * FROM backoff_state_tws").collect()
-        }
-        assert state["A"] == (2, 2, False)
-        assert state["B"] == (0, 0, True)
-
-        spark.createDataFrame(
-            [("A", "priceoverview", True, "2024-01-01 10:02:00")],
-            "market_hash_name string, stream string, ok boolean, et string",
-        ).select(
-            "market_hash_name", "stream", "ok", F.col("et").cast("timestamp").alias("event_time")
-        ).coalesce(1).write.mode("append").parquet(src_dir)
-        q.processAllAvailable()
-        latest = [
-            r for r in spark.sql("SELECT * FROM backoff_state_tws").collect()
-            if r["market_hash_name"] == "A"
-        ][-1]
-        assert latest["consecutive_backoffs"] == 0 and latest["healthy"]
-    finally:
-        q.stop()
-        if old_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old_provider
-            )

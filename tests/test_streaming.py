@@ -98,14 +98,64 @@ def _mk_points(spark, rows):
     )
 
 
+def test_start_history_ingest_restart_keeps_first_value(spark, tmp_path):
+    """J6 wiring end to end: start_history_ingest runs watermark dedup
+    into the idempotent_append sink. A second file re-sends overlapping
+    points with new values (one of them twice) and the query restarts
+    from the same checkpoint: every (market_hash_name, time) is stored
+    exactly once and keeps the value sent first (ON CONFLICT DO
+    NOTHING)."""
+    from hridaya_steam_market_tracker_spark.streaming.ingest import (
+        start_history_ingest,
+    )
+
+    src = str(tmp_path / "incoming")
+    sink = str(tmp_path / "history")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        stream = spark.readStream.schema(
+            "market_hash_name string, time timestamp, value double"
+        ).parquet(src)
+        q = start_history_ingest(stream, sink, ckpt)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    _mk_points(spark, [
+        ("AK-47", "2024-01-01 10:00:00", 1.0),
+        ("AK-47", "2024-01-01 11:00:00", 1.1),
+        ("M4A4", "2024-01-01 10:00:00", 2.0),
+    ]).write.parquet(src, mode="append")
+    drain()
+    _mk_points(spark, [
+        ("AK-47", "2024-01-01 11:00:00", 9.9),
+        ("AK-47", "2024-01-01 12:00:00", 1.2),
+        ("M4A4", "2024-01-01 10:00:00", 8.8),
+        ("M4A4", "2024-01-01 10:00:00", 7.7),
+    ]).write.parquet(src, mode="append")
+    drain()  # restart from the same checkpoint
+
+    rows = spark.read.parquet(sink).select(
+        "market_hash_name",
+        F.date_format("time", "HH:mm").alias("t"),
+        "value",
+    ).collect()
+    assert sorted((r[0], r[1], r[2]) for r in rows) == [
+        ("AK-47", "10:00", 1.0),
+        ("AK-47", "11:00", 1.1),
+        ("AK-47", "12:00", 1.2),
+        ("M4A4", "10:00", 2.0),
+    ]
+
+
 def test_merge_upsert_ignore_and_replace(spark, tmp_path):
     from hridaya_steam_market_tracker_spark.streaming.ingest import (
-        merge_capability,
         merge_upsert,
         read_merged,
     )
 
-    assert merge_capability() in ("delta", "snapshot")
     sink = str(tmp_path / "merged")
     merge_upsert(_mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)]), sink)
     # replay is a no-op (DO NOTHING)
@@ -712,10 +762,10 @@ def test_half_compacted_store_refuses_compaction_too(spark, tmp_path):
 
 
 def test_dedup_ingest_inline_compaction_cadence(spark, tmp_path):
-    """start_dedup_ingest(compact_every=1) runs store maintenance from
-    inside the serial foreachBatch loop: after the stream drains, the
-    band partitions hold <= compact_target_files files, and a second
-    wave still dedups correctly against the compacted store."""
+    """start_dedup_ingest(auto_compact_files=0) runs store maintenance
+    from inside the serial foreachBatch loop: after the stream drains,
+    the band partitions hold <= auto_compact_target_files files, and a
+    second wave still dedups correctly against the compacted store."""
     from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
         start_dedup_ingest,
     )
@@ -734,8 +784,8 @@ def test_dedup_ingest_inline_compaction_cadence(spark, tmp_path):
         [(i, doc(i)) for i in range(4)], "doc_id long, text string"
     ).write.parquet(src_dir, mode="append")
     stream = spark.readStream.schema("doc_id long, text string").parquet(src_dir)
-    q = start_dedup_ingest(stream, store, ckpt, compact_every=1,
-                           compact_target_files=1)
+    q = start_dedup_ingest(stream, store, ckpt, auto_compact_files=0,
+                           auto_compact_target_files=1)
     try:
         q.awaitTermination(120)
     finally:
@@ -752,8 +802,8 @@ def test_dedup_ingest_inline_compaction_cadence(spark, tmp_path):
         [(50, doc(1, tweak=3)), (51, doc(51))], "doc_id long, text string"
     ).write.parquet(src_dir, mode="append")
     stream2 = spark.readStream.schema("doc_id long, text string").parquet(src_dir)
-    q2 = start_dedup_ingest(stream2, store, ckpt, compact_every=1,
-                            compact_target_files=1)
+    q2 = start_dedup_ingest(stream2, store, ckpt, auto_compact_files=0,
+                            auto_compact_target_files=1)
     try:
         q2.awaitTermination(120)
     finally:
@@ -895,7 +945,7 @@ def test_corpus_excerpt_gate_end_to_end(spark, tmp_path):
 
 def test_corpus_excerpt_mode_contract_and_repair(spark, tmp_path):
     """The store-lifetime contract, text plane: a plain store refuses
-    an excerpt-aware batch loudly; `set_corpus_gate_mode` is the
+    an excerpt-aware batch loudly; `set_gate_mode` is the
     deliberate switch, after which the repair pass backfills wfps/
     from docs/ text (so previously-stored content starts rejecting its
     excerpts); a vanished wfps/ heals the same way on the next batch."""
@@ -904,7 +954,7 @@ def test_corpus_excerpt_mode_contract_and_repair(spark, tmp_path):
     from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
         ingest_batch,
         repair_corpus_wfps_index,
-        set_corpus_gate_mode,
+        set_gate_mode,
     )
 
     schema = "doc_id long, text string"
@@ -919,7 +969,7 @@ def test_corpus_excerpt_mode_contract_and_repair(spark, tmp_path):
             excerpt_tau=0.8,
         )
     # deliberate upgrade: repair backfills wfps for the stored doc...
-    set_corpus_gate_mode(store, excerpt=True)
+    set_gate_mode(store, "excerpt")
     assert repair_corpus_wfps_index(spark, store) > 0
     # ...and a pre-upgrade doc's excerpt is now rejected
     ingest_batch(

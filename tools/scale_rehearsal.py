@@ -471,67 +471,6 @@ def streaming_rehearsal(
     }))
 
 
-def streaming_media_rehearsal(spark, out_dir: str, rep: int,
-                              n_batches: int = 10) -> None:
-    """Scale the streaming media-ingest gate: a rep-scaled synthetic
-    image corpus (every 4th row a rotated re-upload under a real eXIf
-    orientation) in n_batches hash-sliced micro-batches against one
-    growing store — per-batch wall time + cumulative admissions are
-    the curve; then compact_media_store and one replayed batch. The
-    claim under test: admission cost tracks the BAND INDEX (4 two-int
-    rows per stored image), not stored payload bytes — the gate never
-    re-reads a stored blob."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from hridaya_steam_market_tracker_spark.operators.multimodal import (
-        synthetic_image_corpus,
-    )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
-        compact_media_store,
-        ingest_media_batch,
-    )
-
-    os.makedirs(out_dir, exist_ok=True)
-    corpus_path = os.path.join(out_dir, "media_corpus.parquet")
-    n = 200 * rep
-    synthetic_image_corpus(spark, n).repartition(8).write.mode(
-        "overwrite"
-    ).parquet(corpus_path)
-    media = spark.read.parquet(corpus_path)
-    store = os.path.join(out_dir, "media_store")
-    if os.path.isdir(store):
-        shutil.rmtree(store)
-
-    times = []
-    for b in range(n_batches):
-        batch = media.filter(F.pmod(F.col("media_id"), F.lit(n_batches)) == b)
-        t0 = time.perf_counter()
-        ingest_media_batch(batch, store)
-        times.append(round(time.perf_counter() - t0, 2))
-        print(json.dumps({"tier": "streaming-media", "batch": b,
-                          "sec": times[-1]}))
-    admitted = spark.read.parquet(os.path.join(store, "docs")).count()
-    t0 = time.perf_counter()
-    compact_media_store(spark, store, target_files=4)
-    compact_sec = round(time.perf_counter() - t0, 2)
-    batch = media.filter(
-        F.pmod(F.col("media_id"), F.lit(n_batches)) == n_batches - 1
-    )
-    t0 = time.perf_counter()
-    ingest_media_batch(batch, store)
-    replay_sec = round(time.perf_counter() - t0, 2)
-    print(json.dumps({
-        "metric": "streaming_media_rehearsal", "rep": rep, "images": n,
-        "admitted": admitted, "rejected": n - admitted,
-        "batch_sec": times,
-        "first5_avg": round(sum(times[:5]) / max(len(times[:5]), 1), 2),
-        "last5_avg": round(sum(times[-5:]) / max(len(times[-5:]), 1), 2),
-        "compact_sec": compact_sec, "replayed_batch_sec": replay_sec,
-    }))
-
-
 def streaming_any_media_rehearsal(spark, out_dir: str, rep: int,
                                   n_batches: int = 10,
                                   excerpt_tau: float | None = None,
@@ -613,11 +552,13 @@ def streaming_any_media_rehearsal(spark, out_dir: str, rep: int,
                 docs.groupBy("media_type").agg(F.count("*").alias("n")).collect()}
     accounting = None
     if excerpt_tau is not None:
+        from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
+            media_excerpt_rejects,
+        )
         from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
             _ANY_KEYS,
             _any_bands,
             media_admission_rejects,
-            media_excerpt_rejects,
             media_signatures,
             media_winnow_fps,
         )
@@ -731,25 +672,21 @@ def main() -> None:
     ap.add_argument(
         "--tier", default="text",
         choices=["text", "media", "streaming", "boilerplate",
-                 "streaming-media", "streaming-any-media"],
+                 "streaming-any-media"],
         help="text = scaled-fixture catalog queries (the original sf1 "
         "rehearsal); media = codec-tier mapInPandas ops with worker RSS "
         "sampling; streaming = corpus_ingest micro-batch cost curve; "
         "boilerplate = banner-injected corpus, span/containment heavies "
-        "WITH vs WITHOUT strip_source_prefix in front; streaming-media "
-        "= media_ingest micro-batch cost curve over a synthetic image "
-        "corpus with planted rotated re-uploads; streaming-any-media = the "
-        "UNIFIED gate over a mixed image/video/audio corpus with one "
-        "planted twin class per modality",
+        "WITH vs WITHOUT strip_source_prefix in front; "
+        "streaming-any-media = media_ingest micro-batch cost curve over "
+        "a mixed image/video/audio corpus with one planted twin class "
+        "per modality",
     )
     args = ap.parse_args()
 
     spark = get_spark("scale-rehearsal")
     if args.tier == "media":
         media_rehearsal(spark, args.rep, args.passes)
-        return
-    if args.tier == "streaming-media":
-        streaming_media_rehearsal(spark, args.out, args.rep)
         return
     if args.tier == "streaming-any-media":
         streaming_any_media_rehearsal(

@@ -21,7 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from hridaya_steam_market_tracker_spark.checkpoints import _hadoop_fs
 from hridaya_steam_market_tracker_spark.storage.layout import write_partitioned
 
 KEY_COLS = ("market_hash_name", "time")
@@ -38,14 +40,20 @@ def idempotent_append(batch_df: DataFrame, sink_path: str) -> None:
     """Append only rows whose (key, time) is not already stored —
     the ON CONFLICT DO NOTHING analog for a parquet sink. Used inside
     foreachBatch, so retries of the same micro-batch are no-ops.
+
+    Only a missing sink counts as empty (checked through the Hadoop
+    FileSystem, so any URI scheme works); every other read failure — a
+    corrupt file, a permissions error, a key-type conflict — raises
+    rather than degrading into a blind append of duplicate keys. The
+    stored keys are read with the batch's key types, so a sink whose
+    only writes were empty (no data file yet) reads as empty too.
     """
     spark = batch_df.sparkSession
-    try:
-        stored = spark.read.parquet(sink_path).select(*KEY_COLS)
-    except Exception:  # first batch: nothing stored yet
-        stored = None
     fresh = batch_df.dropDuplicates(list(KEY_COLS))
-    if stored is not None:
+    fs, path = _hadoop_fs(spark, sink_path)
+    if fs.exists(path):
+        key_schema = T.StructType([batch_df.schema[c] for c in KEY_COLS])
+        stored = spark.read.schema(key_schema).parquet(sink_path).select(*KEY_COLS)
         fresh = fresh.join(stored, list(KEY_COLS), "left_anti")
     write_partitioned(fresh, sink_path)
 

@@ -90,6 +90,39 @@ def test_idempotent_append_replay(spark, tmp_path):
     assert v11 == 1.6
 
 
+def test_idempotent_append_first_batch_into_missing_or_empty_sink(spark, tmp_path):
+    """A missing sink is the one read failure that means "nothing
+    stored": the first append creates it. A sink whose only write held
+    no rows (no data file yet) reads as empty, not as an error."""
+    sink = str(tmp_path / "missing" / "history")
+    idempotent_append(_mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)]), sink)
+    assert spark.read.parquet(sink).count() == 1
+
+    empty_first = str(tmp_path / "empty_first")
+    idempotent_append(_mk_points(spark, []), empty_first)
+    assert not any(f.endswith(".parquet") for _, _, fs in os.walk(empty_first) for f in fs)
+    batch = _mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)])
+    idempotent_append(batch, empty_first)
+    idempotent_append(batch, empty_first)
+    assert spark.read.parquet(empty_first).count() == 1
+
+
+def test_idempotent_append_refuses_unreadable_sink(spark, tmp_path):
+    """A sink that exists but cannot be read (here a corrupt part file)
+    must fail the append — treating it as empty would blindly admit
+    duplicate (key, time) rows."""
+    import pytest
+
+    part_dir = tmp_path / "history" / "date=2024-01-01"
+    part_dir.mkdir(parents=True)
+    (part_dir / "part-00000-corrupt.snappy.parquet").write_bytes(b"not parquet" * 8)
+    batch = _mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)])
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        idempotent_append(batch, str(tmp_path / "history"))
+    written = sorted(f for _, _, fs in os.walk(tmp_path / "history") for f in fs)
+    assert written == ["part-00000-corrupt.snappy.parquet"]
+
+
 def _mk_points(spark, rows):
     return spark.createDataFrame(
         rows, "market_hash_name string, time_s string, value double"

@@ -63,7 +63,7 @@ def test_priceoverview_normalization(spark):
     assert viol.count() == 1
 
 
-def test_histogram_normalization_split_brain(spark):
+def _histogram_raw(spark):
     from pyspark.sql import types as T
 
     from hridaya_steam_market_tracker_spark import schemas
@@ -78,7 +78,7 @@ def test_histogram_normalization_split_brain(spark):
             T.StructField("language", T.StringType()),
         ]
     )
-    raw = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             {
                 "success": 1,
@@ -96,6 +96,10 @@ def test_histogram_normalization_split_brain(spark):
         ],
         wire_schema,
     )
+
+
+def test_histogram_normalization_split_brain(spark):
+    raw = _histogram_raw(spark)
     row = normalize_histogram(raw).collect()[0]
     # THE split-brain rule: scalar minor units /100, nested strings preserved
     assert row["highest_buy_order"] == 0.03
@@ -356,3 +360,142 @@ def test_refresh_daily_rollup_partition_scoped(spark, tmp_path):
     assert got[("itemA", "2024-01-01")] == (1, 10.0)
     assert got[("itemB", "2024-01-02")] == (1, 30.0)
     assert got[("itemA", "2024-01-03")] == (1, 40.0)
+
+
+# ------------------------------------------------ per-poll normalizer cost
+def _wire_raws(spark) -> dict:
+    return {
+        "priceoverview": spark.createDataFrame(
+            [Row(success=True, lowest_price="0,03€", median_price="0,01€", volume="435", **IDENT)]
+        ),
+        "histogram": _histogram_raw(spark),
+        "activity": spark.createDataFrame(
+            [Row(success=1, activity=[ACTIVITY_HTML], timestamp=1681576662, **IDENT)]
+        ),
+        "pricehistory": _history_raw(spark, [["Jul 02 2014 01: +0", "283.697", "2"]]),
+    }
+
+
+NORMALIZERS = {
+    "priceoverview": normalize_priceoverview,
+    "histogram": normalize_histogram,
+    "activity": normalize_activity,
+    "pricehistory": normalize_pricehistory,
+}
+# Optimized-plan string length per normalizer. Each plan is linear in
+# its rules (~23k, ~5k, ~6k, ~3k chars); the activity plan that parsed
+# every price span inside a filter inside a re-parse ran to ~340k.
+PLAN_CHAR_BOUNDS = {
+    "priceoverview": 35_000,
+    "histogram": 8_000,
+    "activity": 20_000,
+    "pricehistory": 5_000,
+}
+
+
+def _plan_chars(df) -> int:
+    return len(df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_normalizer_plans_stay_linear(spark):
+    from hridaya_steam_market_tracker_spark.functions.activity import (
+        parse_activity_lines,
+    )
+
+    raws = _wire_raws(spark)
+    for name, normalize in NORMALIZERS.items():
+        chars = _plan_chars(normalize(raws[name]))
+        assert chars < PLAN_CHAR_BOUNDS[name], f"{name}: {chars} plan chars"
+    lines = parse_activity_lines(raws["activity"], ts_col="timestamp")
+    assert _plan_chars(lines) < PLAN_CHAR_BOUNDS["activity"]
+
+
+def test_normalizers_build_columns_once(spark, monkeypatch):
+    """A second call reuses the memoized select lists: no Column tree is
+    rebuilt (every column builder is made to fail), and the output is
+    still right. A changed gateway gets freshly built lists."""
+    from pyspark import SparkContext
+
+    from hridaya_steam_market_tracker_spark.sources import wire
+
+    raws = _wire_raws(spark)
+    first = {name: normalize(raws[name]).drop("timestamp", "fetched_at").collect()
+             for name, normalize in NORMALIZERS.items()}
+    built = {name: getattr(wire, f"_{name}_columns")() for name in NORMALIZERS}
+
+    def rebuilt(*_a, **_k):
+        raise AssertionError("normalizer columns rebuilt")
+
+    for fn in ("extract_currency", "parse_steam_price", "parse_volume", "to_major_units",
+               "activity_price", "extract_activity_action", "parse_steam_datetime",
+               "unix_to_timestamp", "_ingest_ts"):
+        monkeypatch.setattr(wire, fn, rebuilt)
+    for name, normalize in NORMALIZERS.items():
+        assert getattr(wire, f"_{name}_columns")() is built[name]
+        again = normalize(raws[name]).drop("timestamp", "fetched_at").collect()
+        assert again == first[name], name
+    monkeypatch.undo()
+
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert wire._priceoverview_columns() is not built["priceoverview"]
+    monkeypatch.undo()
+    # back on the live gateway: rebuilt once more, then memoized again
+    live = wire._priceoverview_columns()
+    assert wire._priceoverview_columns() is live
+    assert normalize_priceoverview(raws["priceoverview"]).count() == 1
+
+
+def _activity_line(*prices: str, action: str = "Purchased") -> str:
+    spans = "".join(
+        f'\t<span class="market_activity_cell market_activity_price ">\n\t\t{p}\t</span>\n'
+        for p in prices
+    )
+    return (
+        f'<div class="market_activity_line_item ellipsis">\n{spans}'
+        f'\t<span class="market_activity_action">{action}</span>\n</div>\n'
+    )
+
+
+# (line, price, currency): the first span whose content parses wins
+ACTIVITY_SPAN_CASES = [
+    (_activity_line("", "0,85€"), 0.85, "EUR"),  # empty first span
+    (_activity_line("Free", "£5.99"), 5.99, "GBP"),  # unparseable, then parseable
+    (_activity_line(), None, None),  # no price span at all
+    # '$' precedes 'R$'/'CDN$' in the G5 map: the '$' is stripped, the
+    # rest ("R 5.00", "CDN 1.50") fails to parse, so the span is skipped
+    (_activity_line("R$ 5,00", "CDN$ 1,50"), None, None),
+    (_activity_line("CDN$ 1,50", "$1.17"), 1.17, "USD"),
+]
+
+
+def test_activity_span_cases_normalize_and_parse_lines(spark):
+    from hridaya_steam_market_tracker_spark.functions.activity import (
+        parse_activity_lines,
+    )
+
+    lines = [case[0] for case in ACTIVITY_SPAN_CASES]
+    raw = spark.createDataFrame(
+        [
+            Row(success=1, activity=lines, timestamp=1681576662, **IDENT),
+            # only unpriced lines: the row currency falls back to USD
+            Row(success=1, activity=[lines[2], lines[3]], timestamp=1681576662, **IDENT),
+        ]
+    )
+    rows = normalize_activity(raw).collect()
+    entries = rows[0]["parsed_activities"]
+    for entry, (_, price, currency) in zip(entries, ACTIVITY_SPAN_CASES):
+        assert entry["price"] == (None if price is None else str(price))
+        assert entry["currency"] == currency
+        assert entry["action"] == "Purchased"
+    assert [r["currency"] for r in rows] == ["EUR", "USD"]
+    assert [r["activity_count"] for r in rows] == [len(lines), 2]
+
+    exploded = (
+        parse_activity_lines(raw.limit(1), ts_col="timestamp")
+        .select("raw_html", "price", "currency", "action")
+        .collect()
+    )
+    assert [(r["price"], r["currency"]) for r in exploded] == [
+        (price, currency) for _, price, currency in ACTIVITY_SPAN_CASES
+    ]
+    assert [r["raw_html"] for r in exploded] == lines

@@ -137,6 +137,24 @@ def _current_file(relpath: str) -> str | None:
         return f.read()
 
 
+# ast's own line split (only \r\n, \r and \n end a line), done once per file
+_LINE_RE = re.compile(r"[^\r\n]*(?:\r\n|\r|\n)|[^\r\n]+")
+
+
+def _segment(lines: list[str], node: ast.AST) -> str:
+    """``ast.get_source_segment`` over lines split once: the stdlib
+    re-splits the whole file char by char on every call, which made
+    deriving the head take minutes on the large query modules."""
+    first, last = node.lineno - 1, node.end_lineno - 1
+    if first == last:
+        return lines[first].encode()[node.col_offset : node.end_col_offset].decode()
+    return (
+        lines[first].encode()[node.col_offset :].decode()
+        + "".join(lines[first + 1 : last])
+        + lines[last].encode()[: node.end_col_offset].decode()
+    )
+
+
 @lru_cache(maxsize=None)
 def _defs(source: str) -> dict[str, str]:
     """name -> source segment for every top-level def / simple assign."""
@@ -144,34 +162,44 @@ def _defs(source: str) -> dict[str, str]:
         tree = ast.parse(source)
     except SyntaxError:
         return {}
+    lines = _LINE_RE.findall(source)
     out: dict[str, str] = {}
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            out[node.name] = ast.get_source_segment(source, node) or ""
+            out[node.name] = _segment(lines, node)
         elif isinstance(node, ast.Assign):
             for tgt in node.targets:
                 if isinstance(tgt, ast.Name):
-                    out[tgt.id] = ast.get_source_segment(source, node) or ""
+                    out[tgt.id] = _segment(lines, node)
         elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
-            out[node.target.id] = ast.get_source_segment(source, node) or ""
+            out[node.target.id] = _segment(lines, node)
+    return out
+
+
+@lru_cache(maxsize=None)
+def _function_segments(source: str) -> dict[str, str]:
+    """name -> source segment INCLUDING the decorator block, for every
+    top-level function (the first def of a repeated name wins), parsed
+    once per file text."""
+    try:
+        tree = ast.parse(source)
+    except SyntaxError:
+        return {}
+    lines = source.splitlines()
+    out: dict[str, str] = {}
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and node.name not in out:
+            start = min(
+                [d.lineno for d in node.decorator_list] + [node.lineno]
+            )
+            out[node.name] = "\n".join(lines[start - 1 : node.end_lineno])
     return out
 
 
 def _decorated_segment(source: str, fn_name: str) -> str | None:
     """Function source INCLUDING its decorator block (the @register call
     carries the oracle SQL and doc, which must count as implementation)."""
-    try:
-        tree = ast.parse(source)
-    except SyntaxError:
-        return None
-    lines = source.splitlines()
-    for node in tree.body:
-        if isinstance(node, ast.FunctionDef) and node.name == fn_name:
-            start = min(
-                [d.lineno for d in node.decorator_list] + [node.lineno]
-            )
-            return "\n".join(lines[start - 1 : node.end_lineno])
-    return None
+    return _function_segments(source).get(fn_name)
 
 
 _IMPORT_RE = re.compile(
@@ -180,7 +208,8 @@ _IMPORT_RE = re.compile(
 )
 
 
-def _package_imports(source: str) -> list[tuple[str, str]]:
+@lru_cache(maxsize=None)
+def _package_imports(source: str) -> tuple[tuple[str, str], ...]:
     """All (module, name) pairs imported from inside the package."""
     pairs = []
     for mod, names in _IMPORT_RE.findall(source):
@@ -188,7 +217,7 @@ def _package_imports(source: str) -> list[tuple[str, str]]:
             name = name.strip()
             if name and name != "*":
                 pairs.append((mod, name.split(" as ")[0].strip()))
-    return pairs
+    return tuple(pairs)
 
 
 def _mod_relpath(module: str) -> str:

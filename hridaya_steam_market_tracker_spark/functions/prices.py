@@ -30,11 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Symbol list in the reference's strip order (G1).
-STRIP_SYMBOLS = [
-    "$", "€", "£", "¥", "₹", "₽", "pуб.", "R$", "CDN$", "A$", "HK$",
-    "S$", "₩", "₴", "CHF", "kr", "zł", "R", "฿",
-]
+from hridaya_steam_market_tracker_spark.functions.bind import bind1
 
 # Symbol -> ISO 4217, in the reference's first-match order (G4).
 CURRENCY_MAP = [
@@ -44,6 +40,9 @@ CURRENCY_MAP = [
     ("₴", "UAH"), ("CHF", "CHF"), ("kr", "SEK"), ("zł", "PLN"),
     ("R", "ZAR"), ("฿", "THB"),
 ]
+
+# G1's strip order is the same symbol list in the same order.
+STRIP_SYMBOLS = [sym for sym, _ in CURRENCY_MAP]
 
 # Narrower 8-symbol map used by the activity parser (G5).
 ACTIVITY_CURRENCY_MAP = [
@@ -72,24 +71,29 @@ def parse_steam_price(col: Column) -> Column:
     one is the decimal separator. Single comma is decimal iff exactly
     two characters follow it; otherwise thousands.
     """
-    c = _strip_symbols(col)
-    both = c.contains(",") & c.contains(".")
-    # Rightmost separator is the comma <=> no dot occurs after the last comma.
-    euro = c.rlike(",[^.]*$")
-    comma_only = c.contains(",") & ~c.contains(".")
-    comma_decimal = c.rlike(",[^,]{2}$")
-    normalized = (
-        F.when(both & euro, F.replace(F.replace(c, F.lit("."), F.lit("")), F.lit(","), F.lit(".")))
-        .when(both, F.replace(c, F.lit(","), F.lit("")))
-        .when(comma_only & comma_decimal, F.replace(c, F.lit(","), F.lit(".")))
-        .when(comma_only, F.replace(c, F.lit(","), F.lit("")))
-        .otherwise(c)
-    )
-    # Python float() accepts optional sign/decimal/exponent; Spark's
-    # string->double cast accepts the same family and yields NULL on
-    # junk — but it also accepts spaces inside, so guard with a regex.
-    valid = normalized.rlike("^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$")
-    return F.when(valid, normalized.cast("double")).otherwise(F.lit(None).cast("double"))
+
+    def parse(c: Column) -> Column:
+        both = c.contains(",") & c.contains(".")
+        # Rightmost separator is the comma <=> no dot occurs after the last comma.
+        euro = c.rlike(",[^.]*$")
+        comma_only = c.contains(",") & ~c.contains(".")
+        comma_decimal = c.rlike(",[^,]{2}$")
+        normalized = (
+            F.when(both & euro, F.replace(F.replace(c, F.lit("."), F.lit("")), F.lit(","), F.lit(".")))
+            .when(both, F.replace(c, F.lit(","), F.lit("")))
+            .when(comma_only & comma_decimal, F.replace(c, F.lit(","), F.lit(".")))
+            .when(comma_only, F.replace(c, F.lit(","), F.lit("")))
+            .otherwise(c)
+        )
+        # Python float() accepts optional sign/decimal/exponent; Spark's
+        # string->double cast accepts the same family and yields NULL on
+        # junk — but it also accepts spaces inside, so guard with a regex.
+        valid = normalized.rlike("^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$")
+        return F.when(valid, normalized.cast("double")).otherwise(F.lit(None).cast("double"))
+
+    # bind1: the 19-step symbol strip is evaluated once per row; inlined,
+    # every predicate and branch above re-embedded the whole chain.
+    return bind1(_strip_symbols(col), parse)
 
 
 def to_major_units(col: Column) -> Column:

@@ -240,20 +240,6 @@ def signatures_from_sets(sets: DataFrame, num_hashes: int = 32) -> DataFrame:
     return sets.select("doc_id", bind1(ab_expr, sig).alias("mh"))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    n: int = 3,
-) -> DataFrame:
-    """Per-doc MinHash signature (see signatures_from_sets)."""
-    sets = _spread(df, id_col).select(
-        F.col(id_col).alias("doc_id"), shingles(F.col(text_col), n).alias("sh")
-    )
-    return signatures_from_sets(sets, num_hashes)
-
-
 def banded_buckets(
     signatures: DataFrame, num_hashes: int = 32, bands: int = 16
 ) -> DataFrame:

@@ -1857,62 +1857,7 @@ def checked_oriented_dhash_df(spark, n: int = 34) -> DataFrame:
     return spark.createDataFrame(rows_out, MEDIA_SCHEMA)
 
 
-def synthetic_image_corpus(spark, n: int, dup_every: int = 4) -> DataFrame:
-    """Rehearsal-scale image corpus for the streaming media-ingest
-    tier: mostly-unique 36x32 gradient PNGs, with every ``dup_every``-th
-    row a ROTATED RE-UPLOAD of its predecessor — the predecessor's
-    pixels stored under a nontrivial EXIF orientation (real eXIf chunk),
-    i.e. exactly the duplicate class the oriented-dHash gate exists to
-    reject. Deterministic in ``n``; every image is a real PNG through
-    the package encoder."""
-    import struct
-    import zlib
 
-    _, encode = _pixel_codec()
-    w, h = 36, 32
-
-    def gray_rows(seed: int) -> list[list[int]]:
-        a, b, c = 2 + seed % 9, 3 + seed % 11, (13 * seed) % 200
-        return [[(x * a + y * b + c) % 200 for x in range(w)] for y in range(h)]
-
-    def stored_rows(rows: list[list[int]], o: int) -> list[list[int]]:
-        if o == 2:
-            return [r[::-1] for r in rows]
-        if o == 3:
-            return [r[::-1] for r in rows][::-1]
-        if o == 4:
-            return rows[::-1]
-        if o == 5:
-            return [list(r) for r in zip(*rows)]
-        if o == 6:
-            return [list(r) for r in zip(*rows)][::-1]
-        if o == 7:
-            return [list(r)[::-1] for r in zip(*rows)][::-1]
-        return [list(r)[::-1] for r in zip(*rows)]  # o == 8
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    rows_out = []
-    for i in range(n):
-        if dup_every and i % dup_every == dup_every - 1 and i > 0:
-            o = 2 + i % 7  # 2..8: always a nontrivial orientation
-            rows = stored_rows(gray_rows(i - 1), o)
-        else:
-            o, rows = 1, gray_rows(i)
-        sh, sw = len(rows), len(rows[0])
-        rgb = bytes(v for r in rows for v in r for _ in range(3))
-        payload = bytearray(encode(sw, sh, rgb, "png"))
-        if o != 1:
-            tiff = _tiff_exif_bytes(
-                o, f"2024:03:{1 + i % 27:02d} 12:00:00", motorola=bool(i % 2)
-            )
-            payload = payload[:33] + chunk(b"eXIf", tiff) + payload[33:]
-        rows_out.append((i, "image", "png", payload, None, None, None))
-    return spark.createDataFrame(rows_out, MEDIA_SCHEMA)
 
 
 IMAGE_TILE_SCHEMA = (

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.checkpoints import stage_checkpoint
+from hridaya_steam_market_tracker_spark.functions.bind import bind1
 
 # Small, deterministic English stopword set (public knowledge).
 EN_STOPWORDS = [
@@ -114,22 +115,6 @@ def html_to_text(html: Column) -> Column:
 def tokens(text: Column) -> Column:
     """Whitespace tokens (empty strings filtered)."""
     return F.filter(F.split(F.trim(text), WS_SPLIT_RE), lambda t: t != "")
-
-
-def bind1(value: Column, body) -> Column:
-    """``let`` for Column expressions: evaluate ``value`` exactly once
-    per row and pass it to ``body`` as a bound lambda variable.
-
-    Catalyst performs no common-subexpression elimination inside
-    higher-order-function lambdas, so an expression referenced inside a
-    per-element lambda is RE-EVALUATED for every element — e.g. a
-    tokenizer inlined into an n-gram ``transform`` re-splits the whole
-    document once per position, O(len^2) per row (measured 10x on the
-    sf0.1 corpus). Binding the value as a single-element array's
-    ``transform`` variable pins one evaluation per row; lambda-variable
-    references are cheap slot lookups. Results are bit-identical to the
-    inlined form."""
-    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def token_count_ws(text: Column) -> Column:

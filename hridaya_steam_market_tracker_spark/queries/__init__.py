@@ -69,6 +69,8 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
 # so a time-budgeted correctness run records as many rows as possible
 # before any cutoff.
 _SAMPLE_FIRST: tuple[str, ...] = (
+    "multimodal_image_dhash_checked",
+    "multimodal_dhash_near_pairs_checked",
     "corpus_excerpt_admission_twin",
     "media_ingest_admission_twin",
     "duplicate_span_pairs",
@@ -97,28 +99,26 @@ _SAMPLE_FIRST: tuple[str, ...] = (
     "curation_pipeline_kept_docs",
     "dedup_clusters",
     "dedup_clusters_star",
-    "media_cdt_excerpt_admission_twin",
-    "media_hybrid_admission_twin",
-    "i1_json_extract",
-    "g2_minor_units_conversion",
-    "g3_parse_volume",
-    "g4_extract_currency",
-    "h1_parse_steam_datetime",
-    "range_join_views_before_purchase",
-    "value_histogram",
-    "value_percentiles_per_stream",
-    "f3_payload_dup_check",
-    "g5_activity_price_currency",
-    "x2_cube_flag_status",
-    "x3_pivot_status_by_segment",
-    "x4_above_customer_avg_orders",
-    "x5_grouping_sets_events",
-    "g1_parse_steam_price",
-    "i3_json_payload_build",
-    "x1_rollup_region_nation",
-    "i5_spread_per_key_day",
-    "text_quality_stats",
-    "sessionize_events",
+    "multimodal_dhash_oriented_checked",
+    "source_prefix_boilerplate",
+    "strip_source_prefix_stats",
+    "chunk_dedup_reassemble",
+    "doc_repetition_stats",
+    "multimodal_dhash_oriented_near_pairs_checked",
+    "multimodal_audio_excerpt_pairs",
+    "multimodal_image_crop_pairs",
+    "multimodal_image_offset_crop_pairs",
+    "duplicate_span_stats",
+    "multimodal_audio_cdt_excerpt_pairs",
+    "multimodal_audio_offset_excerpt_pairs",
+    "multimodal_image_cdt_crop_pairs",
+    "stupid_backoff_eval_scores",
+    "multimodal_video_subclip_pairs",
+    "strip_then_span_stats",
+    "multimodal_audio_hybrid_excerpt_pairs",
+    "ccnet_perplexity_buckets",
+    "multimodal_image_hybrid_crop_pairs",
+    "domain_mix_weights",
 )
 
 

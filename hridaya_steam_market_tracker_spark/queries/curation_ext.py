@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from hridaya_steam_market_tracker_spark.operators import dedup as D
 from hridaya_steam_market_tracker_spark.operators.text import bind1, with_repetition_stats
 from hridaya_steam_market_tracker_spark.queries import register
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import admission_sql
 from hridaya_steam_market_tracker_spark.tables import table
 
 _TOKS_LOWER = "list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '')"
@@ -2212,35 +2213,14 @@ def cc_luhn_detection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_excerpt_admission_twin",
     oracle=_WINNOW_SQL
     + """
-    , allf AS (SELECT doc_id, fp FROM win, unnest(fps) AS t(fp)),
-    sids AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 0),
-    bids AS (SELECT doc_id FROM documents WHERE doc_id % 4 <> 0),
-    pop AS (SELECT fp FROM allf
-            WHERE doc_id IN (SELECT doc_id FROM sids)
-               OR doc_id IN (SELECT doc_id FROM bids)),
-    rare AS (SELECT fp FROM pop GROUP BY 1 HAVING count(*) <= 50),
-    bf AS (SELECT doc_id, fp FROM allf
-           WHERE doc_id IN (SELECT doc_id FROM bids)),
-    nfp AS (SELECT doc_id, count(*) AS n FROM bf GROUP BY 1),
-    bfp AS (SELECT bf.* FROM bf JOIN rare USING (fp)),
-    sfp AS (SELECT a.doc_id, a.fp FROM allf a JOIN rare USING (fp)
-            WHERE a.doc_id IN (SELECT doc_id FROM sids)),
-    sh AS (
-      SELECT b.doc_id AS j, b.fp
-      FROM bfp b
-      JOIN (SELECT * FROM sfp UNION ALL SELECT * FROM bfp) a
-        ON a.fp = b.fp
-      WHERE a.doc_id IN (SELECT doc_id FROM sids) OR a.doc_id < b.doc_id
-      GROUP BY 1, 2
+    , allf AS (SELECT doc_id, 'text' AS plane, fp
+               FROM win, unnest(fps) AS t(fp))"""
+    + admission_sql(
+        "allf",
+        "doc_id",
+        "SELECT doc_id FROM documents WHERE doc_id % 4 = 0",
+        "SELECT doc_id FROM documents WHERE doc_id % 4 <> 0",
     ),
-    ns AS (SELECT j, count(*) AS n_shared FROM sh GROUP BY 1)
-    SELECT b.doc_id,
-           coalesce(ns.n_shared / CAST(nfp.n AS DOUBLE) < 0.8, TRUE)
-             AS admitted
-    FROM bids b
-    LEFT JOIN nfp ON nfp.doc_id = b.doc_id
-    LEFT JOIN ns ON ns.j = b.doc_id
-    """,
     doc=(
         "The TEXT excerpt-admission DECISION, value-checked end to "
         "end: the streaming gate's literal decision path "

@@ -19,6 +19,7 @@ from hridaya_steam_market_tracker_spark.operators.text import (
     with_text_stats,
 )
 from hridaya_steam_market_tracker_spark.queries import register
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import containment_pairs_sql
 from hridaya_steam_market_tracker_spark.tables import table
 
 # DuckDB fragments mirroring operators/text.py exactly.
@@ -1739,21 +1740,8 @@ def cdc_chunks_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="WITH "
     + _cdc_sql(_CDC_SHIFT_SRC)
     + """,
-    fps AS (SELECT DISTINCT doc_id, chunk_hash AS fp FROM chunks),
-    cnt AS (SELECT doc_id, count(*) AS n FROM fps GROUP BY doc_id),
-    pr AS (SELECT doc_id, fp FROM fps
-           WHERE fp IN (SELECT fp FROM fps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.doc_id AS i, b.doc_id AS j, count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-    SELECT sh.i, sh.j, CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.doc_id = sh.i
-            JOIN cnt cj ON cj.doc_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    fps AS (SELECT DISTINCT doc_id, chunk_hash AS fp FROM chunks)"""
+    + containment_pairs_sql("fps", "doc_id"),
     doc=(
         "OFFSET-independent duplicate detection via CDC chunk hashes: "
         "every 50th document gets a planted twin with a 4-character "

@@ -17,6 +17,8 @@ set ships no binary columns):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +29,10 @@ from hridaya_steam_market_tracker_spark.operators.multimodal import (
     sample_frames,
 )
 from hridaya_steam_market_tracker_spark.queries import register
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import (
+    admission_sql,
+    containment_pairs_sql,
+)
 
 
 @register(
@@ -861,47 +867,70 @@ def multimodal_hvcc_config_sps_checked(spark: SparkSession, sf_dir: str) -> Data
     return extract_hvcc_sps_params(checked_hvcc_df(spark, n=16))
 
 
-# Shared by the two dHash queries: closed-form recompute of the 9x8
-# difference hash over the 36x32 gray fixture rasters (see
-# operators/multimodal.py:checked_dhash_df for the pixel formula).
-_DHASH_HASHES_CTE = """
-    px AS (
-      SELECT i, x, y,
-             3 * (((x * (2 + (i % 8) % 5) + y * (3 + (i % 8) % 7)
-                    + 11 * (i % 8)) % 200)
-                  + CASE WHEN i >= 8 AND x // 4 = 2 AND y // 4 = 3
-                         THEN 50 ELSE 0 END) AS v
-      FROM generate_series(0, 15) g(i),
-           generate_series(0, 35) gx(x), generate_series(0, 31) gy(y)
-    ),
+# The 9x8 difference hash recomputed closed-form over a px(b, x, y, v)
+# gray relation of 36x32 rasters: exact integer 4x4 cell sums, one bit
+# per horizontal neighbour comparison, packed big-endian into two
+# 32-bit BIGINT halves -> hashes(b, hash_hi, hash_lo).
+_DHASH_CTE = """
     cells AS (
-      SELECT i, x // 4 AS cx, y // 4 AS cy, CAST(sum(v) AS BIGINT) AS s
+      SELECT b, x // 4 AS cx, y // 4 AS cy, CAST(sum(v) AS BIGINT) AS s
       FROM px GROUP BY 1, 2, 3
     ),
     bits AS (
-      SELECT a.i, CASE WHEN a.s > b.s THEN 1 ELSE 0 END AS bit,
+      SELECT a.b, CASE WHEN a.s > c.s THEN 1 ELSE 0 END AS bit,
              a.cy * 8 + a.cx AS k
       FROM cells a
-      JOIN cells b ON a.i = b.i AND a.cy = b.cy AND b.cx = a.cx + 1
+      JOIN cells c ON a.b = c.b AND a.cy = c.cy AND c.cx = a.cx + 1
     ),
     hashes AS (
-      SELECT i,
+      SELECT b,
              CAST(sum(CASE WHEN k < 32
                   THEN bit * (CAST(1 AS BIGINT) << (31 - k)) ELSE 0 END)
                   AS BIGINT) AS hash_hi,
              CAST(sum(CASE WHEN k >= 32
                   THEN bit * (CAST(1 AS BIGINT) << (63 - k)) ELSE 0 END)
                   AS BIGINT) AS hash_lo
-      FROM bits GROUP BY i
+      FROM bits GROUP BY b
     )
 """
+
+# Shared by the two dHash queries: the 16 fixture rasters of
+# operators/multimodal.py:checked_dhash_df (ids i and i+8 share a base,
+# the second with one bumped cell), hashed per id (b = i).
+_DHASH_HASHES_CTE = (
+    """
+    px AS (
+      SELECT i AS b, x, y,
+             3 * (((x * (2 + (i % 8) % 5) + y * (3 + (i % 8) % 7)
+                    + 11 * (i % 8)) % 200)
+                  + CASE WHEN i >= 8 AND x // 4 = 2 AND y // 4 = 3
+                         THEN 50 ELSE 0 END) AS v
+      FROM generate_series(0, 15) g(i),
+           generate_series(0, 35) gx(x), generate_series(0, 31) gy(y)
+    ),"""
+    + _DHASH_CTE
+)
+
+# The four upright bases of operators/multimodal.py:
+# checked_oriented_dhash_df, hashed per base b; every stored orientation
+# of id i uprights to base 1 + (i // 8) % 4.
+_ORIENTED_DHASH_CTE = (
+    """
+    px AS (
+      SELECT b, x, y,
+             3 * ((x * (2 + b % 5) + y * (3 + b % 7) + 11 * b) % 200) AS v
+      FROM generate_series(1, 4) g(b),
+           generate_series(0, 35) gx(x), generate_series(0, 31) gy(y)
+    ),"""
+    + _DHASH_CTE
+)
 
 
 @register(
     "multimodal_image_dhash_checked",
     oracle=f"""
     WITH {_DHASH_HASHES_CTE}
-    SELECT i AS media_id, CAST(36 AS INTEGER) AS width,
+    SELECT b AS media_id, CAST(36 AS INTEGER) AS width,
            CAST(32 AS INTEGER) AS height, hash_hi, hash_lo,
            TRUE AS decode_ok
     FROM hashes
@@ -935,12 +964,12 @@ def multimodal_image_dhash_checked(spark: SparkSession, sf_dir: str) -> DataFram
     "multimodal_dhash_near_pairs_checked",
     oracle=f"""
     WITH {_DHASH_HASHES_CTE}
-    SELECT a.i AS i, b.i AS j,
-           CAST(bit_count(xor(a.hash_hi, b.hash_hi))
-                + bit_count(xor(a.hash_lo, b.hash_lo)) AS INTEGER) AS hamming
-    FROM hashes a JOIN hashes b ON a.i < b.i
-    WHERE bit_count(xor(a.hash_hi, b.hash_hi))
-          + bit_count(xor(a.hash_lo, b.hash_lo)) <= 3
+    SELECT a.b AS i, c.b AS j,
+           CAST(bit_count(xor(a.hash_hi, c.hash_hi))
+                + bit_count(xor(a.hash_lo, c.hash_lo)) AS INTEGER) AS hamming
+    FROM hashes a JOIN hashes c ON a.b < c.b
+    WHERE bit_count(xor(a.hash_hi, c.hash_hi))
+          + bit_count(xor(a.hash_lo, c.hash_lo)) <= 3
     """,
     doc=(
         "VALUE-CHECKED image near-dup pair join over dHash signatures, "
@@ -968,33 +997,8 @@ def multimodal_dhash_near_pairs_checked(spark: SparkSession, sf_dir: str) -> Dat
 
 @register(
     "multimodal_dhash_oriented_checked",
-    oracle="""
-    WITH px AS (
-      SELECT b, x, y,
-             3 * ((x * (2 + b % 5) + y * (3 + b % 7) + 11 * b) % 200) AS v
-      FROM generate_series(1, 4) g(b),
-           generate_series(0, 35) gx(x), generate_series(0, 31) gy(y)
-    ),
-    cells AS (
-      SELECT b, x // 4 AS cx, y // 4 AS cy, CAST(sum(v) AS BIGINT) AS s
-      FROM px GROUP BY 1, 2, 3
-    ),
-    bits AS (
-      SELECT a.b, CASE WHEN a.s > c.s THEN 1 ELSE 0 END AS bit,
-             a.cy * 8 + a.cx AS k
-      FROM cells a
-      JOIN cells c ON a.b = c.b AND a.cy = c.cy AND c.cx = a.cx + 1
-    ),
-    hashes AS (
-      SELECT b,
-             CAST(sum(CASE WHEN k < 32
-                  THEN bit * (CAST(1 AS BIGINT) << (31 - k)) ELSE 0 END)
-                  AS BIGINT) AS hash_hi,
-             CAST(sum(CASE WHEN k >= 32
-                  THEN bit * (CAST(1 AS BIGINT) << (63 - k)) ELSE 0 END)
-                  AS BIGINT) AS hash_lo
-      FROM bits GROUP BY b
-    ),
+    oracle=f"""
+    WITH {_ORIENTED_DHASH_CTE},
     ids AS (SELECT CAST(unnest(range(0, 33)) AS BIGINT) AS i)
     SELECT i AS media_id,
            CAST(CASE WHEN i = 32 THEN 1 ELSE 1 + i % 8 END AS INTEGER)
@@ -1033,33 +1037,8 @@ def multimodal_dhash_oriented_checked(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "multimodal_dhash_oriented_near_pairs_checked",
-    oracle="""
-    WITH px AS (
-      SELECT b, x, y,
-             3 * ((x * (2 + b % 5) + y * (3 + b % 7) + 11 * b) % 200) AS v
-      FROM generate_series(1, 4) g(b),
-           generate_series(0, 35) gx(x), generate_series(0, 31) gy(y)
-    ),
-    cells AS (
-      SELECT b, x // 4 AS cx, y // 4 AS cy, CAST(sum(v) AS BIGINT) AS s
-      FROM px GROUP BY 1, 2, 3
-    ),
-    bits AS (
-      SELECT a.b, CASE WHEN a.s > c.s THEN 1 ELSE 0 END AS bit,
-             a.cy * 8 + a.cx AS k
-      FROM cells a
-      JOIN cells c ON a.b = c.b AND a.cy = c.cy AND c.cx = a.cx + 1
-    ),
-    hashes AS (
-      SELECT b,
-             CAST(sum(CASE WHEN k < 32
-                  THEN bit * (CAST(1 AS BIGINT) << (31 - k)) ELSE 0 END)
-                  AS BIGINT) AS hash_hi,
-             CAST(sum(CASE WHEN k >= 32
-                  THEN bit * (CAST(1 AS BIGINT) << (63 - k)) ELSE 0 END)
-                  AS BIGINT) AS hash_lo
-      FROM bits GROUP BY b
-    ),
+    oracle=f"""
+    WITH {_ORIENTED_DHASH_CTE},
     imgs AS (
       SELECT g.i, h.hash_hi, h.hash_lo
       FROM generate_series(0, 32) g(i)
@@ -1103,33 +1082,8 @@ def multimodal_dhash_oriented_near_pairs_checked(
 
 @register(
     "multimodal_image_dedup_keep_list",
-    oracle="""
-    WITH RECURSIVE px AS (
-      SELECT b, x, y,
-             3 * ((x * (2 + b % 5) + y * (3 + b % 7) + 11 * b) % 200) AS v
-      FROM generate_series(1, 4) g(b),
-           generate_series(0, 35) gx(x), generate_series(0, 31) gy(y)
-    ),
-    cells AS (
-      SELECT b, x // 4 AS cx, y // 4 AS cy, CAST(sum(v) AS BIGINT) AS s
-      FROM px GROUP BY 1, 2, 3
-    ),
-    bits AS (
-      SELECT a.b, CASE WHEN a.s > c.s THEN 1 ELSE 0 END AS bit,
-             a.cy * 8 + a.cx AS k
-      FROM cells a
-      JOIN cells c ON a.b = c.b AND a.cy = c.cy AND c.cx = a.cx + 1
-    ),
-    hashes AS (
-      SELECT b,
-             CAST(sum(CASE WHEN k < 32
-                  THEN bit * (CAST(1 AS BIGINT) << (31 - k)) ELSE 0 END)
-                  AS BIGINT) AS hash_hi,
-             CAST(sum(CASE WHEN k >= 32
-                  THEN bit * (CAST(1 AS BIGINT) << (63 - k)) ELSE 0 END)
-                  AS BIGINT) AS hash_lo
-      FROM bits GROUP BY b
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_ORIENTED_DHASH_CTE},
     imgs AS (
       SELECT CAST(g.i AS BIGINT) AS i, h.hash_hi, h.hash_lo
       FROM generate_series(0, 32) g(i)
@@ -1499,35 +1453,22 @@ def multimodal_audio_dedup_keep_list(
     )
 
 
+def _admitted(batch: DataFrame, rejects: DataFrame) -> DataFrame:
+    """(media_id, admitted) for every batch row: rejected ids False."""
+    return (
+        batch.select("media_id")
+        .join(rejects.withColumn("rej", F.lit(True)), "media_id", "left")
+        .select(
+            "media_id",
+            F.coalesce(~F.col("rej"), F.lit(True)).alias("admitted"),
+        )
+    )
+
+
 @register(
     "media_ingest_admission_twin",
-    oracle="""
-    WITH px AS (
-      SELECT b, x, y,
-             3 * ((x * (2 + b % 5) + y * (3 + b % 7) + 11 * b) % 200) AS v
-      FROM generate_series(1, 4) g(b),
-           generate_series(0, 35) gx(x), generate_series(0, 31) gy(y)
-    ),
-    cells AS (
-      SELECT b, x // 4 AS cx, y // 4 AS cy, CAST(sum(v) AS BIGINT) AS s
-      FROM px GROUP BY 1, 2, 3
-    ),
-    bits AS (
-      SELECT a.b, CASE WHEN a.s > c.s THEN 1 ELSE 0 END AS bit,
-             a.cy * 8 + a.cx AS k
-      FROM cells a
-      JOIN cells c ON a.b = c.b AND a.cy = c.cy AND c.cx = a.cx + 1
-    ),
-    hashes AS (
-      SELECT b,
-             CAST(sum(CASE WHEN k < 32
-                  THEN bit * (CAST(1 AS BIGINT) << (31 - k)) ELSE 0 END)
-                  AS BIGINT) AS hash_hi,
-             CAST(sum(CASE WHEN k >= 32
-                  THEN bit * (CAST(1 AS BIGINT) << (63 - k)) ELSE 0 END)
-                  AS BIGINT) AS hash_lo
-      FROM bits GROUP BY b
-    ),
+    oracle=f"""
+    WITH {_ORIENTED_DHASH_CTE},
     ids(i, wave) AS (VALUES (0, 'store'), (8, 'store'), (5, 'batch'),
                             (13, 'batch'), (18, 'batch'), (19, 'batch'),
                             (26, 'batch')),
@@ -1590,14 +1531,7 @@ def media_ingest_admission_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         stored_bands,
         dhash_bands(image_dhash_oriented(batch)).localCheckpoint(eager=False),
     )
-    return (
-        batch.select("media_id")
-        .join(rejects.withColumn("rej", F.lit(True)), "media_id", "left")
-        .select(
-            "media_id",
-            F.coalesce(~F.col("rej"), F.lit(True)).alias("admitted"),
-        )
-    )
+    return _admitted(batch, rejects)
 
 
 @register(
@@ -1607,30 +1541,10 @@ def media_ingest_admission_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT g.i, q.hash_hi, q.hash_lo
       FROM (VALUES (0), (5), (18), (19)) g(i)
       JOIN (
-        WITH px AS (
-          SELECT b, x, y,
-                 3 * ((x * (2 + b % 5) + y * (3 + b % 7) + 11 * b) % 200) AS v
-          FROM generate_series(1, 4) gb(b),
-               generate_series(0, 35) gx(x), generate_series(0, 31) gy(y)
-        ),
-        cells AS (
-          SELECT b, x // 4 AS cx, y // 4 AS cy, CAST(sum(v) AS BIGINT) AS s
-          FROM px GROUP BY 1, 2, 3
-        ),
-        bits AS (
-          SELECT a.b, CASE WHEN a.s > c.s THEN 1 ELSE 0 END AS bit,
-                 a.cy * 8 + a.cx AS k
-          FROM cells a
-          JOIN cells c ON a.b = c.b AND a.cy = c.cy AND c.cx = a.cx + 1
-        )
-        SELECT b,
-               CAST(sum(CASE WHEN k < 32
-                    THEN bit * (CAST(1 AS BIGINT) << (31 - k)) ELSE 0 END)
-                    AS BIGINT) AS hash_hi,
-               CAST(sum(CASE WHEN k >= 32
-                    THEN bit * (CAST(1 AS BIGINT) << (63 - k)) ELSE 0 END)
-                    AS BIGINT) AS hash_lo
-        FROM bits GROUP BY b
+        WITH """
+    + _ORIENTED_DHASH_CTE
+    + """
+        SELECT b, hash_hi, hash_lo FROM hashes
       ) q ON q.b = 1 + (g.i // 8) % 4
     ),
     vids AS (
@@ -1739,19 +1653,94 @@ def any_media_ingest_admission_twin(
         _any_bands(media_signatures(batch)).localCheckpoint(eager=False),
         keys=_ANY_KEYS,
     )
-    return (
-        batch.select("media_id")
-        .join(rejects.withColumn("rej", F.lit(True)), "media_id", "left")
-        .select(
-            "media_id",
-            F.coalesce(~F.col("rej"), F.lit(True)).alias("admitted"),
-        )
-    )
+    return _admitted(batch, rejects)
 
 
 # DuckDB twin of operators.dedup._h60(gram, seed=0), shared with the
 # text winnow oracles (queries/curation_ext.py).
 _VH60_SQL = "('0x' || substr(md5('0:' || {g}), 1, 15))::BIGINT"
+
+# The exploded (media_id, fp) rows of a winnowing CTE's `win` relation.
+_WIN_FPS = "win, unnest(fps) AS t(fp)"
+
+
+def _containment_pairs(fps: DataFrame) -> DataFrame:
+    """winnow_containment_pairs at 0.5 over a (media_id, fp) relation.
+
+    Lazy stage boundary (the r8 strip->span lesson): the containment
+    join fans the fingerprint relation out four ways (both join sides +
+    both count sides), and without the cut each branch would re-run the
+    mapInPandas DECODE, the one genuinely expensive stage. The
+    checkpoint materializes the fingerprints once, at first execution,
+    inside any timer."""
+    from hridaya_steam_market_tracker_spark.operators.dedup import (
+        winnow_containment_pairs,
+    )
+
+    return winnow_containment_pairs(
+        fps.localCheckpoint(eager=False), id_col="media_id", min_containment=0.5
+    )
+
+
+def _excerpt_twin(spark, parts, stored, batch, **planes) -> DataFrame:
+    """Batch twin of the excerpt/crop admission gate: the LITERAL
+    streaming decision (`media_excerpt_rejects` over `media_winnow_fps`
+    with the gate's `planes` options) at tau 0.8. ``parts`` are
+    (id offset, fixture builder) pairs, unioned in order with each
+    fixture's media_id shifted by its offset; ``stored`` / ``batch``
+    name the two waves by shifted id.
+
+    Lazy boundaries (round 13): one on the fixture union, because every
+    decode plane and the final id join scan it and each scan would
+    otherwise re-run every fixture generator; one on each fps relation,
+    because the decision fans it out ~4 ways (population, evidence,
+    denominator) and each reference would otherwise re-run the decode
+    planes and the winnow. Each payload is decoded once, at first
+    execution. The streaming gate gets the same effect from its
+    persist() on batch_wfps."""
+    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
+        media_excerpt_rejects,
+    )
+    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
+        media_winnow_fps,
+    )
+
+    mixed = reduce(
+        DataFrame.unionByName,
+        (
+            fixture(spark).withColumn("media_id", F.col("media_id") + offset)
+            for offset, fixture in parts
+        ),
+    ).localCheckpoint(eager=False)
+    batch_df = mixed.filter(F.col("media_id").isin(list(batch)))
+    rejects = media_excerpt_rejects(
+        media_winnow_fps(
+            mixed.filter(F.col("media_id").isin(list(stored))), **planes
+        ).localCheckpoint(eager=False),
+        media_winnow_fps(batch_df, **planes).localCheckpoint(eager=False),
+        0.8,
+    )
+    return _admitted(batch_df, rejects)
+
+
+def _excerpt_twin_oracle(planes, stored, batch) -> str:
+    """DuckDB restatement of an excerpt twin: every (id offset, plane,
+    fixture CTE, fps relation) plane contributes the fingerprints its
+    fixture CTE recomputes bit-for-bit (the same CTEs that oracle the
+    fingerprint and pair queries), shifted by its offset, and
+    admission_sql states the decision over the stored/batch waves."""
+    allf = "\n      UNION ALL\n      ".join(
+        f"SELECT media_id + {offset} AS media_id, '{plane}' AS plane, fp\n"
+        f"      FROM (WITH {cte}\n            SELECT media_id, fp FROM {rel})"
+        for offset, plane, cte, rel in planes
+    )
+    return f"\n    WITH allf AS (\n      {allf}\n    )" + admission_sql(
+        "allf",
+        "media_id",
+        "VALUES " + ", ".join(f"({i})" for i in stored),
+        "VALUES " + ", ".join(f"({i})" for i in batch),
+    )
+
 
 _VIDEO_CLIP_WINNOW_CTE = f"""
     vals AS (
@@ -1819,23 +1808,8 @@ def multimodal_video_clip_fingerprints(
     oracle="WITH "
     + _VIDEO_CLIP_WINNOW_CTE
     + """,
-    fps AS (SELECT media_id, fp FROM win, unnest(fps) AS t(fp)),
-    cnt AS (SELECT media_id, count(*) AS n FROM fps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM fps
-           WHERE fp IN (SELECT fp FROM fps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT CAST(sh.i AS BIGINT) AS i, CAST(sh.j AS BIGINT) AS j,
-           CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    fps AS (SELECT media_id, fp FROM win, unnest(fps) AS t(fp))"""
+    + containment_pairs_sql("fps", "media_id"),
     doc=(
         "VIDEO SUBCLIP detection, value-checked end to end: a 30-frame "
         "clip embedded inside each 80-frame base surfaces through the "
@@ -1853,7 +1827,6 @@ def multimodal_video_subclip_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
         winnow_fingerprints,
     )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
@@ -1862,17 +1835,8 @@ def multimodal_video_subclip_pairs(
     )
 
     toks = video_frame_token_text(checked_video_clip_df(spark))
-    # Lazy stage boundary (the r8 strip->span lesson): the containment
-    # join fans the fingerprint relation out four ways (both join
-    # sides + both count sides), and without the cut each branch would
-    # re-run the mapInPandas DECODE — the one genuinely expensive
-    # stage. The checkpoint materializes fingerprints once, at first
-    # execution, inside any timer.
-    fps = winnow_fingerprints(
-        toks, id_col="media_id", k=3, w=4
-    ).localCheckpoint(eager=False)
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
+    return _containment_pairs(
+        winnow_fingerprints(toks, id_col="media_id", k=3, w=4)
     )
 
 
@@ -1979,23 +1943,8 @@ def multimodal_audio_clip_fingerprints(
     oracle="WITH "
     + _AUDIO_CLIP_WINNOW_CTE
     + """,
-    fps AS (SELECT media_id, fp FROM win, unnest(fps) AS t(fp)),
-    cnt AS (SELECT media_id, count(*) AS n FROM fps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM fps
-           WHERE fp IN (SELECT fp FROM fps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT CAST(sh.i AS BIGINT) AS i, CAST(sh.j AS BIGINT) AS j,
-           CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    fps AS (SELECT media_id, fp FROM win, unnest(fps) AS t(fp))"""
+    + containment_pairs_sql("fps", "media_id"),
     doc=(
         "AUDIO EXCERPT detection, value-checked end to end: a 12-window "
         "excerpt cut window-aligned from each 32-window host surfaces "
@@ -2011,7 +1960,6 @@ def multimodal_audio_excerpt_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
         winnow_fingerprints,
     )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
@@ -2020,11 +1968,8 @@ def multimodal_audio_excerpt_pairs(
     )
 
     toks = audio_window_token_text(checked_audio_clip_df(spark))
-    fps = winnow_fingerprints(
-        toks, id_col="media_id", k=3, w=4
-    ).localCheckpoint(eager=False)
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
+    return _containment_pairs(
+        winnow_fingerprints(toks, id_col="media_id", k=3, w=4)
     )
 
 
@@ -2149,23 +2094,7 @@ def multimodal_audio_offset_clip_fingerprints(
     "multimodal_audio_offset_excerpt_pairs",
     oracle="WITH "
     + _AUDIO_OFFSET_CLIP_CTE
-    + """,
-    cnt AS (SELECT media_id, count(*) AS n FROM afps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM afps
-           WHERE fp IN (SELECT fp FROM afps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT CAST(sh.i AS BIGINT) AS i, CAST(sh.j AS BIGINT) AS j,
-           CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    + containment_pairs_sql("afps", "media_id"),
     doc=(
         "NON-ALIGNED audio excerpt containment, value-checked end to "
         "end — the audio member of the round-11 blind-spot shrink: an "
@@ -2183,7 +2112,6 @@ def multimodal_audio_offset_excerpt_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
         winnow_fingerprints,
     )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
@@ -2194,13 +2122,9 @@ def multimodal_audio_offset_excerpt_pairs(
     toks = audio_window_token_text(
         checked_audio_offset_clip_df(spark), phases=2
     )
-    fps = (
+    return _containment_pairs(
         winnow_fingerprints(toks, id_col="media_id", k=3, w=4)
         .dropDuplicates(["media_id", "fp"])
-        .localCheckpoint(eager=False)
-    )
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
     )
 
 
@@ -2278,22 +2202,7 @@ def multimodal_image_tile_fingerprints(
     "multimodal_image_crop_pairs",
     oracle="WITH "
     + _IMAGE_CROP_TILE_CTE
-    + """,
-    cnt AS (SELECT media_id, count(*) AS n FROM ifps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM ifps
-           WHERE fp IN (SELECT fp FROM ifps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT sh.i, sh.j, CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    + containment_pairs_sql("ifps", "media_id"),
     doc=(
         "CROPPED-IMAGE containment, value-checked end to end: a 32x24 "
         "tile-aligned crop planted inside each 64x48 base surfaces "
@@ -2312,22 +2221,13 @@ def multimodal_image_tile_fingerprints(
 def multimodal_image_crop_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         checked_image_crop_df,
         image_tile_fingerprints,
     )
 
-    # Lazy stage boundary (the subclip-pairs lesson): the containment
-    # join fans the fingerprint relation out four ways; the checkpoint
-    # materializes the decode-stage fingerprints once.
-    fps = image_tile_fingerprints(checked_image_crop_df(spark)).localCheckpoint(
-        eager=False
-    )
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
+    return _containment_pairs(
+        image_tile_fingerprints(checked_image_crop_df(spark))
     )
 
 
@@ -2411,22 +2311,7 @@ def multimodal_image_offset_tile_fingerprints(
     "multimodal_image_offset_crop_pairs",
     oracle="WITH "
     + _IMAGE_OFFSET_CROP_CTE
-    + """,
-    cnt AS (SELECT media_id, count(*) AS n FROM ifps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM ifps
-           WHERE fp IN (SELECT fp FROM ifps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT sh.i, sh.j, CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    + containment_pairs_sql("ifps", "media_id"),
     doc=(
         "NON-ALIGNED cropped-image containment, value-checked end to "
         "end — the round-11 blind-spot shrink: a 32x24 crop at offset "
@@ -2443,22 +2328,13 @@ def multimodal_image_offset_tile_fingerprints(
 def multimodal_image_offset_crop_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         checked_image_offset_crop_df,
         image_tile_fingerprints,
     )
 
-    # Lazy stage boundary (the subclip-pairs lesson): the containment
-    # join fans the fingerprint relation out four ways; the checkpoint
-    # materializes the decode-stage fingerprints once.
-    fps = image_tile_fingerprints(
-        checked_image_offset_crop_df(spark), phases=2
-    ).localCheckpoint(eager=False)
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
+    return _containment_pairs(
+        image_tile_fingerprints(checked_image_offset_crop_df(spark), phases=2)
     )
 
 
@@ -2560,22 +2436,7 @@ def multimodal_image_cdt_anchors_checked(
     "multimodal_image_cdt_crop_pairs",
     oracle="WITH "
     + _IMAGE_CDT_CTE
-    + """,
-    cnt AS (SELECT media_id, count(*) AS n FROM cfps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM cfps
-           WHERE fp IN (SELECT fp FROM cfps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT sh.i, sh.j, CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    + containment_pairs_sql("cfps", "media_id"),
     doc=(
         "ARBITRARY-OFFSET cropped-image containment, value-checked end "
         "to end — the round-12 close of the last admitted duplicate "
@@ -2594,22 +2455,13 @@ def multimodal_image_cdt_anchors_checked(
 def multimodal_image_cdt_crop_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         checked_image_cdt_crop_df,
         image_cdt_fingerprints,
     )
 
-    # Lazy stage boundary (the subclip-pairs lesson): the containment
-    # join fans the fingerprint relation out four ways; the checkpoint
-    # materializes the decode-stage fingerprints once.
-    fps = image_cdt_fingerprints(
-        checked_image_cdt_crop_df(spark)
-    ).localCheckpoint(eager=False)
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
+    return _containment_pairs(
+        image_cdt_fingerprints(checked_image_cdt_crop_df(spark))
     )
 
 
@@ -2697,22 +2549,7 @@ def multimodal_audio_cdt_anchors_checked(
     "multimodal_audio_cdt_excerpt_pairs",
     oracle="WITH "
     + _AUDIO_CDT_CTE
-    + """,
-    cnt AS (SELECT media_id, count(*) AS n FROM afps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM afps
-           WHERE fp IN (SELECT fp FROM afps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT sh.i, sh.j, CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    + containment_pairs_sql("afps", "media_id"),
     doc=(
         "ARBITRARY-OFFSET audio excerpt containment, value-checked end "
         "to end — the 1-D close of the round-12 offset-independence "
@@ -2729,22 +2566,13 @@ def multimodal_audio_cdt_anchors_checked(
 def multimodal_audio_cdt_excerpt_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         audio_cdt_fingerprints,
         checked_audio_cdt_excerpt_df,
     )
 
-    # Lazy stage boundary (the subclip-pairs lesson): the containment
-    # join fans the fingerprint relation out four ways; the checkpoint
-    # materializes the decode-stage fingerprints once.
-    fps = audio_cdt_fingerprints(
-        checked_audio_cdt_excerpt_df(spark)
-    ).localCheckpoint(eager=False)
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
+    return _containment_pairs(
+        audio_cdt_fingerprints(checked_audio_cdt_excerpt_df(spark))
     )
 
 
@@ -2919,23 +2747,7 @@ def multimodal_image_cdt_density_checked(
     "multimodal_image_hybrid_crop_pairs",
     oracle="WITH "
     + _IMAGE_HYBRID_CTE
-    + """,
-    cnt AS (SELECT media_id, count(*) AS n FROM hfps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM hfps
-           WHERE fp IN (SELECT fp FROM hfps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT CAST(sh.i AS BIGINT) AS i, CAST(sh.j AS BIGINT) AS j,
-           CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    + containment_pairs_sql("hfps", "media_id"),
     doc=(
         "HYBRID-plane cropped-image containment, value-checked end to "
         "end (round 13): the content host/off-lattice-crop pair "
@@ -2954,21 +2766,13 @@ def multimodal_image_cdt_density_checked(
 def multimodal_image_hybrid_crop_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         checked_image_hybrid_df,
         image_hybrid_fingerprints,
     )
 
-    # Lazy stage boundary (the subclip-pairs lesson): the containment
-    # join fans the fingerprint relation out four ways.
-    fps = image_hybrid_fingerprints(
-        checked_image_hybrid_df(spark)
-    ).localCheckpoint(eager=False)
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
+    return _containment_pairs(
+        image_hybrid_fingerprints(checked_image_hybrid_df(spark))
     )
 
 
@@ -3014,24 +2818,7 @@ def multimodal_audio_cdt_density_checked(
     "multimodal_audio_hybrid_excerpt_pairs",
     oracle="WITH "
     + _AUDIO_HYBRID_CTE
-    + """,
-    pfps AS (SELECT media_id, fp FROM ahfps),
-    cnt AS (SELECT media_id, count(*) AS n FROM pfps GROUP BY media_id),
-    pr AS (SELECT media_id, fp FROM pfps
-           WHERE fp IN (SELECT fp FROM pfps GROUP BY fp
-                        HAVING count(*) <= 50)),
-    sh AS (SELECT a.media_id AS i, b.media_id AS j,
-                  count(*) AS n_shared
-           FROM pr a JOIN pr b ON a.fp = b.fp AND a.media_id < b.media_id
-           GROUP BY 1, 2)
-    SELECT CAST(sh.i AS BIGINT) AS i, CAST(sh.j AS BIGINT) AS j,
-           CAST(n_shared AS BIGINT) AS n_shared,
-           round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6)
-             AS containment
-    FROM sh JOIN cnt ci ON ci.media_id = sh.i
-            JOIN cnt cj ON cj.media_id = sh.j
-    WHERE round(n_shared / CAST(least(ci.n, cj.n) AS DOUBLE), 6) >= 0.5
-    """,
+    + containment_pairs_sql("ahfps", "media_id"),
     doc=(
         "HYBRID-plane audio excerpt containment, value-checked end to "
         "end: the content host/off-lattice-excerpt pair at exactly "
@@ -3048,19 +2835,15 @@ def multimodal_audio_cdt_density_checked(
 def multimodal_audio_hybrid_excerpt_pairs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.dedup import (
-        winnow_containment_pairs,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         audio_hybrid_fingerprints,
         checked_audio_hybrid_df,
     )
 
-    fps = audio_hybrid_fingerprints(
-        checked_audio_hybrid_df(spark).filter(F.col("media_id") != 4)
-    ).localCheckpoint(eager=False)
-    return winnow_containment_pairs(
-        fps, id_col="media_id", min_containment=0.5
+    return _containment_pairs(
+        audio_hybrid_fingerprints(
+            checked_audio_hybrid_df(spark).filter(F.col("media_id") != 4)
+        )
     )
 
 
@@ -3070,66 +2853,16 @@ _HYBRID_TWIN_BATCH = (
 )
 
 
-def _hybrid_twin_oracle() -> str:
-    """DuckDB restatement of the `media_excerpt_rejects` decision over
-    the HYBRID fingerprint relations of the low-entropy fixtures —
-    proving the round-13 gate rule end to end: the content crop and
-    excerpt reject through CDT anchors exactly as in cdt mode, the
-    gradient TILE-ALIGNED crop and the silence WINDOW-ALIGNED excerpt
-    — both ADMITTED by pure cdt mode (zero anchors) — reject through
-    the per-item fallback planes, the gradient OFF-lattice crop is
-    admitted (the stated residual), and blobs/unrelated hosts admit.
-    Same decision SQL as `_cdt_twin_oracle`."""
-    stored = ", ".join(f"({i})" for i in _HYBRID_TWIN_STORED)
-    batch = ", ".join(f"({i})" for i in _HYBRID_TWIN_BATCH)
-    return f"""
-    WITH a2fps AS (
-      SELECT media_id + 2000 AS media_id, 'audio' AS plane, fp
-      FROM (WITH {_AUDIO_HYBRID_CTE}
-            SELECT media_id, fp FROM ahfps)
-    ),
-    i2fps AS (
-      SELECT media_id + 3000 AS media_id, 'image' AS plane, fp
-      FROM (WITH {_IMAGE_HYBRID_CTE}
-            SELECT media_id, fp FROM hfps)
-    ),
-    allf AS (SELECT * FROM a2fps UNION ALL SELECT * FROM i2fps),
-    stored(sid) AS (VALUES {stored}),
-    batch(bid) AS (VALUES {batch}),
-    pop AS (SELECT plane, fp FROM allf
-            WHERE media_id IN (SELECT sid FROM stored)
-               OR media_id IN (SELECT bid FROM batch)),
-    rare AS (SELECT plane, fp FROM pop GROUP BY 1, 2
-             HAVING count(*) <= 50),
-    bf AS (SELECT media_id, plane, fp FROM allf
-           WHERE media_id IN (SELECT bid FROM batch)),
-    nfp AS (SELECT media_id, count(*) AS n FROM bf GROUP BY 1),
-    bfp AS (SELECT bf.* FROM bf JOIN rare USING (plane, fp)),
-    sfpp AS (SELECT a.media_id, a.plane, a.fp FROM allf a
-             JOIN rare USING (plane, fp)
-             WHERE a.media_id IN (SELECT sid FROM stored)),
-    sh AS (
-      SELECT b.media_id AS j, b.fp
-      FROM bfp b
-      JOIN (SELECT * FROM sfpp UNION ALL SELECT * FROM bfp) a
-        ON a.plane = b.plane AND a.fp = b.fp
-      WHERE a.media_id IN (SELECT sid FROM stored)
-         OR a.media_id < b.media_id
-      GROUP BY 1, 2
-    ),
-    ns AS (SELECT j, count(*) AS n_shared FROM sh GROUP BY 1)
-    SELECT CAST(bid AS BIGINT) AS media_id,
-           coalesce(ns.n_shared / CAST(nfp.n AS DOUBLE) < 0.8, TRUE)
-             AS admitted
-    FROM batch
-    LEFT JOIN nfp ON nfp.media_id = bid
-    LEFT JOIN ns ON ns.j = bid
-    """
-
-
 @register(
     "media_hybrid_admission_twin",
-    oracle=_hybrid_twin_oracle(),
+    oracle=_excerpt_twin_oracle(
+        (
+            (2000, "audio", _AUDIO_HYBRID_CTE, "ahfps"),
+            (3000, "image", _IMAGE_HYBRID_CTE, "hfps"),
+        ),
+        _HYBRID_TWIN_STORED,
+        _HYBRID_TWIN_BATCH,
+    ),
     doc=(
         "The HYBRID low-entropy admission DECISION, value-checked end "
         "to end (round 13 — the verdict's planted-fixture ask): the "
@@ -3153,44 +2886,14 @@ def media_hybrid_admission_twin(
         checked_audio_hybrid_df,
         checked_image_hybrid_df,
     )
-    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
-        media_excerpt_rejects,
-    )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
-        media_winnow_fps,
-    )
 
-    aud = checked_audio_hybrid_df(spark).withColumn(
-        "media_id", F.col("media_id") + 2000
-    )
-    img = checked_image_hybrid_df(spark).withColumn(
-        "media_id", F.col("media_id") + 3000
-    )
-    mixed = aud.unionByName(img)
-    # One fixture synthesis for the whole twin (round 13): every
-    # decode plane and the final id join scan this union, so without
-    # a boundary each scan re-ran all the fixture generators.
-    mixed = mixed.localCheckpoint(eager=False)
-    stored = mixed.filter(
-        F.col("media_id").isin(list(_HYBRID_TWIN_STORED))
-    )
-    batch = mixed.filter(F.col("media_id").isin(list(_HYBRID_TWIN_BATCH)))
-    rejects = media_excerpt_rejects(
-        media_winnow_fps(
-            stored, image_plane="hybrid", audio_plane="hybrid"
-        ).localCheckpoint(eager=False),
-        media_winnow_fps(
-            batch, image_plane="hybrid", audio_plane="hybrid"
-        ).localCheckpoint(eager=False),
-        0.8,
-    )
-    return (
-        batch.select("media_id")
-        .join(rejects.withColumn("rej", F.lit(True)), "media_id", "left")
-        .select(
-            "media_id",
-            F.coalesce(~F.col("rej"), F.lit(True)).alias("admitted"),
-        )
+    return _excerpt_twin(
+        spark,
+        ((2000, checked_audio_hybrid_df), (3000, checked_image_hybrid_df)),
+        _HYBRID_TWIN_STORED,
+        _HYBRID_TWIN_BATCH,
+        image_plane="hybrid",
+        audio_plane="hybrid",
     )
 
 
@@ -3359,70 +3062,17 @@ _EXCERPT_TWIN_BATCH = (
 )
 
 
-def _excerpt_twin_oracle() -> str:
-    """DuckDB restatement of the FULL `media_excerpt_rejects` decision
-    over the three clip/crop fixtures: per-plane content fingerprints
-    (winnowing hashes / tile tokens, each recomputed bit-for-bit by
-    the same CTEs that oracle the fingerprint queries), the df<=50
-    boilerplate prune over the stored+batch population, the UNPRUNED
-    batch-side denominator, stored + lower-id-batch evidence
-    (leader-keeps), distinct-fp counting, and the >= tau threshold."""
-    stored = ", ".join(f"({i})" for i in _EXCERPT_TWIN_STORED)
-    batch = ", ".join(f"({i})" for i in _EXCERPT_TWIN_BATCH)
-    return f"""
-    WITH vfps AS (
-      SELECT media_id + 1000 AS media_id, 'video' AS plane, fp
-      FROM (WITH {_VIDEO_CLIP_WINNOW_CTE}
-            SELECT media_id, fp FROM win, unnest(fps) AS t(fp))
-    ),
-    afps AS (
-      SELECT media_id + 2000 AS media_id, 'audio' AS plane, fp
-      FROM (WITH {_AUDIO_CLIP_WINNOW_CTE}
-            SELECT media_id, fp FROM win, unnest(fps) AS t(fp))
-    ),
-    imfps AS (
-      SELECT media_id + 3000 AS media_id, 'image' AS plane, fp
-      FROM (WITH {_IMAGE_CROP_TILE_CTE}
-            SELECT media_id, fp FROM ifps)
-    ),
-    allf AS (SELECT * FROM vfps UNION ALL SELECT * FROM afps
-             UNION ALL SELECT * FROM imfps),
-    stored(sid) AS (VALUES {stored}),
-    batch(bid) AS (VALUES {batch}),
-    pop AS (SELECT plane, fp FROM allf
-            WHERE media_id IN (SELECT sid FROM stored)
-               OR media_id IN (SELECT bid FROM batch)),
-    rare AS (SELECT plane, fp FROM pop GROUP BY 1, 2
-             HAVING count(*) <= 50),
-    bf AS (SELECT media_id, plane, fp FROM allf
-           WHERE media_id IN (SELECT bid FROM batch)),
-    nfp AS (SELECT media_id, count(*) AS n FROM bf GROUP BY 1),
-    bfp AS (SELECT bf.* FROM bf JOIN rare USING (plane, fp)),
-    sfpp AS (SELECT a.media_id, a.plane, a.fp FROM allf a
-             JOIN rare USING (plane, fp)
-             WHERE a.media_id IN (SELECT sid FROM stored)),
-    sh AS (
-      SELECT b.media_id AS j, b.fp
-      FROM bfp b
-      JOIN (SELECT * FROM sfpp UNION ALL SELECT * FROM bfp) a
-        ON a.plane = b.plane AND a.fp = b.fp
-      WHERE a.media_id IN (SELECT sid FROM stored)
-         OR a.media_id < b.media_id
-      GROUP BY 1, 2
-    ),
-    ns AS (SELECT j, count(*) AS n_shared FROM sh GROUP BY 1)
-    SELECT CAST(bid AS BIGINT) AS media_id,
-           coalesce(ns.n_shared / CAST(nfp.n AS DOUBLE) < 0.8, TRUE)
-             AS admitted
-    FROM batch
-    LEFT JOIN nfp ON nfp.media_id = bid
-    LEFT JOIN ns ON ns.j = bid
-    """
-
-
 @register(
     "media_excerpt_admission_twin",
-    oracle=_excerpt_twin_oracle(),
+    oracle=_excerpt_twin_oracle(
+        (
+            (1000, "video", _VIDEO_CLIP_WINNOW_CTE, _WIN_FPS),
+            (2000, "audio", _AUDIO_CLIP_WINNOW_CTE, _WIN_FPS),
+            (3000, "image", _IMAGE_CROP_TILE_CTE, "ifps"),
+        ),
+        _EXCERPT_TWIN_STORED,
+        _EXCERPT_TWIN_BATCH,
+    ),
     doc=(
         "The excerpt/crop admission DECISION, value-checked end to "
         "end: the LITERAL streaming decision function "
@@ -3451,49 +3101,16 @@ def media_excerpt_admission_twin(
         checked_image_crop_df,
         checked_video_clip_df,
     )
-    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
-        media_excerpt_rejects,
-    )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
-        media_winnow_fps,
-    )
 
-    vid = checked_video_clip_df(spark).withColumn(
-        "media_id", F.col("media_id") + 1000
-    )
-    aud = checked_audio_clip_df(spark).withColumn(
-        "media_id", F.col("media_id") + 2000
-    )
-    img = checked_image_crop_df(spark).withColumn(
-        "media_id", F.col("media_id") + 3000
-    )
-    mixed = vid.unionByName(aud).unionByName(img)
-    # One fixture synthesis for the whole twin (round 13): every
-    # decode plane and the final id join scan this union, so without
-    # a boundary each scan re-ran all the fixture generators.
-    mixed = mixed.localCheckpoint(eager=False)
-    stored = mixed.filter(
-        F.col("media_id").isin(list(_EXCERPT_TWIN_STORED))
-    )
-    batch = mixed.filter(F.col("media_id").isin(list(_EXCERPT_TWIN_BATCH)))
-    # Lazy fps-stage boundaries (the subclip-pairs lesson, round 13 —
-    # the phase/cdt siblings already had them): the decision fans each
-    # fps relation out ~4 ways (population, evidence, denominator), and
-    # WITHOUT the checkpoints every reference re-ran the whole fixture
-    # synthesis + three decode planes + winnow. The checkpoints decode
-    # each payload once at first execution.
-    rejects = media_excerpt_rejects(
-        media_winnow_fps(stored).localCheckpoint(eager=False),
-        media_winnow_fps(batch).localCheckpoint(eager=False),
-        0.8,
-    )
-    return (
-        batch.select("media_id")
-        .join(rejects.withColumn("rej", F.lit(True)), "media_id", "left")
-        .select(
-            "media_id",
-            F.coalesce(~F.col("rej"), F.lit(True)).alias("admitted"),
-        )
+    return _excerpt_twin(
+        spark,
+        (
+            (1000, checked_video_clip_df),
+            (2000, checked_audio_clip_df),
+            (3000, checked_image_crop_df),
+        ),
+        _EXCERPT_TWIN_STORED,
+        _EXCERPT_TWIN_BATCH,
     )
 
 
@@ -3501,66 +3118,16 @@ _PHASE_TWIN_STORED = (2000, 3000)
 _PHASE_TWIN_BATCH = (2001, 2002, 2008, 3001, 3002, 3004, 3005, 3008)
 
 
-def _phase_twin_oracle() -> str:
-    """DuckDB restatement of the `media_excerpt_rejects` decision over
-    the PHASED (phases=2) fingerprint relations of the round-11
-    offset fixtures — the gate twin proving the NON-aligned crop /
-    excerpt classes are rejected by the literal streaming decision
-    function, not just surfaced by the batch pair queries. Same
-    decision SQL as `_excerpt_twin_oracle` (df<=50 prune, unpruned
-    denominator, stored + lower-id leader-keeps, distinct fps,
-    >= tau); the fingerprints come from the phase-shifted CTEs that
-    oracle the offset fingerprint queries bit-for-bit."""
-    stored = ", ".join(f"({i})" for i in _PHASE_TWIN_STORED)
-    batch = ", ".join(f"({i})" for i in _PHASE_TWIN_BATCH)
-    return f"""
-    WITH a2fps AS (
-      SELECT media_id + 2000 AS media_id, 'audio' AS plane, fp
-      FROM (WITH {_AUDIO_OFFSET_CLIP_CTE}
-            SELECT media_id, fp FROM afps)
-    ),
-    i2fps AS (
-      SELECT media_id + 3000 AS media_id, 'image' AS plane, fp
-      FROM (WITH {_IMAGE_OFFSET_CROP_CTE}
-            SELECT media_id, fp FROM ifps)
-    ),
-    allf AS (SELECT * FROM a2fps UNION ALL SELECT * FROM i2fps),
-    stored(sid) AS (VALUES {stored}),
-    batch(bid) AS (VALUES {batch}),
-    pop AS (SELECT plane, fp FROM allf
-            WHERE media_id IN (SELECT sid FROM stored)
-               OR media_id IN (SELECT bid FROM batch)),
-    rare AS (SELECT plane, fp FROM pop GROUP BY 1, 2
-             HAVING count(*) <= 50),
-    bf AS (SELECT media_id, plane, fp FROM allf
-           WHERE media_id IN (SELECT bid FROM batch)),
-    nfp AS (SELECT media_id, count(*) AS n FROM bf GROUP BY 1),
-    bfp AS (SELECT bf.* FROM bf JOIN rare USING (plane, fp)),
-    sfpp AS (SELECT a.media_id, a.plane, a.fp FROM allf a
-             JOIN rare USING (plane, fp)
-             WHERE a.media_id IN (SELECT sid FROM stored)),
-    sh AS (
-      SELECT b.media_id AS j, b.fp
-      FROM bfp b
-      JOIN (SELECT * FROM sfpp UNION ALL SELECT * FROM bfp) a
-        ON a.plane = b.plane AND a.fp = b.fp
-      WHERE a.media_id IN (SELECT sid FROM stored)
-         OR a.media_id < b.media_id
-      GROUP BY 1, 2
-    ),
-    ns AS (SELECT j, count(*) AS n_shared FROM sh GROUP BY 1)
-    SELECT CAST(bid AS BIGINT) AS media_id,
-           coalesce(ns.n_shared / CAST(nfp.n AS DOUBLE) < 0.8, TRUE)
-             AS admitted
-    FROM batch
-    LEFT JOIN nfp ON nfp.media_id = bid
-    LEFT JOIN ns ON ns.j = bid
-    """
-
-
 @register(
     "media_phase_excerpt_admission_twin",
-    oracle=_phase_twin_oracle(),
+    oracle=_excerpt_twin_oracle(
+        (
+            (2000, "audio", _AUDIO_OFFSET_CLIP_CTE, "afps"),
+            (3000, "image", _IMAGE_OFFSET_CROP_CTE, "ifps"),
+        ),
+        _PHASE_TWIN_STORED,
+        _PHASE_TWIN_BATCH,
+    ),
     doc=(
         "The PHASE-AWARE excerpt/crop admission DECISION, value-"
         "checked end to end (round 11): the LITERAL streaming "
@@ -3582,43 +3149,16 @@ def media_phase_excerpt_admission_twin(
         checked_audio_offset_clip_df,
         checked_image_offset_crop_df,
     )
-    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
-        media_excerpt_rejects,
-    )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
-        media_winnow_fps,
-    )
 
-    aud = checked_audio_offset_clip_df(spark).withColumn(
-        "media_id", F.col("media_id") + 2000
-    )
-    img = checked_image_offset_crop_df(spark).withColumn(
-        "media_id", F.col("media_id") + 3000
-    )
-    mixed = aud.unionByName(img)
-    # One fixture synthesis for the whole twin (round 13): every
-    # decode plane and the final id join scan this union, so without
-    # a boundary each scan re-ran all the fixture generators.
-    mixed = mixed.localCheckpoint(eager=False)
-    stored = mixed.filter(F.col("media_id").isin(list(_PHASE_TWIN_STORED)))
-    batch = mixed.filter(F.col("media_id").isin(list(_PHASE_TWIN_BATCH)))
-    # Lazy fps-stage boundaries (the subclip-pairs lesson): the
-    # decision fans each fps relation out ~4 ways (population,
-    # evidence, denominator); the checkpoints decode each payload once
-    # at first execution. The streaming gate gets the same effect from
-    # its persist() on batch_wfps.
-    rejects = media_excerpt_rejects(
-        media_winnow_fps(stored, phases=2).localCheckpoint(eager=False),
-        media_winnow_fps(batch, phases=2).localCheckpoint(eager=False),
-        0.8,
-    )
-    return (
-        batch.select("media_id")
-        .join(rejects.withColumn("rej", F.lit(True)), "media_id", "left")
-        .select(
-            "media_id",
-            F.coalesce(~F.col("rej"), F.lit(True)).alias("admitted"),
-        )
+    return _excerpt_twin(
+        spark,
+        (
+            (2000, checked_audio_offset_clip_df),
+            (3000, checked_image_offset_crop_df),
+        ),
+        _PHASE_TWIN_STORED,
+        _PHASE_TWIN_BATCH,
+        phases=2,
     )
 
 
@@ -3626,66 +3166,16 @@ _CDT_TWIN_STORED = (2000, 3000)
 _CDT_TWIN_BATCH = (2001, 2002, 2008, 3001, 3002, 3004, 3005, 3008, 3009)
 
 
-def _cdt_twin_oracle() -> str:
-    """DuckDB restatement of the `media_excerpt_rejects` decision over
-    the CONTENT-DEFINED fingerprint relations of the round-12
-    arbitrary-offset fixtures — the gate twin proving the off-lattice
-    crop/excerpt classes are rejected by the literal streaming
-    decision function under the CDT planes. Same decision SQL as
-    `_phase_twin_oracle` (df<=50 prune, unpruned denominator,
-    stored + lower-id leader-keeps, distinct fps, >= tau); the
-    fingerprints come from the CDT anchor CTEs that oracle the
-    anchors/pairs queries bit-for-bit."""
-    stored = ", ".join(f"({i})" for i in _CDT_TWIN_STORED)
-    batch = ", ".join(f"({i})" for i in _CDT_TWIN_BATCH)
-    return f"""
-    WITH a2fps AS (
-      SELECT media_id + 2000 AS media_id, 'audio' AS plane, fp
-      FROM (WITH {_AUDIO_CDT_CTE}
-            SELECT media_id, fp FROM afps)
-    ),
-    i2fps AS (
-      SELECT media_id + 3000 AS media_id, 'image' AS plane, fp
-      FROM (WITH {_IMAGE_CDT_CTE}
-            SELECT media_id, fp FROM cfps)
-    ),
-    allf AS (SELECT * FROM a2fps UNION ALL SELECT * FROM i2fps),
-    stored(sid) AS (VALUES {stored}),
-    batch(bid) AS (VALUES {batch}),
-    pop AS (SELECT plane, fp FROM allf
-            WHERE media_id IN (SELECT sid FROM stored)
-               OR media_id IN (SELECT bid FROM batch)),
-    rare AS (SELECT plane, fp FROM pop GROUP BY 1, 2
-             HAVING count(*) <= 50),
-    bf AS (SELECT media_id, plane, fp FROM allf
-           WHERE media_id IN (SELECT bid FROM batch)),
-    nfp AS (SELECT media_id, count(*) AS n FROM bf GROUP BY 1),
-    bfp AS (SELECT bf.* FROM bf JOIN rare USING (plane, fp)),
-    sfpp AS (SELECT a.media_id, a.plane, a.fp FROM allf a
-             JOIN rare USING (plane, fp)
-             WHERE a.media_id IN (SELECT sid FROM stored)),
-    sh AS (
-      SELECT b.media_id AS j, b.fp
-      FROM bfp b
-      JOIN (SELECT * FROM sfpp UNION ALL SELECT * FROM bfp) a
-        ON a.plane = b.plane AND a.fp = b.fp
-      WHERE a.media_id IN (SELECT sid FROM stored)
-         OR a.media_id < b.media_id
-      GROUP BY 1, 2
-    ),
-    ns AS (SELECT j, count(*) AS n_shared FROM sh GROUP BY 1)
-    SELECT CAST(bid AS BIGINT) AS media_id,
-           coalesce(ns.n_shared / CAST(nfp.n AS DOUBLE) < 0.8, TRUE)
-             AS admitted
-    FROM batch
-    LEFT JOIN nfp ON nfp.media_id = bid
-    LEFT JOIN ns ON ns.j = bid
-    """
-
-
 @register(
     "media_cdt_excerpt_admission_twin",
-    oracle=_cdt_twin_oracle(),
+    oracle=_excerpt_twin_oracle(
+        (
+            (2000, "audio", _AUDIO_CDT_CTE, "afps"),
+            (3000, "image", _IMAGE_CDT_CTE, "cfps"),
+        ),
+        _CDT_TWIN_STORED,
+        _CDT_TWIN_BATCH,
+    ),
     doc=(
         "The CONTENT-DEFINED crop/excerpt admission DECISION, value-"
         "checked end to end (round 12): the LITERAL streaming decision "
@@ -3709,47 +3199,17 @@ def media_cdt_excerpt_admission_twin(
         checked_audio_cdt_excerpt_df,
         checked_image_cdt_crop_df,
     )
-    from hridaya_steam_market_tracker_spark.streaming.corpus_ingest import (
-        media_excerpt_rejects,
-    )
-    from hridaya_steam_market_tracker_spark.streaming.media_ingest import (
-        media_winnow_fps,
-    )
 
-    aud = checked_audio_cdt_excerpt_df(spark).withColumn(
-        "media_id", F.col("media_id") + 2000
-    )
-    img = checked_image_cdt_crop_df(spark).withColumn(
-        "media_id", F.col("media_id") + 3000
-    )
-    mixed = aud.unionByName(img)
-    # One fixture synthesis for the whole twin (round 13): every
-    # decode plane and the final id join scan this union, so without
-    # a boundary each scan re-ran all the fixture generators.
-    mixed = mixed.localCheckpoint(eager=False)
-    stored = mixed.filter(F.col("media_id").isin(list(_CDT_TWIN_STORED)))
-    batch = mixed.filter(F.col("media_id").isin(list(_CDT_TWIN_BATCH)))
-    # Lazy fps-stage boundaries (the subclip-pairs lesson): the
-    # decision fans each fps relation out ~4 ways (population,
-    # evidence, denominator); the checkpoints decode each payload once
-    # at first execution. The streaming gate gets the same effect from
-    # its persist() on batch_wfps.
-    rejects = media_excerpt_rejects(
-        media_winnow_fps(
-            stored, image_plane="cdt", audio_plane="cdt"
-        ).localCheckpoint(eager=False),
-        media_winnow_fps(
-            batch, image_plane="cdt", audio_plane="cdt"
-        ).localCheckpoint(eager=False),
-        0.8,
-    )
-    return (
-        batch.select("media_id")
-        .join(rejects.withColumn("rej", F.lit(True)), "media_id", "left")
-        .select(
-            "media_id",
-            F.coalesce(~F.col("rej"), F.lit(True)).alias("admitted"),
-        )
+    return _excerpt_twin(
+        spark,
+        (
+            (2000, checked_audio_cdt_excerpt_df),
+            (3000, checked_image_cdt_crop_df),
+        ),
+        _CDT_TWIN_STORED,
+        _CDT_TWIN_BATCH,
+        image_plane="cdt",
+        audio_plane="cdt",
     )
 
 

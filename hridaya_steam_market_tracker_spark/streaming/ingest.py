@@ -19,7 +19,7 @@ partitions (the Timescale chunk + segmentby analog).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -56,83 +56,6 @@ def idempotent_append(batch_df: DataFrame, sink_path: str) -> None:
         stored = spark.read.schema(key_schema).parquet(sink_path).select(*KEY_COLS)
         fresh = fresh.join(stored, list(KEY_COLS), "left_anti")
     write_partitioned(fresh, sink_path)
-
-
-_LATEST = "_LATEST"
-
-
-def _snapshot_read(spark: SparkSession, sink_path: str) -> DataFrame | None:
-    import os
-
-    ptr = os.path.join(sink_path, _LATEST)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        version = fh.read().strip()
-    return spark.read.parquet(os.path.join(sink_path, version))
-
-
-def read_merged(spark: SparkSession, sink_path: str) -> DataFrame:
-    """Read the current snapshot of a merge_upsert sink."""
-    df = _snapshot_read(spark, sink_path)
-    if df is None:
-        raise FileNotFoundError(f"no snapshot at {sink_path}")
-    return df
-
-
-def merge_upsert(
-    batch_df: DataFrame,
-    sink_path: str,
-    key_cols: tuple[str, ...] = KEY_COLS,
-    when_matched: str = "ignore",
-) -> None:
-    """MERGE INTO analog of the reference's ON CONFLICT upsert family
-    (src/SQLinserts.py:515-584): 'ignore' = DO NOTHING on key match,
-    'replace' = DO UPDATE (incoming row wins).
-
-    With delta-spark installed this should be a log-structured
-    `DeltaTable.merge` — O(changed files), concurrent-writer safe via
-    optimistic concurrency. Without Delta, the fallback is a
-    **versioned snapshot** table:
-
-        sink/v_0000N/part-*.parquet   immutable snapshot directories
-        sink/_LATEST                  pointer file naming the current one
-
-    A merge reads the current snapshot, unions/anti-joins the batch,
-    writes a NEW version directory, then atomically swaps the pointer
-    (POSIX rename) — readers always see a complete snapshot and replay
-    of the same batch is a no-op. LIMITS (documented, tested): the
-    rewrite is O(table) per merge — fine for control-plane-sized
-    tables, wrong for the 100 TB fact table (use Delta/Iceberg there);
-    and two concurrent writers serialize on last-pointer-wins, so one
-    merge's rows can be lost — single-writer discipline still applies
-    (tests/test_streaming.py pins this failure mode).
-    """
-    import os
-    import uuid
-
-    if when_matched not in ("ignore", "replace"):
-        raise ValueError(f"when_matched must be ignore|replace, got {when_matched!r}")
-    spark = batch_df.sparkSession
-    stored = _snapshot_read(spark, sink_path)
-    fresh = batch_df.dropDuplicates(list(key_cols))
-    if stored is None:
-        merged = fresh
-    elif when_matched == "ignore":
-        merged = stored.unionByName(
-            fresh.join(stored.select(*key_cols), list(key_cols), "left_anti")
-        )
-    else:  # replace: incoming wins on key collision
-        merged = stored.join(
-            fresh.select(*key_cols), list(key_cols), "left_anti"
-        ).unionByName(fresh)
-
-    version = f"v_{uuid.uuid4().hex[:12]}"
-    merged.write.mode("overwrite").parquet(os.path.join(sink_path, version))
-    tmp_ptr = os.path.join(sink_path, f".{_LATEST}.{uuid.uuid4().hex[:8]}")
-    with open(tmp_ptr, "w") as fh:
-        fh.write(version)
-    os.replace(tmp_ptr, os.path.join(sink_path, _LATEST))  # atomic on POSIX
 
 
 def start_history_ingest(

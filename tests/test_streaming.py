@@ -183,63 +183,6 @@ def test_start_history_ingest_restart_keeps_first_value(spark, tmp_path):
     ]
 
 
-def test_merge_upsert_ignore_and_replace(spark, tmp_path):
-    from hridaya_steam_market_tracker_spark.streaming.ingest import (
-        merge_upsert,
-        read_merged,
-    )
-
-    sink = str(tmp_path / "merged")
-    merge_upsert(_mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)]), sink)
-    # replay is a no-op (DO NOTHING)
-    merge_upsert(_mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 7.7)]), sink)
-    rows = read_merged(spark, sink).collect()
-    assert len(rows) == 1 and rows[0]["value"] == 1.5
-    # replace: incoming wins (DO UPDATE)
-    merge_upsert(
-        _mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 7.7)]),
-        sink,
-        when_matched="replace",
-    )
-    rows = read_merged(spark, sink).collect()
-    assert len(rows) == 1 and rows[0]["value"] == 7.7
-
-
-def test_merge_upsert_concurrent_writer_limitation(spark, tmp_path):
-    """Pin the documented single-writer limitation of the snapshot
-    fallback: two writers that both read the SAME base snapshot
-    serialize on last-pointer-wins, so the first writer's rows are
-    lost (no dirty/partial reads though — the table is always one
-    complete snapshot; Delta's optimistic concurrency is the fix)."""
-    from hridaya_steam_market_tracker_spark.streaming.ingest import (
-        merge_upsert,
-        read_merged,
-    )
-
-    sink = str(tmp_path / "merged")
-    merge_upsert(_mk_points(spark, [("A", "2024-01-01 10:00:00", 1.0)]), sink)
-
-    # Simulate the race: both writers plan against the same snapshot
-    # (read_merged resolves _LATEST eagerly at plan time).
-    w1 = _mk_points(spark, [("B", "2024-01-01 11:00:00", 2.0)])
-    base_for_w2 = read_merged(spark, sink)
-    merge_upsert(w1, sink)  # writer 1 commits
-    # writer 2 commits a merge computed from the stale base
-    import os
-    import uuid
-
-    merged_stale = base_for_w2.unionByName(
-        _mk_points(spark, [("C", "2024-01-01 12:00:00", 3.0)])
-    )
-    version = f"v_{uuid.uuid4().hex[:12]}"
-    merged_stale.write.mode("overwrite").parquet(os.path.join(sink, version))
-    with open(os.path.join(sink, "_LATEST"), "w") as fh:
-        fh.write(version)
-
-    names = {r["market_hash_name"] for r in read_merged(spark, sink).collect()}
-    assert names == {"A", "C"}  # writer 1's "B" was lost — hence single-writer
-
-
 def test_streaming_dedup_end_to_end(spark, tmp_path):
     """Drive the watermark+dropDuplicates plan through a real streaming
     query (memory sink)."""

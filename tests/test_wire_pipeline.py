@@ -383,10 +383,12 @@ NORMALIZERS = {
     "pricehistory": normalize_pricehistory,
 }
 # Optimized-plan string length per normalizer. Each plan is linear in
-# its rules (~23k, ~5k, ~6k, ~3k chars); the activity plan that parsed
-# every price span inside a filter inside a re-parse ran to ~340k.
+# its rules (~5k, ~5k, ~6k, ~3k chars); the activity plan that parsed
+# every price span inside a filter inside a re-parse ran to ~340k, and
+# the priceoverview plan that re-embedded the 19-step symbol strip in
+# every parse_steam_price branch to ~23k.
 PLAN_CHAR_BOUNDS = {
-    "priceoverview": 35_000,
+    "priceoverview": 8_000,
     "histogram": 8_000,
     "activity": 20_000,
     "pricehistory": 5_000,

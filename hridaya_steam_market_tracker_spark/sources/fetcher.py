@@ -17,7 +17,9 @@ The CLOCKWORK path (J3: hourly archival at :30 UTC, with the fixed
 
 Only this adapter is driver-side — it produces a list of raw response
 rows per tick; everything after `spark.createDataFrame(rows, WIRE_*)`
-is distributed.
+is distributed. That frame scans a Python RDD, so each action on it
+runs a Python-worker stage; the normalizers checkpoint their output
+locally, so a batch runs it once however many sinks read the batch.
 """
 
 from __future__ import annotations

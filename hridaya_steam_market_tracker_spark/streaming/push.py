@@ -10,10 +10,17 @@ unwatched keys prune naturally (the reference's short-circuit) — and
 per-stream delta shaping picks latest-1-point for append streams vs
 full-snapshot for histogram/activity (J10), matching the batch readers
 byte-for-byte because both use the same latest-per-key definition.
+
+The subscriptions side is static, as in a stream-static join: it is
+read once per DataFrame object and held as a JVM-local relation, so
+routing a batch does not re-read it and its broadcast runs no job
+(`_local_subscriptions`).
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
@@ -41,6 +48,27 @@ def latest_per_key(df: DataFrame, key_cols: list[str], ts_col: str = "time") -> 
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
+_subs_lock = threading.Lock()
+# (weakref to the caller's subscriptions DataFrame, its JVM-local copy)
+_subs_slot: tuple[weakref.ref, DataFrame] | None = None
+
+
+def _local_subscriptions(subscriptions: DataFrame) -> DataFrame:
+    """A ``LocalRelation`` copy of ``subscriptions``, read once while the
+    caller keeps passing the same object. The slot holds one copy and a
+    weak reference to its source, so a new object replaces it and the
+    caller's DataFrame is never kept alive."""
+    global _subs_slot
+    with _subs_lock:
+        slot = _subs_slot
+        if slot is None or slot[0]() is not subscriptions:
+            local = subscriptions.sparkSession.createDataFrame(
+                subscriptions.toArrow(), subscriptions.schema
+            )
+            slot = _subs_slot = (weakref.ref(subscriptions), local)
+        return slot[1]
+
+
 def route_batch(
     batch_df: DataFrame,
     subscriptions: DataFrame,
@@ -48,16 +76,21 @@ def route_batch(
 ) -> int:
     """One micro-batch of appended rows -> frames for subscribed keys.
 
-    subscriptions: (market_hash_name, stream) pairs with subscriber ids.
+    subscriptions: (market_hash_name, stream) pairs with subscriber ids,
+    taken as a snapshot: the first call with a DataFrame object reads
+    it, and later calls with the SAME object reuse that read. To route
+    against a changed registry, pass a new DataFrame.
     emit: transport callback (the WebSocket seam); receives collected
-    frames — the ONLY driver-side materialization, already pruned to
-    subscribed keys and latest-1 per key.
+    frames — the ONLY driver-side materialization of the batch, already
+    pruned to subscribed keys and latest-1 per key.
     """
     affected = latest_per_key(
         batch_df, ["market_hash_name", "stream"], "time"
     )
     routed = affected.join(
-        F.broadcast(subscriptions), ["market_hash_name", "stream"], "inner"
+        F.broadcast(_local_subscriptions(subscriptions)),
+        ["market_hash_name", "stream"],
+        "inner",
     )
     frames = (
         routed.withColumn(
@@ -86,7 +119,10 @@ def start_push(
     emit: Callable[[list], None],
     checkpoint_path: str,
 ):
-    """Streaming read over the sink table -> foreachBatch routing."""
+    """Streaming read over the sink table -> foreachBatch routing.
+
+    ``subscriptions`` is read once for the life of the query (see
+    `route_batch`): restart the push to pick up a changed registry."""
     return (
         sink_stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_path)

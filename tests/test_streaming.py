@@ -123,6 +123,48 @@ def test_idempotent_append_refuses_unreadable_sink(spark, tmp_path):
     assert written == ["part-00000-corrupt.snappy.parquet"]
 
 
+def test_idempotent_append_reads_only_touched_partitions(spark, tmp_path):
+    """The stored-key read is confined to the date partitions the batch
+    touches, so it stays flat as the sink grows: with every other
+    partition's files made unreadable, an append still succeeds, still
+    drops its already-stored keys, and a date not yet stored reads as
+    nothing stored. A NULL time needs no partition."""
+    sink = str(tmp_path / "history")
+    for day in range(1, 7):
+        idempotent_append(_mk_points(spark, [("AK-47", f"2024-01-0{day} 10:00:00", float(day))]), sink)
+    for day in (1, 2, 4, 5):
+        part = tmp_path / "history" / f"date=2024-01-0{day}"
+        for f in part.glob("*.parquet"):
+            f.write_bytes(b"not parquet" * 8)
+    idempotent_append(_mk_points(spark, [
+        ("AK-47", "2024-01-03 10:00:00", 9.9),  # stored: dropped
+        ("AK-47", "2024-01-06 11:00:00", 6.5),
+        ("AK-47", "2024-01-09 10:00:00", 9.0),  # a new partition
+        ("AK-47", None, 0.0),
+    ]), sink)
+    got = sorted(
+        (r["time"].isoformat() if r["time"] else None, r["value"])
+        for r in spark.read.parquet(str(tmp_path / "history" / "date=2024-01-0[369]"))
+        .collect()
+    )
+    assert got == [("2024-01-03T10:00:00", 3.0), ("2024-01-06T10:00:00", 6.0),
+                   ("2024-01-06T11:00:00", 6.5), ("2024-01-09T10:00:00", 9.0)]
+    null_part = tmp_path / "history" / "date=__HIVE_DEFAULT_PARTITION__"
+    assert any(null_part.glob("*.parquet"))
+
+
+def test_idempotent_append_refuses_half_compacted_partition(spark, tmp_path):
+    """A touched partition that survives only as a compaction's aside
+    copy is not "nothing stored": the append refuses."""
+    import pytest
+
+    sink = str(tmp_path / "history")
+    idempotent_append(_mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)]), sink)
+    os.rename(f"{sink}/date=2024-01-01", f"{sink}/date=2024-01-01.compact.old")
+    with pytest.raises(RuntimeError, match="half-compacted"):
+        idempotent_append(_mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)]), sink)
+
+
 def _mk_points(spark, rows):
     return spark.createDataFrame(
         rows, "market_hash_name string, time_s string, value double"
@@ -238,6 +280,60 @@ def test_push_routing_prunes_unsubscribed(spark):
     assert frames[0][0] == "sock-1" and frames[1][0] == "sock-2"
     assert '"name":"AK-47"' in frames[0][1] and '"value":1.6' in frames[0][1]
     assert all("M4A4" not in f for _, f in frames)  # short-circuit pruned
+
+
+def test_route_batch_reads_subscriptions_once_per_object(spark):
+    """route_batch reads a subscriptions DataFrame once and reuses the
+    read while it gets the same object; a new object (a changed
+    registry) is read afresh and its new subscriber gets frames."""
+    runs = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(sid):
+        runs.add(1)
+        return sid
+
+    def registry(sockets):
+        return spark.createDataFrame(
+            [("AK-47", "priceoverview", s) for s in sockets],
+            "market_hash_name string, stream string, subscriber_id string",
+        ).withColumn("subscriber_id", counted("subscriber_id"))
+
+    def batch(value):
+        return spark.createDataFrame(
+            [("AK-47", "priceoverview", "2024-01-01 10:00:00", value)],
+            "market_hash_name string, stream string, time_s string, value double",
+        ).select("market_hash_name", "stream",
+                 F.col("time_s").cast("timestamp").alias("time"), "value")
+
+    subs = registry(["sock-1"])
+    sent = []
+    assert route_batch(batch(1.5), subs, sent.extend) == 1
+    assert route_batch(batch(1.6), subs, sent.extend) == 1
+    assert runs.value == 1  # one subscription row, read once for two batches
+    changed = registry(["sock-1", "sock-2"])
+    sent.clear()
+    assert route_batch(batch(1.7), changed, sent.extend) == 2
+    assert sorted(r["subscriber_id"] for r in sent) == ["sock-1", "sock-2"]
+    assert runs.value == 3
+
+    # many threads asking for one new object's copy read it once
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from hridaya_steam_market_tracker_spark.streaming.push import _local_subscriptions
+
+    shared = registry(["sock-3"])
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            copies = list(pool.map(lambda _: _local_subscriptions(shared), range(32),
+                                   timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(c is copies[0] for c in copies)
+    assert runs.value == 4
 
 
 def test_latest_per_key_shared_definition(spark):

@@ -10,6 +10,7 @@ DataFrame transforms.
 from __future__ import annotations
 
 import datetime
+import time
 
 from pyspark.sql import Row, functions as F
 
@@ -406,10 +407,63 @@ def test_normalizer_plans_stay_linear(spark):
 
     raws = _wire_raws(spark)
     for name, normalize in NORMALIZERS.items():
-        chars = _plan_chars(normalize(raws[name]))
+        # the select plan: a normalizer's output plans as a bare scan of
+        # its local checkpoint (~200 chars), which would bound nothing
+        chars = _plan_chars(normalize.__wrapped__(raws[name]))
         assert chars < PLAN_CHAR_BOUNDS[name], f"{name}: {chars} plan chars"
     lines = parse_activity_lines(raws["activity"], ts_col="timestamp")
     assert _plan_chars(lines) < PLAN_CHAR_BOUNDS["activity"]
+
+
+def test_normalized_batch_is_one_value(spark, tmp_path):
+    """Every action on a normalizer's output sees one execution of its
+    input: a derived frame returns the same rows, ingest stamp included,
+    and the stored rows and the routed frames of one pricehistory batch
+    come from a single run of the caller's Python-backed source."""
+    from hridaya_steam_market_tracker_spark.streaming.push import route_batch
+
+    raws = _wire_raws(spark)
+    for name, normalize in NORMALIZERS.items():
+        norm = normalize(raws[name])
+        first = norm.collect()
+        time.sleep(0.01)
+        assert norm.select("*").collect() == first, name
+
+    sink = str(tmp_path / "price_history")
+    idempotent_append(normalize_pricehistory(_history_raw(spark, [
+        ["Jul 02 2014 01: +0", "283.697", "2"],
+    ])), sink)
+    runs = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(name):
+        runs.add(1)
+        return name
+
+    raw = _history_raw(spark, [
+        ["Jul 02 2014 01: +0", "283.697", "2"],  # already stored
+        ["Jul 02 2014 02: +0", "284.0", "3"],
+        ["May 19 2020 01: +0", "1621.348", "1"],
+    ]).withColumn("market_hash_name", counted("market_hash_name"))
+    norm = normalize_pricehistory(raw)
+    idempotent_append(norm, sink)
+    subs = spark.createDataFrame(
+        [(IDENT["market_hash_name"], "pricehistory", 1)],
+        "market_hash_name string, stream string, subscriber_id int",
+    )
+    frames = []
+    route_batch(
+        norm.select("market_hash_name", F.lit("pricehistory").alias("stream"), "time",
+                    F.col("price").alias("value")),
+        subs, frames.extend,
+    )
+    assert runs.value == 1  # one wire row, one execution
+    assert len(frames) == 1 and '"value":1621.348' in frames[0]["frame"]
+    stored = spark.read.parquet(sink).filter(F.year("time") == 2020).collect()
+    assert [r["fetched_at"] for r in stored] == [
+        r["fetched_at"] for r in norm.filter(F.year("time") == 2020).collect()
+    ]
+    assert spark.read.parquet(sink).count() == 3
 
 
 def test_normalizers_build_columns_once(spark, monkeypatch):

@@ -23,10 +23,11 @@ plan linear in the size of the G5 rules rather than nesting parses.
 Each normalized batch is one value: the first action on it runs the
 caller's input (for polled rows a ``createDataFrame`` over a Python
 RDD, one Python-worker stage) and the select once and keeps the rows
-as JVM blocks; every later action — the sink's dedup read, its write,
-the push routing — reads those blocks, and sees the same ingest stamp.
-Spark's ContextCleaner frees the blocks once the caller drops the
-DataFrame. Inputs are batch frames, not streams.
+as JVM blocks; every later action — the sink's anti-joined write, the
+push routing — reads those blocks, and sees the same ingest stamp.
+Spark's ContextCleaner frees the blocks at the first JVM garbage
+collection after the caller drops the DataFrame, not at the drop itself.
+Inputs are batch frames, not streams.
 """
 
 from __future__ import annotations

@@ -25,15 +25,10 @@ import os
 import shutil
 from datetime import date, timedelta
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 PARTITION_COL = "date"
-
-
-def partition_of(time_col: str = "time") -> Column:
-    """The date partition a row is written to (NULL for a NULL time)."""
-    return F.to_date(F.col(time_col))
 
 
 def write_partitioned(
@@ -45,7 +40,7 @@ def write_partitioned(
 ) -> None:
     """Date-partitioned, key-clustered columnar write."""
     (
-        df.withColumn(PARTITION_COL, partition_of(time_col))
+        df.withColumn(PARTITION_COL, F.to_date(F.col(time_col)))
         .repartition(F.col(PARTITION_COL))
         .sortWithinPartitions(key_col, time_col)
         .write.mode(mode)

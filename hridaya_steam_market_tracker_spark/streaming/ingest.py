@@ -11,13 +11,12 @@ Spark-first realization:
   foreachBatch makes micro-batch REPLAY idempotent on vanilla parquet
   (Delta MERGE would subsume this; parquet is what this environment
   has — single-writer discipline is assumed, as the reference assumes
-  one ingest process). Only the date partitions the batch touches are
-  read, so an append costs the same on a year-old sink as on a new one.
+  one ingest process).
 
-Per batch the input is executed more than once (a distinct-dates job,
-then the anti-joined write); a normalizer's output (sources/wire.py)
-is a local checkpoint, so only the first of these runs the caller's
-Python-backed rows.
+Each append executes its input once, in the anti-joined write. A
+normalizer's output (sources/wire.py) is a local checkpoint, so a
+later route_batch of the same batch reads the checkpoint's blocks
+instead of re-running the caller's Python-backed rows.
 
 Sink layout is storage.layout: date-partitioned, key-sorted within
 partitions (the Timescale chunk + segmentby analog).
@@ -30,11 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hridaya_steam_market_tracker_spark.checkpoints import _hadoop_fs
-from hridaya_steam_market_tracker_spark.storage.layout import (
-    PARTITION_COL,
-    partition_of,
-    write_partitioned,
-)
+from hridaya_steam_market_tracker_spark.storage.layout import write_partitioned
 
 KEY_COLS = ("market_hash_name", "time")
 
@@ -51,56 +46,21 @@ def idempotent_append(batch_df: DataFrame, sink_path: str) -> None:
     the ON CONFLICT DO NOTHING analog for a parquet sink. Used inside
     foreachBatch, so retries of the same micro-batch are no-ops.
 
-    Only the ``date=`` partitions the batch's times fall in are read
-    (`storage.layout.partition_of`, under the session time zone the sink
-    was written in): a stored key shares its row's partition, so the
-    read stays as large as the batch while the sink grows. A NULL time
-    matches no key and needs no partition.
-
-    Only a missing sink or partition counts as empty (checked through
-    the Hadoop FileSystem, so any URI scheme works); every other read
-    failure — a corrupt file, a permissions error, a key-type conflict,
-    a partition left half-compacted — raises rather than degrading into
-    a blind append of duplicate keys. The stored keys are read with the
-    batch's key types, so a sink whose only writes were empty (no data
-    file yet) reads as empty too.
+    Only a missing sink counts as empty (checked through the Hadoop
+    FileSystem, so any URI scheme works); every other read failure — a
+    corrupt file, a permissions error, a key-type conflict — raises
+    rather than degrading into a blind append of duplicate keys. The
+    stored keys are read with the batch's key types, so a sink whose
+    only writes were empty (no data file yet) reads as empty too.
     """
+    spark = batch_df.sparkSession
     fresh = batch_df.dropDuplicates(list(KEY_COLS))
-    stored = _stored_keys(batch_df, sink_path)
-    if stored is not None:
+    fs, path = _hadoop_fs(spark, sink_path)
+    if fs.exists(path):
+        key_schema = T.StructType([batch_df.schema[c] for c in KEY_COLS])
+        stored = spark.read.schema(key_schema).parquet(sink_path).select(*KEY_COLS)
         fresh = fresh.join(stored, list(KEY_COLS), "left_anti")
     write_partitioned(fresh, sink_path)
-
-
-def _stored_keys(batch_df: DataFrame, sink_path: str) -> DataFrame | None:
-    """The stored keys of the partitions ``batch_df`` touches, or None
-    when none of them exists."""
-    spark = batch_df.sparkSession
-    fs, path = _hadoop_fs(spark, sink_path)
-    if not fs.exists(path):
-        return None
-    part = partition_of("time").cast("string").alias(PARTITION_COL)
-    dates = batch_df.select(part).where(F.col(PARTITION_COL).isNotNull()).distinct()
-    present = {st.getPath().getName() for st in fs.listStatus(path)}
-    dirs = []
-    for (day,) in dates.collect():
-        name = f"{PARTITION_COL}={day}"
-        if name in present:
-            dirs.append(f"{sink_path.rstrip('/')}/{name}")
-        elif any(p.startswith(f"{name}.compact.") for p in present):
-            raise RuntimeError(
-                f"{sink_path}: partition {name} exists only as a half-compacted "
-                f"copy; recover it (storage/layout.py) before appending"
-            )
-    if not dirs:
-        return None
-    key_schema = T.StructType([batch_df.schema[c] for c in KEY_COLS])
-    return (
-        spark.read.schema(key_schema)
-        .option("basePath", sink_path)
-        .parquet(*dirs)
-        .select(*KEY_COLS)
-    )
 
 
 def start_history_ingest(

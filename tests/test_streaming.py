@@ -123,48 +123,6 @@ def test_idempotent_append_refuses_unreadable_sink(spark, tmp_path):
     assert written == ["part-00000-corrupt.snappy.parquet"]
 
 
-def test_idempotent_append_reads_only_touched_partitions(spark, tmp_path):
-    """The stored-key read is confined to the date partitions the batch
-    touches, so it stays flat as the sink grows: with every other
-    partition's files made unreadable, an append still succeeds, still
-    drops its already-stored keys, and a date not yet stored reads as
-    nothing stored. A NULL time needs no partition."""
-    sink = str(tmp_path / "history")
-    for day in range(1, 7):
-        idempotent_append(_mk_points(spark, [("AK-47", f"2024-01-0{day} 10:00:00", float(day))]), sink)
-    for day in (1, 2, 4, 5):
-        part = tmp_path / "history" / f"date=2024-01-0{day}"
-        for f in part.glob("*.parquet"):
-            f.write_bytes(b"not parquet" * 8)
-    idempotent_append(_mk_points(spark, [
-        ("AK-47", "2024-01-03 10:00:00", 9.9),  # stored: dropped
-        ("AK-47", "2024-01-06 11:00:00", 6.5),
-        ("AK-47", "2024-01-09 10:00:00", 9.0),  # a new partition
-        ("AK-47", None, 0.0),
-    ]), sink)
-    got = sorted(
-        (r["time"].isoformat() if r["time"] else None, r["value"])
-        for r in spark.read.parquet(str(tmp_path / "history" / "date=2024-01-0[369]"))
-        .collect()
-    )
-    assert got == [("2024-01-03T10:00:00", 3.0), ("2024-01-06T10:00:00", 6.0),
-                   ("2024-01-06T11:00:00", 6.5), ("2024-01-09T10:00:00", 9.0)]
-    null_part = tmp_path / "history" / "date=__HIVE_DEFAULT_PARTITION__"
-    assert any(null_part.glob("*.parquet"))
-
-
-def test_idempotent_append_refuses_half_compacted_partition(spark, tmp_path):
-    """A touched partition that survives only as a compaction's aside
-    copy is not "nothing stored": the append refuses."""
-    import pytest
-
-    sink = str(tmp_path / "history")
-    idempotent_append(_mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)]), sink)
-    os.rename(f"{sink}/date=2024-01-01", f"{sink}/date=2024-01-01.compact.old")
-    with pytest.raises(RuntimeError, match="half-compacted"):
-        idempotent_append(_mk_points(spark, [("AK-47", "2024-01-01 10:00:00", 1.5)]), sink)
-
-
 def _mk_points(spark, rows):
     return spark.createDataFrame(
         rows, "market_hash_name string, time_s string, value double"

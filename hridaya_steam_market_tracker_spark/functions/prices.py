@@ -176,8 +176,3 @@ def steam_currency_id_to_iso(col: Column) -> Column:
 def coerce_price(col: Column) -> Column:
     """G9: read-path re-serialization coercion — strip commas, cast double."""
     return F.replace(col.cast("string"), F.lit(","), F.lit("")).cast("double")
-
-
-def sha256_text(col: Column) -> Column:
-    """G10: SHA-256 content hash (config loop guard)."""
-    return F.sha2(col, 256)

@@ -54,11 +54,10 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "doc_id",
-    src: str = "i",
-    dst: str = "j",
     max_iter: int = 15,
 ) -> DataFrame:
-    """Label every node with min reachable node id (undirected edges).
+    """Label every node with min reachable node id (undirected edges
+    ``(i, j)``).
 
     Returns (node, component); component == min id in the node's
     connected component, so `node == component` marks one canonical
@@ -77,10 +76,15 @@ def connected_components(
     variant's double xor-hash signature over the current round's
     blocks only. The label TRAJECTORY is unchanged: round k's labels
     equal the old implementation's round k labels exactly.
+
+    A fixpoint shows one round after the labels settle, so a graph of
+    diameter D needs at most D + 1 rounds; if ``max_iter`` rounds end
+    without two equal consecutive signatures, this raises rather than
+    return unconverged labels.
     """
     sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+        edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
+        .unionByName(edges.select(F.col("j").alias("s"), F.col("i").alias("d")))
         # one self-loop per node: folds `least(own, neighbor-min)` into
         # the aggregation and guarantees every node a row each round
         .unionByName(
@@ -96,6 +100,7 @@ def connected_components(
         F.col(id_col).alias("node"), F.col(id_col).alias("component")
     )
     prev_sig = None
+    converged = False
     for _ in range(max_iter):
         labels = (
             sym.join(labels, sym["d"] == labels["node"])
@@ -114,9 +119,15 @@ def connected_components(
         ).first()
         sig = (row["h1"], row["h2"])
         if prev_sig == sig:
+            converged = True
             break
         prev_sig = sig
     sym.unpersist()
+    if not converged:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iter} rounds; "
+            f"labels would be wrong — refusing to return them"
+        )
     return labels
 
 
@@ -158,13 +169,13 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+_STAR_ROUNDS = 12
+
+
 def alternating_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "doc_id",
-    src: str = "i",
-    dst: str = "j",
-    max_iter: int = 12,
 ) -> DataFrame:
     """Connected components in O(log n) rounds — large-star/small-star.
 
@@ -189,9 +200,9 @@ def alternating_components(
 
     The downstream star extraction is only valid on FIXPOINT edges; a
     non-converged edge set would yield wrong component minima with no
-    other signal. If ``max_iter`` rounds don't stabilize, a warning is
-    emitted and up to ``max_iter`` extra rounds run; if still unstable,
-    this raises rather than return silently wrong labels. At the default
+    other signal. If ``_STAR_ROUNDS`` rounds don't stabilize, a warning
+    is emitted and up to ``_STAR_ROUNDS`` extra rounds run; if still
+    unstable, this raises rather than return silently wrong labels. In
     12 rounds the algorithm's geometric contraction covers chains of
     length ~2^12, so reaching the fallback means pathological input.
     """
@@ -201,14 +212,14 @@ def alternating_components(
     # job plus a signature job. Blocks, lineage cuts and the fixpoint
     # trajectory are identical.
     e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col(src) != F.col(dst))
+        edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
+        .filter(F.col("s") != F.col("d"))
         .distinct()
         .transform(lambda d: stage_checkpoint(d, eager=False))
     )
     prev_sig = None
     converged = False
-    for rounds in range(1, 2 * max_iter + 1):
+    for rounds in range(1, 2 * _STAR_ROUNDS + 1):
         e = _small_star(_large_star(e)).transform(
             lambda d: stage_checkpoint(d, eager=False)
         )
@@ -224,17 +235,17 @@ def alternating_components(
             converged = True
             break
         prev_sig = cur
-        if rounds == max_iter:
+        if rounds == _STAR_ROUNDS:
             warnings.warn(
-                f"alternating_components: no fixpoint after {max_iter} rounds; "
-                f"running up to {max_iter} more",
+                f"alternating_components: no fixpoint after {_STAR_ROUNDS} "
+                f"rounds; running up to {_STAR_ROUNDS} more",
                 RuntimeWarning,
                 stacklevel=2,
             )
     if not converged:
         raise RuntimeError(
             f"alternating_components failed to reach a fixpoint after "
-            f"{2 * max_iter} large-star/small-star rounds; labels would be "
+            f"{2 * _STAR_ROUNDS} large-star/small-star rounds; labels would be "
             f"wrong — refusing to return them"
         )
     # Fixpoint edges are stars hi->component-min; every non-canonical node
@@ -247,3 +258,14 @@ def alternating_components(
         .join(star, "node", "left")
         .select("node", F.coalesce("component", "node").alias("component"))
     )
+
+
+def cluster_labels(
+    ids: DataFrame, pairs: DataFrame, components=connected_components
+) -> DataFrame:
+    """(id, component) for every row of the one-column id frame ``ids``
+    over the ``(i, j)`` pair graph ``pairs``, the id column keeping its
+    name; ``component`` is the cluster's min id, so ``id == component``
+    marks its canonical member. ``components`` is either algorithm."""
+    (id_col,) = ids.columns
+    return components(ids, pairs, id_col=id_col).withColumnRenamed("node", id_col)

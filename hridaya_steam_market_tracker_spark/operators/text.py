@@ -159,13 +159,6 @@ def quality_score(text: Column) -> Column:
     return F.round((length_ok * 0.4 + stop_ok * 0.4 + punct_ok * 0.2), 6)
 
 
-def lang_id(text: Column) -> Column:
-    """Heuristic language ID: English if the stopword ratio clears a
-    floor, else unknown. (N-gram models plug in the same slot —
-    `chargram_lang_scores` is the trained one.)"""
-    return F.when(stopword_ratio(text) >= 0.02, "en").otherwise("und")
-
-
 def chargram_lang_scores(
     df: DataFrame,
     label_col: str = "lang",

@@ -105,6 +105,7 @@ _SAMPLE_FIRST: tuple[str, ...] = (
     "chunk_dedup_reassemble",
     "doc_repetition_stats",
     "multimodal_dhash_oriented_near_pairs_checked",
+    "multimodal_whash_near_pairs",
     "multimodal_audio_excerpt_pairs",
     "multimodal_image_crop_pairs",
     "multimodal_image_offset_crop_pairs",
@@ -118,7 +119,6 @@ _SAMPLE_FIRST: tuple[str, ...] = (
     "multimodal_audio_hybrid_excerpt_pairs",
     "ccnet_perplexity_buckets",
     "multimodal_image_hybrid_crop_pairs",
-    "domain_mix_weights",
 )
 
 

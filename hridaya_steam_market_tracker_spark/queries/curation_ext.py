@@ -26,7 +26,10 @@ from pyspark.sql import functions as F
 from hridaya_steam_market_tracker_spark.operators import dedup as D
 from hridaya_steam_market_tracker_spark.operators.text import bind1, with_repetition_stats
 from hridaya_steam_market_tracker_spark.queries import register
-from hridaya_steam_market_tracker_spark.queries.oracle_sql import admission_sql
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import (
+    admission_sql,
+    components_sql,
+)
 from hridaya_steam_market_tracker_spark.tables import table
 
 _TOKS_LOWER = "list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '')"
@@ -1473,19 +1476,12 @@ from hridaya_steam_market_tracker_spark.queries.docs import (  # noqa: E402
       ) WHERE fprn = 1
     ),
     sh3 AS (SELECT doc_id, {_SHINGLES3} AS s FROM g4),
-    prs AS (
+    pairs AS (
       SELECT a.doc_id AS i, b.doc_id AS j
       FROM sh3 a JOIN sh3 b ON a.doc_id < b.doc_id
       WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
             / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM prs UNION SELECT j, i FROM prs),
-    reach(node, lab) AS (
-      SELECT doc_id, doc_id FROM g4
-      UNION
-      SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    comp AS (SELECT node AS doc_id, min(lab) AS component FROM reach GROUP BY node),
+    ){components_sql("g4", "doc_id")},
     g5 AS (
       SELECT g4.* FROM g4 JOIN (
         SELECT c.doc_id, row_number() OVER (
@@ -1557,7 +1553,7 @@ def pretrain_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
+        cluster_labels,
     )
     from hridaya_steam_market_tracker_spark.operators.dsir import (
         dsir_importance_weights,
@@ -1596,10 +1592,8 @@ def pretrain_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     g4_docs = docs.join(g4.select("doc_id"), "doc_id")
     pairs = D.minhash_near_duplicates(
         g4_docs, num_hashes=32, bands=16, threshold=0.5
-    ).select("i", "j")
-    comp = connected_components(g4.select("doc_id"), pairs).withColumnRenamed(
-        "node", "doc_id"
     )
+    comp = cluster_labels(g4.select("doc_id"), pairs)
     w_cl = Window.partitionBy("component").orderBy(
         F.col("quality_score").desc(), F.col("doc_id").asc()
     )

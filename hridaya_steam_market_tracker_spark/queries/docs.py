@@ -13,13 +13,21 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.operators import dedup as D
+from hridaya_steam_market_tracker_spark.operators.components import (
+    alternating_components,
+    cluster_labels,
+    connected_components,
+)
 from hridaya_steam_market_tracker_spark.operators.text import (
     EN_STOPWORDS,
     bind1,
     with_text_stats,
 )
 from hridaya_steam_market_tracker_spark.queries import register
-from hridaya_steam_market_tracker_spark.queries.oracle_sql import containment_pairs_sql
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import (
+    components_sql,
+    containment_pairs_sql,
+)
 from hridaya_steam_market_tracker_spark.tables import table
 
 # DuckDB fragments mirroring operators/text.py exactly.
@@ -32,6 +40,19 @@ _SHINGLES = (
     f"list_distinct([array_to_string(w[i:i+2], ' ') "
     f"for i in range(1, len(w) - 1)])"
 )
+
+# The exact 3-gram Jaccard >= 0.5 pair set `pairs(i, j)` over
+# `documents` that the MinHash+LSH pair miner reproduces (see
+# dedup_minhash_lsh, whose oracle keeps its own pinned text).
+_JACCARD_PAIRS_CTE = f"""d AS (SELECT doc_id, {_TOKS_LOWER} AS w FROM documents),
+    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM d WHERE len(w) >= 3),
+    pairs AS (
+      SELECT a.doc_id AS i, b.doc_id AS j
+      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
+    )"""
+_DOC_COMPONENTS = components_sql("documents", "doc_id")
 
 
 @register(
@@ -378,33 +399,16 @@ def _cluster_labels(spark: SparkSession, sf_dir: str, components_fn) -> DataFram
     docs = table(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(
         docs, num_hashes=32, bands=16, threshold=0.5
-    ).select("i", "j")
-    labels = components_fn(docs.select("doc_id"), pairs)
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        "component",
-        (F.col("node") == F.col("component")).alias("is_canonical"),
+    )
+    labels = cluster_labels(docs.select("doc_id"), pairs, components_fn)
+    return labels.withColumn(
+        "is_canonical", F.col("doc_id") == F.col("component")
     )
 
 
 _CLUSTERS_ORACLE = f"""
-    WITH RECURSIVE d AS (SELECT doc_id, {_TOKS_LOWER} AS w FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM d WHERE len(w) >= 3),
-    pairs AS (
-      SELECT a.doc_id AS i, b.doc_id AS j
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-    )
-    SELECT node AS doc_id, CAST(min(lab) AS BIGINT) AS component,
-           min(lab) = node AS is_canonical
-    FROM reach GROUP BY node
+    WITH RECURSIVE {_JACCARD_PAIRS_CTE}{_DOC_COMPONENTS}
+    SELECT doc_id, component, component = doc_id AS is_canonical FROM comp
     """
 
 
@@ -424,10 +428,6 @@ _CLUSTERS_ORACLE = f"""
     ),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
-    )
-
     return _cluster_labels(spark, sf_dir, connected_components)
 
 
@@ -445,10 +445,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        alternating_components,
-    )
-
     return _cluster_labels(spark, sf_dir, alternating_components)
 
 
@@ -501,21 +497,7 @@ def corpus_curation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "curation_pipeline_kept_docs",
     oracle=f"""
-    WITH RECURSIVE d AS (SELECT doc_id, {_TOKS_LOWER} AS w FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM d WHERE len(w) >= 3),
-    pairs AS (
-      SELECT a.doc_id AS i, b.doc_id AS j
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    comp AS (SELECT node AS doc_id, min(lab) AS component FROM reach GROUP BY node),
+    WITH RECURSIVE {_JACCARD_PAIRS_CTE}{_DOC_COMPONENTS},
     scored AS (
       SELECT doc_id, source,
              round(CASE WHEN len({_TOKS}) BETWEEN 10 AND 1000 THEN 1.0 ELSE 0.3 END * 0.4
@@ -541,16 +523,10 @@ def corpus_curation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def curation_pipeline_kept_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
-    )
-
     docs = table(spark, sf_dir, "documents")
     scored = with_text_stats(docs).select("doc_id", "source", "quality_score")
-    pairs = D.minhash_near_duplicates(docs, num_hashes=32, bands=16, threshold=0.5).select("i", "j")
-    comp = connected_components(docs.select("doc_id"), pairs).withColumnRenamed(
-        "node", "doc_id"
-    )
+    pairs = D.minhash_near_duplicates(docs, num_hashes=32, bands=16, threshold=0.5)
+    comp = cluster_labels(docs.select("doc_id"), pairs)
     kept = (
         scored.join(comp, "doc_id")
         .filter((F.col("doc_id") == F.col("component")) & (F.col("quality_score") >= 0.7))
@@ -571,22 +547,7 @@ _QUALITY_SQL = f"""
 @register(
     "dedup_keep_best_quality",
     oracle=f"""
-    WITH RECURSIVE d AS (SELECT doc_id, {_TOKS_LOWER} AS w FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM d WHERE len(w) >= 3),
-    pairs AS (
-      SELECT a.doc_id AS i, b.doc_id AS j
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    comp AS (SELECT node AS doc_id, CAST(min(lab) AS BIGINT) AS component
-             FROM reach GROUP BY node),
+    WITH RECURSIVE {_JACCARD_PAIRS_CTE}{_DOC_COMPONENTS},
     scored AS (SELECT doc_id, {_QUALITY_SQL} AS quality_score FROM documents)
     SELECT c.doc_id, c.component, s.quality_score,
            row_number() OVER (PARTITION BY c.component
@@ -607,17 +568,11 @@ _QUALITY_SQL = f"""
 def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
-    )
-
     docs = table(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(
         docs, num_hashes=32, bands=16, threshold=0.5
-    ).select("i", "j")
-    labels = connected_components(docs.select("doc_id"), pairs).select(
-        F.col("node").alias("doc_id"), "component"
     )
+    labels = cluster_labels(docs.select("doc_id"), pairs)
     scored = with_text_stats(docs).select("doc_id", "quality_score")
     w = Window.partitionBy("component").orderBy(
         F.col("quality_score").desc(), F.col("doc_id").asc()
@@ -632,14 +587,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_recall_audit",
     oracle=f"""
-    WITH d AS (SELECT doc_id, {_TOKS_LOWER} AS w FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM d WHERE len(w) >= 3),
-    pairs AS (
-      SELECT a.doc_id AS i, b.doc_id AS j
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
-    )
+    WITH {_JACCARD_PAIRS_CTE}
     SELECT CAST(count(*) AS BIGINT) AS n_exact_pairs,
            CAST(count(*) AS BIGINT) AS n_minhash_pairs,
            CAST(0 AS BIGINT) AS n_missed,
@@ -839,16 +787,8 @@ def _hashed_doc_embeddings(docs: DataFrame) -> DataFrame:
       WHERE list_inner_product(a.vec, b.vec)
             / sqrt(list_inner_product(a.vec, a.vec)
                  * list_inner_product(b.vec, b.vec)) >= 0.9
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT doc_id, doc_id FROM hvec
-      UNION
-      SELECT g.dst, r.lab FROM reach r JOIN edges g ON g.src = r.node
-    )
-    SELECT node AS doc_id, CAST(min(lab) AS BIGINT) AS component,
-           min(lab) = node AS kept
-    FROM reach GROUP BY node
+    ){components_sql("hvec", "doc_id")}
+    SELECT doc_id, component, component = doc_id AS kept FROM comp
     """,
     doc=(
         "END-TO-END semantic dedup from raw text: feature-hashed 64-dim "
@@ -861,9 +801,6 @@ def _hashed_doc_embeddings(docs: DataFrame) -> DataFrame:
     ),
 )
 def semantic_dedup_text_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
-    )
     from hridaya_steam_market_tracker_spark.operators.similarity import (
         semantic_dedup_pairs,
     )
@@ -872,13 +809,9 @@ def semantic_dedup_text_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _hashed_doc_embeddings(docs)
     pairs = semantic_dedup_pairs(
         emb, threshold=0.9, planes=8, dim=_HASH_DIM, seed=7, id_col="doc_id"
-    ).select("i", "j")
-    labels = connected_components(emb.select("doc_id"), pairs)
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        "component",
-        (F.col("node") == F.col("component")).alias("kept"),
     )
+    labels = cluster_labels(emb.select("doc_id"), pairs)
+    return labels.withColumn("kept", F.col("doc_id") == F.col("component"))
 
 
 @register(
@@ -1077,22 +1010,7 @@ def tfidf_cosine_pairs_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "cluster_weighted_sample",
     oracle=f"""
-    WITH RECURSIVE d AS (SELECT doc_id, {_TOKS_LOWER} AS w FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS s FROM d WHERE len(w) >= 3),
-    pairs AS (
-      SELECT a.doc_id AS i, b.doc_id AS j
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    comp AS (SELECT node AS doc_id, CAST(min(lab) AS BIGINT) AS component
-             FROM reach GROUP BY node),
+    WITH RECURSIVE {_JACCARD_PAIRS_CTE}{_DOC_COMPONENTS},
     sizes AS (SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
               FROM comp GROUP BY component)
     SELECT c.doc_id, c.component, s.cluster_size,
@@ -1115,17 +1033,11 @@ def tfidf_cosine_pairs_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def cluster_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
-    )
-
     docs = table(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(
         docs, num_hashes=32, bands=16, threshold=0.5
-    ).select("i", "j")
-    comp = connected_components(docs.select("doc_id"), pairs).select(
-        F.col("node").alias("doc_id"), "component"
     )
+    comp = cluster_labels(docs.select("doc_id"), pairs)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )

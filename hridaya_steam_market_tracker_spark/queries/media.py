@@ -31,6 +31,7 @@ from hridaya_steam_market_tracker_spark.operators.multimodal import (
 from hridaya_steam_market_tracker_spark.queries import register
 from hridaya_steam_market_tracker_spark.queries.oracle_sql import (
     admission_sql,
+    components_sql,
     containment_pairs_sql,
 )
 
@@ -925,6 +926,67 @@ _ORIENTED_DHASH_CTE = (
     + _DHASH_CTE
 )
 
+# The 33 stored images of checked_oriented_dhash_df with their upright
+# hashes: imgs(i, hash_hi, hash_lo); row 32 is the corrupt-eXIf copy of
+# base 1.
+_ORIENTED_IMGS_CTE = _ORIENTED_DHASH_CTE + """,
+    imgs AS (
+      SELECT g.i, h.hash_hi, h.hash_lo
+      FROM generate_series(0, 32) g(i)
+      JOIN hashes h
+        ON h.b = CASE WHEN g.i = 32 THEN 1 ELSE 1 + (g.i // 8) % 4 END
+    )"""
+
+
+def _hamming_sql(a: str, b: str) -> str:
+    """Hamming distance between the 64-bit hashes of rows ``a`` and
+    ``b``, each split into the two BIGINT halves ``hash_hi``/``hash_lo``."""
+    return (
+        f"(bit_count(xor({a}.hash_hi, {b}.hash_hi))"
+        f" + bit_count(xor({a}.hash_lo, {b}.hash_lo)))"
+    )
+
+
+def _dhash_pairs_sql(rel: str, id_col: str = "i") -> str:
+    """The ``dhash_near_pairs(max_hamming=3)`` result over
+    ``rel(id_col, hash_hi, hash_lo)``: every lower-id pair within
+    Hamming 3, as ``(i, j, hamming)`` with BIGINT ids."""
+    return f"""
+    SELECT CAST(a.{id_col} AS BIGINT) AS i, CAST(c.{id_col} AS BIGINT) AS j,
+           CAST({_hamming_sql("a", "c")} AS INTEGER) AS hamming
+    FROM {rel} a JOIN {rel} c ON a.{id_col} < c.{id_col}
+    WHERE {_hamming_sql("a", "c")} <= 3
+    """
+
+
+def _dhash_keep_list_oracle(ctes: str, nodes: str) -> str:
+    """The ``_dhash_keep_list`` result, given ``ctes`` that define the
+    decodable items ``nodes(i, hash_hi, hash_lo)``."""
+    return f"""
+    WITH RECURSIVE {ctes},
+    pairs AS ({_dhash_pairs_sql(nodes)}){components_sql(nodes, "i")}
+    SELECT i AS media_id, component, component = i AS kept FROM comp
+    """
+
+
+def _dhash_keep_list(hashes: DataFrame) -> DataFrame:
+    """Keep-min-id per connected component of the Hamming <= 3 pair
+    graph over the decodable rows of a ``(media_id, ..., hash_hi,
+    hash_lo, decode_ok)`` signature relation: (media_id, component,
+    kept). Undecodable rows are left out of the graph."""
+    from hridaya_steam_market_tracker_spark.operators.components import (
+        cluster_labels,
+    )
+    from hridaya_steam_market_tracker_spark.operators.multimodal import (
+        dhash_near_pairs,
+    )
+
+    labels = cluster_labels(
+        hashes.filter(F.col("decode_ok")).select("media_id"),
+        dhash_near_pairs(hashes, max_hamming=3),
+    )
+    return labels.withColumn("kept", F.col("component") == F.col("media_id"))
+
 
 @register(
     "multimodal_image_dhash_checked",
@@ -962,15 +1024,7 @@ def multimodal_image_dhash_checked(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "multimodal_dhash_near_pairs_checked",
-    oracle=f"""
-    WITH {_DHASH_HASHES_CTE}
-    SELECT a.b AS i, c.b AS j,
-           CAST(bit_count(xor(a.hash_hi, c.hash_hi))
-                + bit_count(xor(a.hash_lo, c.hash_lo)) AS INTEGER) AS hamming
-    FROM hashes a JOIN hashes c ON a.b < c.b
-    WHERE bit_count(xor(a.hash_hi, c.hash_hi))
-          + bit_count(xor(a.hash_lo, c.hash_lo)) <= 3
-    """,
+    oracle=f"WITH {_DHASH_HASHES_CTE}" + _dhash_pairs_sql("hashes", "b"),
     doc=(
         "VALUE-CHECKED image near-dup pair join over dHash signatures, "
         "BANDED: each 64-bit hash splits into four 16-bit bands and "
@@ -1037,21 +1091,7 @@ def multimodal_dhash_oriented_checked(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "multimodal_dhash_oriented_near_pairs_checked",
-    oracle=f"""
-    WITH {_ORIENTED_DHASH_CTE},
-    imgs AS (
-      SELECT g.i, h.hash_hi, h.hash_lo
-      FROM generate_series(0, 32) g(i)
-      JOIN hashes h
-        ON h.b = CASE WHEN g.i = 32 THEN 1 ELSE 1 + (g.i // 8) % 4 END
-    )
-    SELECT CAST(a.i AS BIGINT) AS i, CAST(c.i AS BIGINT) AS j,
-           CAST(bit_count(xor(a.hash_hi, c.hash_hi))
-                + bit_count(xor(a.hash_lo, c.hash_lo)) AS INTEGER) AS hamming
-    FROM imgs a JOIN imgs c ON a.i < c.i
-    WHERE bit_count(xor(a.hash_hi, c.hash_hi))
-          + bit_count(xor(a.hash_lo, c.hash_lo)) <= 3
-    """,
+    oracle=f"WITH {_ORIENTED_IMGS_CTE}" + _dhash_pairs_sql("imgs"),
     doc=(
         "VALUE-CHECKED end-to-end rotated-duplicate retrieval: "
         "orientation-normalized hashes feed the SAME lossless 4x16-bit "
@@ -1082,31 +1122,7 @@ def multimodal_dhash_oriented_near_pairs_checked(
 
 @register(
     "multimodal_image_dedup_keep_list",
-    oracle=f"""
-    WITH RECURSIVE {_ORIENTED_DHASH_CTE},
-    imgs AS (
-      SELECT CAST(g.i AS BIGINT) AS i, h.hash_hi, h.hash_lo
-      FROM generate_series(0, 32) g(i)
-      JOIN hashes h
-        ON h.b = CASE WHEN g.i = 32 THEN 1 ELSE 1 + (g.i // 8) % 4 END
-    ),
-    pairs AS (
-      SELECT a.i AS i, c.i AS j
-      FROM imgs a JOIN imgs c ON a.i < c.i
-      WHERE bit_count(xor(a.hash_hi, c.hash_hi))
-            + bit_count(xor(a.hash_lo, c.hash_lo)) <= 3
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs
-              UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT i, i FROM imgs
-      UNION
-      SELECT g.dst, r.lab FROM reach r JOIN edges g ON g.src = r.node
-    )
-    SELECT node AS media_id, CAST(min(lab) AS BIGINT) AS component,
-           min(lab) = node AS kept
-    FROM reach GROUP BY node
-    """,
+    oracle=_dhash_keep_list_oracle(_ORIENTED_IMGS_CTE, "imgs"),
     doc=(
         "The full crawl-scale image-dedup decision, VALUE-CHECKED end "
         "to end: EXIF-upright dHash -> lossless banded candidate join "
@@ -1124,26 +1140,13 @@ def multimodal_dhash_oriented_near_pairs_checked(
 def multimodal_image_dedup_keep_list(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         checked_oriented_dhash_df,
-        dhash_near_pairs,
         image_dhash_oriented,
     )
 
-    hashes = image_dhash_oriented(checked_oriented_dhash_df(spark, n=34))
-    pairs = dhash_near_pairs(hashes, max_hamming=3)
-    labels = connected_components(
-        hashes.filter(F.col("decode_ok")).select("media_id"),
-        pairs.select("i", "j"),
-        id_col="media_id",
-    )
-    return labels.select(
-        F.col("node").alias("media_id"),
-        "component",
-        (F.col("component") == F.col("node")).alias("kept"),
+    return _dhash_keep_list(
+        image_dhash_oriented(checked_oriented_dhash_df(spark, n=34))
     )
 
 
@@ -1220,28 +1223,13 @@ def multimodal_video_temporal_hash_checked(
 
 @register(
     "multimodal_video_dedup_keep_list",
-    oracle="WITH RECURSIVE "
-    + _VIDEO_TDHASH_HASHES_CTE
-    + """,
+    oracle=_dhash_keep_list_oracle(
+        _VIDEO_TDHASH_HASHES_CTE
+        + """,
     vids AS (SELECT CAST(i AS BIGINT) AS i, hash_hi, hash_lo
-             FROM hashes WHERE n_bits = 64),
-    pairs AS (
-      SELECT a.i AS i, c.i AS j
-      FROM vids a JOIN vids c ON a.i < c.i
-      WHERE bit_count(xor(a.hash_hi, c.hash_hi))
-            + bit_count(xor(a.hash_lo, c.hash_lo)) <= 3
+             FROM hashes WHERE n_bits = 64)""",
+        "vids",
     ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs
-              UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT i, i FROM vids
-      UNION
-      SELECT g.dst, r.lab FROM reach r JOIN edges g ON g.src = r.node
-    )
-    SELECT node AS media_id, CAST(min(lab) AS BIGINT) AS component,
-           min(lab) = node AS kept
-    FROM reach GROUP BY node
-    """,
     doc=(
         "The full crawl-scale VIDEO-dedup decision, value-checked end "
         "to end: MP4 demux -> per-frame JPEG decode -> temporal dHash "
@@ -1258,27 +1246,12 @@ def multimodal_video_temporal_hash_checked(
 def multimodal_video_dedup_keep_list(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         checked_video_dedup_df,
-        dhash_near_pairs,
         video_temporal_dhash,
     )
 
-    hashes = video_temporal_dhash(checked_video_dedup_df(spark))
-    pairs = dhash_near_pairs(hashes, max_hamming=3)
-    labels = connected_components(
-        hashes.filter(F.col("decode_ok")).select("media_id"),
-        pairs.select("i", "j"),
-        id_col="media_id",
-    )
-    return labels.select(
-        F.col("node").alias("media_id"),
-        "component",
-        (F.col("component") == F.col("node")).alias("kept"),
-    )
+    return _dhash_keep_list(video_temporal_dhash(checked_video_dedup_df(spark)))
 
 
 _AUDIO_FP_HASHES_CTE = """
@@ -1392,28 +1365,13 @@ def multimodal_audio_fingerprint_checked(
 
 @register(
     "multimodal_audio_dedup_keep_list",
-    oracle="WITH RECURSIVE "
-    + _AUDIO_FP_HASHES_CTE
-    + """,
+    oracle=_dhash_keep_list_oracle(
+        _AUDIO_FP_HASHES_CTE
+        + """,
     clips AS (SELECT CAST(i AS BIGINT) AS i, hash_hi, hash_lo
-              FROM hashes WHERE n_bits = 64),
-    pairs AS (
-      SELECT a.i AS i, c.i AS j
-      FROM clips a JOIN clips c ON a.i < c.i
-      WHERE bit_count(xor(a.hash_hi, c.hash_hi))
-            + bit_count(xor(a.hash_lo, c.hash_lo)) <= 3
+              FROM hashes WHERE n_bits = 64)""",
+        "clips",
     ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs
-              UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT i, i FROM clips
-      UNION
-      SELECT g.dst, r.lab FROM reach r JOIN edges g ON g.src = r.node
-    )
-    SELECT node AS media_id, CAST(min(lab) AS BIGINT) AS component,
-           min(lab) = node AS kept
-    FROM reach GROUP BY node
-    """,
     doc=(
         "The full crawl-scale AUDIO-dedup decision, value-checked end "
         "to end: PCM decode -> integer-grid Goertzel fingerprint -> "
@@ -1430,27 +1388,12 @@ def multimodal_audio_fingerprint_checked(
 def multimodal_audio_dedup_keep_list(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
-    )
     from hridaya_steam_market_tracker_spark.operators.multimodal import (
         audio_goertzel_fingerprint,
         checked_audio_fp_df,
-        dhash_near_pairs,
     )
 
-    hashes = audio_goertzel_fingerprint(checked_audio_fp_df(spark))
-    pairs = dhash_near_pairs(hashes, max_hamming=3)
-    labels = connected_components(
-        hashes.filter(F.col("decode_ok")).select("media_id"),
-        pairs.select("i", "j"),
-        id_col="media_id",
-    )
-    return labels.select(
-        F.col("node").alias("media_id"),
-        "component",
-        (F.col("component") == F.col("node")).alias("kept"),
-    )
+    return _dhash_keep_list(audio_goertzel_fingerprint(checked_audio_fp_df(spark)))
 
 
 def _admitted(batch: DataFrame, rejects: DataFrame) -> DataFrame:
@@ -1481,8 +1424,7 @@ def _admitted(batch: DataFrame, rejects: DataFrame) -> DataFrame:
       WHERE b.wave = 'batch' AND EXISTS (
         SELECT 1 FROM imgs s
         WHERE (s.wave = 'store' OR (s.wave = 'batch' AND s.i < b.i))
-          AND bit_count(xor(s.hash_hi, b.hash_hi))
-              + bit_count(xor(s.hash_lo, b.hash_lo)) <= 3
+          AND {_hamming_sql("s", "b")} <= 3
       )
     )
     SELECT CAST(i AS BIGINT) AS media_id,
@@ -1584,8 +1526,9 @@ def media_ingest_admission_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 1 FROM rows_ s
         WHERE s.plane = b.plane
           AND (s.wave = 'store' OR (s.wave = 'batch' AND s.i < b.i))
-          AND bit_count(xor(s.hash_hi, b.hash_hi))
-              + bit_count(xor(s.hash_lo, b.hash_lo)) <= 3
+          AND """
+    + _hamming_sql("s", "b")
+    + """ <= 3
       )
     )
     SELECT CAST(i AS BIGINT) AS media_id,
@@ -3822,14 +3765,7 @@ def multimodal_image_whash_checked(
       SELECT CAST(i AS BIGINT) AS i, hash_hi, hash_lo FROM hashes
       UNION ALL
       SELECT 12, hash_hi, hash_lo FROM hashes WHERE i = 0
-    )
-    SELECT a.i AS i, b.i AS j,
-           CAST(bit_count(xor(a.hash_hi, b.hash_hi))
-                + bit_count(xor(a.hash_lo, b.hash_lo)) AS INTEGER) AS hamming
-    FROM allh a JOIN allh b ON a.i < b.i
-    WHERE bit_count(xor(a.hash_hi, b.hash_hi))
-          + bit_count(xor(a.hash_lo, b.hash_lo)) <= 3
-    """,
+    )""" + _dhash_pairs_sql("allh"),
     doc=(
         "The WHT hash riding the UNCHANGED banded near-pair machinery "
         "(dhash_bands 4x16-bit pigeonhole blocking + exact "

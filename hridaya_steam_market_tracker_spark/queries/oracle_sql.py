@@ -3,13 +3,33 @@
 Each fingerprint plane keeps its own fixture CTE (the independent,
 closed-form reference computation of its fingerprints); the decisions
 layered on top of those fingerprints are stated here once, the way
-queries/parsers.py builds every G-parser oracle from one template. Both
-builders continue a ``WITH`` list that already defines the fingerprint
-relation: they return the remaining CTEs (leading comma included) and
-the final ``SELECT``.
+queries/parsers.py builds every G-parser oracle from one template. Each
+builder continues a ``WITH`` list that already defines its input
+relation and returns the remaining CTEs (leading comma included); the
+pair and admission builders also return the final ``SELECT``, while
+``components_sql`` stops at its ``comp`` relation.
 """
 
 from __future__ import annotations
+
+
+def components_sql(nodes: str, node_col: str) -> str:
+    """The ``connected_components`` labels over the caller's ``pairs(i,
+    j)`` edge relation: every ``node_col`` of relation ``nodes`` gets the
+    minimum id it reaches over undirected edges (itself when it has
+    none). The caller's ``WITH`` must be ``RECURSIVE``. Ends with
+    ``comp(node_col, component)``, component as BIGINT."""
+    return f""",
+    edges AS (SELECT i AS src, j AS dst FROM pairs
+              UNION SELECT j, i FROM pairs),
+    reach(node, lab) AS (
+      SELECT {node_col}, {node_col} FROM {nodes}
+      UNION
+      SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
+    ),
+    comp AS (SELECT node AS {node_col}, CAST(min(lab) AS BIGINT) AS component
+             FROM reach GROUP BY node)
+    """
 
 
 def containment_pairs_sql(fps: str, id_col: str) -> str:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.queries import register
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import components_sql
 from hridaya_steam_market_tracker_spark.tables import table
 
 
@@ -345,7 +346,7 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_near_dup_clusters",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
@@ -354,16 +355,8 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM e a JOIN e b ON a.vec_id < b.vec_id
       WHERE list_inner_product(a.v, b.v)
             / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)) >= 0.4
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT vec_id, vec_id FROM embeddings
-      UNION
-      SELECT g.dst, r.lab FROM reach r JOIN edges g ON g.src = r.node
-    )
-    SELECT node AS vec_id, CAST(min(lab) AS BIGINT) AS component,
-           min(lab) = node AS is_canonical
-    FROM reach GROUP BY node
+    ){components_sql("embeddings", "vec_id")}
+    SELECT vec_id, component, component = vec_id AS is_canonical FROM comp
     """,
     doc=(
         "Embedding near-dup CLUSTERS: transitive closure of the exact "
@@ -374,17 +367,15 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
+        cluster_labels,
     )
     from hridaya_steam_market_tracker_spark.operators.similarity import (
         cosine_self_join,
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    pairs = cosine_self_join(emb, threshold=0.4, n_blocks=16).select("i", "j")
-    labels = connected_components(emb.select("vec_id"), pairs, id_col="vec_id")
-    return labels.select(
-        F.col("node").alias("vec_id"),
-        "component",
-        (F.col("node") == F.col("component")).alias("is_canonical"),
+    pairs = cosine_self_join(emb, threshold=0.4, n_blocks=16)
+    labels = cluster_labels(emb.select("vec_id"), pairs)
+    return labels.withColumn(
+        "is_canonical", F.col("vec_id") == F.col("component")
     )

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.operators import similarity as S
 from hridaya_steam_market_tracker_spark.queries import register
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import components_sql
 from hridaya_steam_market_tracker_spark.tables import table
 
 # cosine on DOUBLE[] in DuckDB — same formula/accumulation as the Spark
@@ -667,17 +668,7 @@ _SEMDEDUP_CELLS = """
       WHERE list_inner_product(a.v, b.v)
             / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v))
             >= 0.4
-    ),
-    edges AS (SELECT i AS src, j AS dst FROM pairs UNION SELECT j, i FROM pairs),
-    reach(node, lab) AS (
-      SELECT vec_id, vec_id FROM embeddings
-      UNION
-      SELECT g.dst, r.lab FROM reach r JOIN edges g ON g.src = r.node
-    ),
-    comp AS (
-      SELECT node AS vec_id, CAST(min(lab) AS BIGINT) AS component
-      FROM reach GROUP BY node
-    )
+    ){components_sql("embeddings", "vec_id")}
     SELECT c.vec_id, CAST(cl.cell AS BIGINT) AS cell, c.component,
            c.component = c.vec_id AS kept
     FROM comp c JOIN cells cl USING (vec_id)
@@ -695,17 +686,14 @@ _SEMDEDUP_CELLS = """
 )
 def semantic_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hridaya_steam_market_tracker_spark.operators.components import (
-        connected_components,
+        cluster_labels,
     )
 
     emb = table(spark, sf_dir, "embeddings")
     cells = S.sign_cells(emb, planes=8, dim=64, seed=7)
     pairs = S.semantic_dedup_pairs(emb, threshold=0.4, planes=8, dim=64, seed=7)
-    labels = connected_components(
-        emb.select("vec_id"), pairs.select("i", "j"), id_col="vec_id"
-    )
     return (
-        labels.select(F.col("node").alias("vec_id"), "component")
+        cluster_labels(emb.select("vec_id"), pairs)
         .join(cells.select("vec_id", "cell"), "vec_id")
         .select(
             "vec_id",

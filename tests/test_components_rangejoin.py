@@ -11,6 +11,7 @@ naive inequality join.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.operators.components import (
@@ -35,6 +36,17 @@ def test_components_path_graph_and_singleton(spark):
         for r in connected_components(nodes, edges).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 7: 7}
+
+
+def test_components_raises_without_fixpoint(spark):
+    # chain 0-1-...-19 (diameter 19) needs 20 rounds, beyond the default
+    # 15: the labels of nodes 16-19 would still be 1-4, not 0.
+    nodes = spark.range(20).select(F.col("id").alias("doc_id"))
+    edges = spark.createDataFrame(
+        [(k, k + 1) for k in range(19)], "i long, j long"
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(nodes, edges)
 
 
 def test_components_two_cliques_bridge(spark):

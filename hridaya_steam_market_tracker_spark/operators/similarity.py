@@ -17,9 +17,10 @@ DOUBLE[]) reproduces values exactly.
 
 from __future__ import annotations
 
-import math
+import functools
+from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, GroupedData, Window
 from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.checkpoints import stage_checkpoint
@@ -79,6 +80,32 @@ def l2sq(a: Column, b: Column) -> Column:
     )
 
 
+def _cand_cos_sim(vec_col: str) -> Column:
+    """A candidate row's cosine against its query's ``q_vec``, rounded to
+    6 and aliased ``cos_sim``, over the squared norms ``__nv`` / ``__nq``
+    precomputed once per vector before the candidate join. Bit-identical
+    to cosine(): the same folds, evaluated once per vector instead of
+    once per candidate (each corpus vector meets many queries)."""
+    return F.round(
+        _dot(F.col(vec_col), F.col("q_vec")) / F.sqrt(F.col("__nv") * F.col("__nq")),
+        6,
+    ).alias("cos_sim")
+
+
+def _top_k(scored: DataFrame, k: int, order: Column, id_col: str) -> DataFrame:
+    """Each query's rows numbered by ``order`` then id as ``rank``, kept
+    at rank <= k."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col(id_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _argmin(scored: DataFrame, keys: list[str], *order: Column) -> DataFrame:
+    """The first row of each ``keys`` group under ``order`` (the caller
+    drops the ``__rn`` column)."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
+
+
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -88,13 +115,6 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per query vector (brute force, query side
     broadcast). Output: (query_id, vec_id, cos_sim, rank)."""
-    from pyspark.sql import Window
-
-    # Squared norms are precomputed ONCE PER VECTOR before the pair
-    # join instead of re-folding inside cosine() per pair row (each
-    # corpus vector meets every query): cos = dot / sqrt(nv * nq) is
-    # bit-identical — the same _norm2 fold over the same array, only
-    # evaluated earlier — so oracle value-hashes are unchanged.
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -110,22 +130,8 @@ def cosine_topk(
         .crossJoin(F.broadcast(q))
         .filter(F.col(id_col) != F.col("query_id"))
     )
-    scored = joined.select(
-        "query_id",
-        F.col(id_col),
-        F.round(
-            _dot(F.col(vec_col), F.col("q_vec"))
-            / F.sqrt(F.col("__nv") * F.col("__nq")),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    scored = joined.select("query_id", F.col(id_col), _cand_cos_sim(vec_col))
+    return _top_k(scored, k, F.col("cos_sim").desc(), id_col)
 
 
 def cosine_self_join(
@@ -224,9 +230,12 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
-def _planes_hp_df(spark, tables: int, planes_per_table: int, dim: int) -> DataFrame:
+def _planes_hp_df(
+    spark, tables: int, planes_per_table: int, dim: int, seed: int = 7, seed_step: int = 97
+) -> DataFrame:
     """The LSH hyperplane bank as a ONE-ROW broadcast DataFrame
-    (hp: array<array<array<double>>>, [table][plane][component]).
+    (hp: array<array<array<double>>>, [table][plane][component]); table
+    t's planes come from ``hyperplanes`` seeded ``seed + seed_step * t``.
 
     Shipping the planes as DATA instead of inlining tables x planes x
     dim scalar Literals keeps the expression tree (and the generated
@@ -235,14 +244,15 @@ def _planes_hp_df(spark, tables: int, planes_per_table: int, dim: int) -> DataFr
     per run; as a broadcast attribute it is one join input. Values are
     bit-identical (Python float -> DoubleType is exact), so the DuckDB
     oracle replication is untouched."""
-    hp = [hyperplanes(dim, planes_per_table, seed=7 + 97 * t) for t in range(tables)]
+    hp = [
+        hyperplanes(dim, planes_per_table, seed=seed + seed_step * t)
+        for t in range(tables)
+    ]
     return spark.createDataFrame([(hp,)], "hp array<array<array<double>>>")
 
 
 def _bucket_from_dots(dots: Column, planes_per_table: int) -> Column:
     """Sign-pattern bucket id from a per-table dot-product array."""
-    import functools
-
     return functools.reduce(
         lambda a, b: a + b,
         [
@@ -273,85 +283,10 @@ def lsh_topk(
     matches over tables (one equi-join on (table, bucket)), then exact
     cosine + rank within candidates only.
     """
-    from pyspark.sql import Window
-
-    planes_df = _planes_hp_df(embeddings.sparkSession, tables, planes_per_table, dim)
-
-    def buckets(vec: Column) -> Column:
-        # ONE lambda over the table indices instead of `tables` copies
-        # of the probe subtree (driver-side plan size — the same
-        # analysis-cost class as the sign-codebook plane bank; values
-        # and per-row work identical).
-        def per_table(t: Column) -> Column:
-            dots = F.transform(
-                F.element_at(F.col("hp"), t + 1), lambda pl: _dot(vec, pl)
-            )
-            # bind1: _bucket_from_dots references the dots array once
-            # per plane; inlined, each reference re-ran the whole
-            # per-table dot-product transform (no CSE across repeated
-            # subtrees in interpreted HOF expressions) — binding the
-            # array evaluates the planes_per_table fused dot products
-            # exactly once per (row, table).
-            return F.struct(
-                t.alias("tbl"),
-                bind1(
-                    dots, lambda d: _bucket_from_dots(d, planes_per_table)
-                ).alias("bucket"),
-            )
-
-        return F.transform(F.sequence(F.lit(0), F.lit(tables - 1)), per_table)
-
-    emb_b = (
-        _widen_small_scan(embeddings)
-        .crossJoin(F.broadcast(planes_df))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            _norm2(F.col(vec_col)).alias("__nv"),
-            F.explode(buckets(F.col(vec_col))).alias("bb"),
-        )
-        .select(id_col, vec_col, "__nv", "bb.tbl", "bb.bucket")
+    return _lsh_topk(
+        embeddings, queries, k, tables, planes_per_table, id_col, vec_col, dim,
+        probe_flips=False,
     )
-    q_b = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .crossJoin(F.broadcast(planes_df))
-        .select(
-            "query_id",
-            "q_vec",
-            _norm2(F.col("q_vec")).alias("__nq"),
-            F.explode(buckets(F.col("q_vec"))).alias("bb"),
-        )
-        .select("query_id", "q_vec", "__nq", "bb.tbl", "bb.bucket")
-    )
-    # Score BEFORE deduplicating: cosine is deterministic, so a candidate
-    # pair seen in several (table[, probe]) buckets scores identically
-    # everywhere and any surviving duplicate row is interchangeable.
-    # Scoring first means the dedup exchange moves (query_id, id, double)
-    # — three narrow columns — instead of rows still carrying BOTH
-    # dim-double vectors (2*dim*8 bytes/row). The re-scored duplicates
-    # cost one extra fused dot product each (scan-stage, no shuffle) —
-    # far cheaper than the wide exchange they replace.
-    scored = (
-        emb_b.join(F.broadcast(q_b), ["tbl", "bucket"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col),
-            # norms precomputed per vector on each side before the
-            # bucket join (bit-identical to cosine(): same folds,
-            # evaluated once per vector instead of once per candidate)
-            F.round(
-                _dot(F.col(vec_col), F.col("q_vec"))
-                / F.sqrt(F.col("__nv") * F.col("__nq")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", id_col])
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def lsh_multiprobe_topk(
@@ -378,14 +313,33 @@ def lsh_multiprobe_topk(
     the query side fans out, which is the property that matters at
     100 TB (probing is per-query work, bucketing is per-corpus work).
     """
-    import functools
+    return _lsh_topk(
+        embeddings, queries, k, tables, planes_per_table, id_col, vec_col, dim,
+        probe_flips=True,
+    )
 
+
+def _lsh_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    tables: int,
+    planes_per_table: int,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    probe_flips: bool,
+) -> DataFrame:
+    """The body of lsh_topk (``probe_flips`` off: each query probes its
+    own bucket per table) and lsh_multiprobe_topk (on: also the
+    least-confident-bit flip)."""
     planes_df = _planes_hp_df(embeddings.sparkSession, tables, planes_per_table, dim)
 
     def bucket_structs(vec: Column, with_flips: bool) -> Column:
         # ONE lambda over the table indices instead of `tables` copies
-        # of the probe/flip subtree (driver-side plan size; values and
-        # per-row work identical — see buckets() in lsh_topk).
+        # of the probe/flip subtree (driver-side plan size — the same
+        # analysis-cost class as the sign-codebook plane bank; values
+        # and per-row work identical).
         def per_table(t: Column) -> Column:
             dots = F.transform(
                 F.element_at(F.col("hp"), t + 1), lambda pl: _dot(vec, pl)
@@ -446,7 +400,7 @@ def lsh_multiprobe_topk(
             "query_id",
             "q_vec",
             _norm2(F.col("q_vec")).alias("__nq"),
-            F.explode(bucket_structs(F.col("q_vec"), with_flips=True)).alias("bb"),
+            F.explode(bucket_structs(F.col("q_vec"), with_flips=probe_flips)).alias("bb"),
         )
         .select("query_id", "q_vec", "__nq", "bb.tbl", "bb.bucket")
     )
@@ -461,24 +415,10 @@ def lsh_multiprobe_topk(
     scored = (
         emb_b.join(F.broadcast(q_b), ["tbl", "bucket"])
         .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col),
-            # norms precomputed per vector on each side before the
-            # bucket join (bit-identical to cosine(): same folds,
-            # evaluated once per vector instead of once per candidate)
-            F.round(
-                _dot(F.col(vec_col), F.col("q_vec"))
-                / F.sqrt(F.col("__nv") * F.col("__nq")),
-                6,
-            ).alias("cos_sim"),
-        )
+        .select("query_id", F.col(id_col), _cand_cos_sim(vec_col))
         .dropDuplicates(["query_id", id_col])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(scored, k, F.col("cos_sim").desc(), id_col)
 
 
 def _elementwise_mean(assigned: DataFrame, group_col: str, vec_col: str) -> DataFrame:
@@ -496,6 +436,23 @@ def _elementwise_mean(assigned: DataFrame, group_col: str, vec_col: str) -> Data
     )
 
 
+def _seed_cells(embeddings: DataFrame, n: int, id_col: str, vec_col: str) -> DataFrame:
+    """``n`` QUASI-RANDOM seed vectors as (cell, vec_col), cells 1..n in
+    id order: order by a salted md5 of the id and take the first n.
+    This compiles to TakeOrdered (distributed top-k) — never a global
+    window sort, which would shuffle the whole dataset into one task —
+    and hash order decorrelates the seeds from any id/label clustering,
+    spreading them across the data's clusters (better Lloyd starts,
+    stabler recall than first-k-ids seeding). The row_number window
+    runs on the n-row seed set only."""
+    seeds = embeddings.orderBy(
+        F.md5(F.concat(F.lit("seed:"), F.col(id_col).cast("string"))), id_col
+    ).limit(n)
+    return seeds.select(
+        F.row_number().over(Window.orderBy(id_col)).alias("cell"), F.col(vec_col)
+    )
+
+
 def kmeans_lite(
     embeddings: DataFrame,
     k: int = 16,
@@ -504,27 +461,17 @@ def kmeans_lite(
     vec_col: str = "embedding",
     metric: str = "cosine",
 ) -> DataFrame:
-    """Deterministic mini k-means (IVF coarse quantizer): seed with the
-    k lowest-id vectors, run `iters` assign/recompute rounds.
+    """Deterministic mini k-means (IVF coarse quantizer): seed with k
+    quasi-random vectors (``_seed_cells``), run `iters` assign/recompute
+    rounds.
 
     Fully distributed: assignment is a broadcast cross join + argmin
     (k is small), recomputation is the posexplode element-wise mean —
     the standard Lloyd iteration as two Catalyst plans per round.
     Returns (cell, centroid).
     """
-    # Seed with k QUASI-RANDOM vectors: order by a salted md5 of the id
-    # and take the first k. This compiles to TakeOrdered (distributed
-    # top-k) — never a global window sort, which would shuffle the whole
-    # dataset into one task — and hash order decorrelates the seeds from
-    # any id/label clustering, spreading them across the data's clusters
-    # (better Lloyd starts, stabler recall than first-k-ids seeding).
-    # The row_number window below runs on the k-row seed set only.
-    seeds = embeddings.orderBy(
-        F.md5(F.concat(F.lit("seed:"), F.col(id_col).cast("string"))),
-        id_col,
-    ).limit(k)
-    centroids = seeds.select(
-        F.row_number().over(Window.orderBy(id_col)).alias("cell"),
+    centroids = _seed_cells(embeddings, k, id_col, vec_col).select(
+        "cell",
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("centroid"),
     )
     for _ in range(iters):
@@ -570,12 +517,51 @@ def assign_cells(
         scored = embeddings.crossJoin(F.broadcast(centroids)).withColumn(
             "__sim", score
         )
-    w = Window.partitionBy(id_col).orderBy(order, F.col("cell"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__sim", "centroid")
+    return _argmin(scored, [id_col], order, F.col("cell")).drop(
+        "__rn", "__sim", "centroid"
     )
+
+
+def _ivf_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    centroids: DataFrame,
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    cell_col: str,
+    round_probe_sim: bool,
+) -> DataFrame:
+    """IVF search over a quantized corpus: each query probes the
+    ``n_probe`` cells whose centroid is most cosine-similar (cell breaks
+    ties; the similarity rounded to 6 when ``round_probe_sim``), and
+    only the vectors in those cells are scored and ranked.
+    ``embeddings`` carries ``cell_col``; ``centroids`` is (cell_col,
+    centroid)."""
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    sim = cosine(F.col("q_vec"), F.col("centroid"))
+    q_cells = q.crossJoin(F.broadcast(centroids)).select(
+        "query_id",
+        "q_vec",
+        F.col(cell_col),
+        (F.round(sim, 6) if round_probe_sim else sim).alias("__sim"),
+    )
+    wq = Window.partitionBy("query_id").orderBy(
+        F.col("__sim").desc(), F.col(cell_col).asc()
+    )
+    probes = (
+        q_cells.withColumn("__rn", F.row_number().over(wq))
+        .filter(F.col("__rn") <= n_probe)
+        .select("query_id", "q_vec", cell_col)
+    )
+    cands = (
+        embeddings.withColumn("__nv", _norm2(F.col(vec_col)))
+        .join(F.broadcast(probes.withColumn("__nq", _norm2(F.col("q_vec")))), cell_col)
+        .filter(F.col(id_col) != F.col("query_id"))
+    )
+    scored = cands.select("query_id", F.col(id_col), _cand_cos_sim(vec_col))
+    return _top_k(scored, k, F.col("cos_sim").desc(), id_col)
 
 
 def ivf_topk(
@@ -593,34 +579,10 @@ def ivf_topk(
     and a probe reads n_probe/n_cells of the data."""
     centroids = kmeans_lite(embeddings, k=n_cells, id_col=id_col, vec_col=vec_col)
     inverted = assign_cells(embeddings, centroids, id_col, vec_col)
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    q_scored = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "__sim", cosine(F.col("q_vec"), F.col("centroid"))
+    return _ivf_topk(
+        inverted, queries, centroids, k, n_probe, id_col, vec_col, "cell",
+        round_probe_sim=False,
     )
-    wq = Window.partitionBy("query_id").orderBy(F.col("__sim").desc(), F.col("cell"))
-    probes = (
-        q_scored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "q_vec", "cell")
-    )
-    cands = (
-        inverted.withColumn("__nv", _norm2(F.col(vec_col)))
-        .join(F.broadcast(probes.withColumn("__nq", _norm2(F.col("q_vec")))), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-    )
-    # norms once per vector/probe, not per candidate (bit-identical)
-    scored = cands.select(
-        "query_id",
-        F.col(id_col),
-        F.round(
-            _dot(F.col(vec_col), F.col("q_vec"))
-            / F.sqrt(F.col("__nv") * F.col("__nq")),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def label_centroids(
@@ -630,24 +592,19 @@ def label_centroids(
 ) -> DataFrame:
     """Per-label centroid (IVF coarse quantizer building block):
     element-wise mean via posexplode + groupBy — fully distributed."""
-    exploded = embeddings.select(
-        F.col(label_col), F.posexplode(F.col(vec_col)).alias("pos", "x")
-    )
-    means = (
-        exploded.groupBy(label_col, "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("mean_x"))
-        .groupBy(label_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("mean_x")))
-            ).alias("pairs")
+    return _elementwise_mean(embeddings, label_col, vec_col)
+
+
+def _dsub(dim: int, m: int) -> int:
+    """The PQ subspace width dim // m. Raises when m does not divide dim:
+    the trailing dimensions would silently drop from the codebooks and
+    the ADC distances."""
+    if dim % m:
+        raise ValueError(
+            f"dim={dim} not divisible by m={m}: trailing dimensions would "
+            "silently drop from codebooks and ADC distances"
         )
-        .select(
-            label_col,
-            F.transform(F.col("pairs"), lambda s: s["mean_x"]).alias("centroid"),
-        )
-    )
-    return means
+    return dim // m
 
 
 def pq_train(
@@ -678,21 +635,11 @@ def pq_train(
     layout-dependent (both consumers are rows-only/recall-bounded —
     the value-oracled PQ tier trains offline via sign_codebooks).
     """
-    if dim % m:
-        raise ValueError(
-            f"dim={dim} not divisible by m={m}: trailing dimensions would "
-            "silently drop from codebooks and ADC distances"
-        )
-    dsub = dim // m
+    dsub = _dsub(dim, m)
     sub_all = _subvectors(
         embeddings.select(F.col(id_col), F.col(vec_col)), [id_col], vec_col, m, dsub
     )
-    seeds = embeddings.orderBy(
-        F.md5(F.concat(F.lit("seed:"), F.col(id_col).cast("string"))), id_col
-    ).limit(ksub)
-    seed_cells = seeds.select(
-        F.row_number().over(Window.orderBy(id_col)).alias("cell"), F.col(vec_col)
-    )
+    seed_cells = _seed_cells(embeddings, ksub, id_col, vec_col)
     books = _subvectors(seed_cells, ["cell"], vec_col, m, dsub).select(
         "subspace",
         "cell",
@@ -702,14 +649,9 @@ def pq_train(
         scored = sub_all.join(F.broadcast(books), "subspace").withColumn(
             "__sim", l2sq(F.col("subvec"), F.col("centroid"))
         )
-        w = Window.partitionBy(id_col, "subspace").orderBy(
-            F.col("__sim").asc(), F.col("cell")
-        )
-        assigned = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("subspace", "cell", F.col("subvec"))
-        )
+        assigned = _argmin(
+            scored, [id_col, "subspace"], F.col("__sim").asc(), F.col("cell")
+        ).select("subspace", "cell", F.col("subvec"))
         # eager checkpoint per round (the kmeans_lite discipline): keeps
         # plan depth constant; one tiny (m * ksub)-row materialization.
         books = (
@@ -751,9 +693,7 @@ def pq_encode(
     (id, subspace, code) — the compressed representation a 100 TB
     corpus stores instead of raw floats (m bytes/vector at ksub<=256).
     Broadcast argmin against the codebooks; one row-bounded window."""
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m}")
-    dsub = dim // m
+    dsub = _dsub(dim, m)
     # NOT widened (round 13, measured): the encode fan-out runs inside
     # one codegen'd scan→explode→broadcast-join pipeline whose output
     # feeds a window exchange anyway; splitting the scan with a
@@ -763,12 +703,9 @@ def pq_encode(
     scored = sub.join(F.broadcast(codebooks), "subspace").withColumn(
         "__d", l2sq(F.col("subvec"), F.col("centroid"))
     )
-    w = Window.partitionBy(id_col, "subspace").orderBy(F.col("__d").asc(), F.col("code"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, "subspace", "code")
-    )
+    return _argmin(
+        scored, [id_col, "subspace"], F.col("__d").asc(), F.col("code")
+    ).select(id_col, "subspace", "code")
 
 
 def ivf_pretrained_topk(
@@ -796,42 +733,10 @@ def ivf_pretrained_topk(
     label-quantizer variant value-checkable against a SQL oracle.
     Output: (query_id, vec_id, cos_sim, rank).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    return _ivf_topk(
+        embeddings, queries, centroids, k, n_probe, id_col, vec_col, cell_col,
+        round_probe_sim=True,
     )
-    q_cells = q.crossJoin(F.broadcast(centroids)).select(
-        "query_id",
-        "q_vec",
-        F.col(cell_col),
-        F.round(cosine(F.col("q_vec"), F.col("centroid")), 6).alias("__sim"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col(cell_col).asc()
-    )
-    probes = (
-        q_cells.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select("query_id", "q_vec", cell_col)
-    )
-    cands = (
-        embeddings.withColumn("__nv", _norm2(F.col(vec_col)))
-        .join(F.broadcast(probes.withColumn("__nq", _norm2(F.col("q_vec")))), cell_col)
-        .filter(F.col(id_col) != F.col("query_id"))
-    )
-    # norms once per vector/probe, not per candidate (bit-identical)
-    scored = cands.select(
-        "query_id",
-        F.col(id_col),
-        F.round(
-            _dot(F.col(vec_col), F.col("q_vec"))
-            / F.sqrt(F.col("__nv") * F.col("__nq")),
-            6,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def cell_centroids(
@@ -870,7 +775,7 @@ def sign_codebooks(
     oracle, unlike Lloyd-iterated codebooks whose float feedback loop
     cannot be replicated cross-engine. Returns (subspace, code, centroid).
     """
-    dsub = dim // m
+    dsub = _dsub(dim, m)
     sub = _subvectors(embeddings.select(F.col(vec_col)), [], vec_col, m, dsub)
     # One pass over the data with the per-subspace plane bank shipped as
     # a ONE-ROW broadcast (hp[subspace][plane][component]) — the former
@@ -882,12 +787,8 @@ def sign_codebooks(
     # planes; values are bit-identical (Python float -> DoubleType is
     # exact, same fused dot-product fold, and the disjoint-bit sum in
     # _bucket_from_dots equals lsh_bucket's shiftleft-OR).
-    hp = [
-        hyperplanes(dsub, planes_per_subspace, seed=seed_base + seed_step * s)
-        for s in range(m)
-    ]
-    bank = embeddings.sparkSession.createDataFrame(
-        [(hp,)], "hp array<array<array<double>>>"
+    bank = _planes_hp_df(
+        embeddings.sparkSession, m, planes_per_subspace, dsub, seed_base, seed_step
     )
     dots = F.transform(
         F.element_at(F.col("hp"), F.col("subspace") + 1),
@@ -914,6 +815,40 @@ def sign_codebooks(
     )
 
 
+def _adc_groups(
+    codes: DataFrame,
+    queries: DataFrame,
+    codebooks: DataFrame,
+    m: int,
+    dsub: int,
+    id_col: str,
+    vec_col: str,
+    dist: Callable[[Column, Column], Column],
+) -> GroupedData:
+    """Asymmetric distance computation: each query's (subspace, code) ->
+    ``__d`` distance table (``dist`` of the query subvector and the code
+    centroid) broadcast against the corpus ``codes``, grouped per
+    (query_id, id) for the caller's sum."""
+    q_sub = _subvectors(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
+        ["query_id"],
+        vec_col,
+        m,
+        dsub,
+    )
+    dtab = q_sub.join(F.broadcast(codebooks), "subspace").select(
+        "query_id",
+        "subspace",
+        "code",
+        dist(F.col("subvec"), F.col("centroid")).alias("__d"),
+    )
+    return (
+        codes.join(F.broadcast(dtab), ["subspace", "code"])
+        .filter(F.col(id_col) != F.col("query_id"))
+        .groupBy("query_id", id_col)
+    )
+
+
 def pq_pretrained_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -935,7 +870,7 @@ def pq_pretrained_topk(
     Output: (query_id, vec_id, adc_dist_micro, rank). Contrast pq_topk,
     which self-trains its codebooks via kmeans_lite.
     """
-    dsub = dim // m
+    dsub = _dsub(dim, m)
     dist_micro = lambda a, b: F.round(l2sq(a, b) * F.lit(1000000.0), 0).cast("long")
     # NOT widened (round 13, measured — see pq_encode): widening this
     # encode fan-out regressed ann_pq_sign_topk 7.2 → 11.0 s.
@@ -943,37 +878,13 @@ def pq_pretrained_topk(
     enc_scored = sub.join(F.broadcast(codebooks), "subspace").select(
         id_col, "subspace", "code", dist_micro(F.col("subvec"), F.col("centroid")).alias("__d")
     )
-    we = Window.partitionBy(id_col, "subspace").orderBy(F.col("__d").asc(), F.col("code"))
-    codes = (
-        enc_scored.withColumn("__rn", F.row_number().over(we))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, "subspace", "code")
-    )
-    q_sub = _subvectors(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-        ["query_id"],
-        vec_col,
-        m,
-        dsub,
-    )
-    dtab = q_sub.join(F.broadcast(codebooks), "subspace").select(
-        "query_id",
-        "subspace",
-        "code",
-        dist_micro(F.col("subvec"), F.col("centroid")).alias("__d"),
-    )
-    scored = (
-        codes.join(F.broadcast(dtab), ["subspace", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", id_col)
-        .agg(F.sum("__d").alias("adc_dist_micro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist_micro").asc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    codes = _argmin(
+        enc_scored, [id_col, "subspace"], F.col("__d").asc(), F.col("code")
+    ).select(id_col, "subspace", "code")
+    scored = _adc_groups(
+        codes, queries, codebooks, m, dsub, id_col, vec_col, dist_micro
+    ).agg(F.sum("__d").alias("adc_dist_micro"))
+    return _top_k(scored, k, F.col("adc_dist_micro").asc(), id_col)
 
 
 def pq_topk(
@@ -1001,32 +912,10 @@ def pq_topk(
         embeddings, m=m, ksub=ksub, dim=dim, id_col=id_col, vec_col=vec_col
     )
     codes = pq_encode(embeddings, codebooks, m=m, dim=dim, id_col=id_col, vec_col=vec_col)
-    dsub = dim // m
-    q_sub = _subvectors(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-        ["query_id"],
-        vec_col,
-        m,
-        dsub,
-    )
-    dtab = q_sub.join(F.broadcast(codebooks), "subspace").select(
-        "query_id",
-        "subspace",
-        "code",
-        l2sq(F.col("subvec"), F.col("centroid")).alias("__d"),
-    )
-    scored = (
-        codes.join(F.broadcast(dtab), ["subspace", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", id_col)
-        .agg(F.round(F.sum("__d"), 6).alias("approx_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    scored = _adc_groups(
+        codes, queries, codebooks, m, _dsub(dim, m), id_col, vec_col, l2sq
+    ).agg(F.round(F.sum("__d"), 6).alias("approx_dist"))
+    return _top_k(scored, k, F.col("approx_dist").asc(), id_col)
 
 
 def sign_cells(

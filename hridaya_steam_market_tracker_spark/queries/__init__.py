@@ -69,6 +69,14 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
 # so a time-budgeted correctness run records as many rows as possible
 # before any cutoff.
 _SAMPLE_FIRST: tuple[str, ...] = (
+    "ann_cosine_topk",
+    "ann_pq_sign_topk",
+    "ann_ivf_sign_topk",
+    "hard_negative_mining",
+    "knn_label_accuracy",
+    "ann_ivf_recall_vs_brute",
+    "ann_lsh_topk",
+    "ann_lsh_multiprobe_topk",
     "multimodal_image_dhash_checked",
     "multimodal_dhash_near_pairs_checked",
     "corpus_excerpt_admission_twin",
@@ -111,14 +119,6 @@ _SAMPLE_FIRST: tuple[str, ...] = (
     "multimodal_image_offset_crop_pairs",
     "duplicate_span_stats",
     "multimodal_audio_cdt_excerpt_pairs",
-    "multimodal_audio_offset_excerpt_pairs",
-    "multimodal_image_cdt_crop_pairs",
-    "stupid_backoff_eval_scores",
-    "multimodal_video_subclip_pairs",
-    "strip_then_span_stats",
-    "multimodal_audio_hybrid_excerpt_pairs",
-    "ccnet_perplexity_buckets",
-    "multimodal_image_hybrid_crop_pairs",
 )
 
 

@@ -29,6 +29,7 @@ from hridaya_steam_market_tracker_spark.queries import register
 from hridaya_steam_market_tracker_spark.queries.oracle_sql import (
     admission_sql,
     components_sql,
+    cosine_sql,
 )
 from hridaya_steam_market_tracker_spark.tables import table
 
@@ -2285,16 +2286,6 @@ _BM25_CTE = f"""
     )
 """
 
-_HYBRID_COS = (
-    "list_inner_product(CAST(a.embedding AS DOUBLE[]),"
-    " CAST(q.embedding AS DOUBLE[]))"
-    " / sqrt(list_inner_product(CAST(a.embedding AS DOUBLE[]),"
-    " CAST(a.embedding AS DOUBLE[]))"
-    " * list_inner_product(CAST(q.embedding AS DOUBLE[]),"
-    " CAST(q.embedding AS DOUBLE[])))"
-)
-
-
 @register(
     "hybrid_rrf_search",
     oracle="WITH " + _BM25_CTE + f"""
@@ -2309,7 +2300,9 @@ _HYBRID_COS = (
       SELECT vec_id AS doc_id, CAST(rn AS INTEGER) AS rank_vec FROM (
         SELECT a.vec_id,
                row_number() OVER (
-                 ORDER BY round({_HYBRID_COS}, 6) DESC, a.vec_id) AS rn
+                 ORDER BY round({cosine_sql("CAST(a.embedding AS DOUBLE[])",
+                                            "CAST(q.embedding AS DOUBLE[])")}, 6) DESC,
+                          a.vec_id) AS rn
         FROM embeddings a JOIN embeddings q
           ON q.vec_id = 0 AND a.vec_id <> 0
       ) WHERE rn <= 50

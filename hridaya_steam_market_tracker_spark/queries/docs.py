@@ -27,6 +27,8 @@ from hridaya_steam_market_tracker_spark.queries import register
 from hridaya_steam_market_tracker_spark.queries.oracle_sql import (
     components_sql,
     containment_pairs_sql,
+    cosine_sql,
+    lcg_planes_sql,
 )
 from hridaya_steam_market_tracker_spark.tables import table
 
@@ -46,9 +48,11 @@ _SHINGLES = (
 # dedup_minhash_lsh, whose oracle keeps its own pinned text).
 _JACCARD_PAIRS_CTE = f"""d AS (SELECT doc_id, {_TOKS_LOWER} AS w FROM documents),
     sh AS (SELECT doc_id, {_SHINGLES} AS s FROM d WHERE len(w) >= 3),
-    pairs AS (
+    pairs AS MATERIALIZED (
       SELECT a.doc_id AS i, b.doc_id AS j
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      FROM sh a JOIN sh b
+        ON a.doc_id < b.doc_id
+       AND 2 * least(len(a.s), len(b.s)) >= greatest(len(a.s), len(b.s))
       WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
             / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
     )"""
@@ -760,19 +764,7 @@ def _hashed_doc_embeddings(docs: DataFrame) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_hashed_emb_ctes().strip().rstrip()},
     hvec AS (SELECT doc_id, list(v ORDER BY dim) AS vec FROM hemb GROUP BY doc_id),
-    lcg AS (
-      SELECT 0 AS step, CAST(7 AS HUGEINT) AS state
-      UNION ALL
-      SELECT step + 1,
-             (state * 6364136223846793005 + 1442695040888963407) % 9223372036854775808
-      FROM lcg WHERE step < 512
-    ),
-    plane_vals AS (
-      SELECT (step-1) // 64 AS p, (step-1) % 64 AS d,
-             CAST(state AS DOUBLE) / 9223372036854775808.0 * 2.0 - 1.0 AS v
-      FROM lcg WHERE step >= 1
-    ),
-    planes AS (SELECT p, list(v ORDER BY d) AS plane FROM plane_vals GROUP BY p),
+    {lcg_planes_sql(1, 8, _HASH_DIM)},
     cells AS (
       SELECT h.doc_id, h.vec,
              CAST(sum(CASE WHEN list_inner_product(h.vec, pl.plane) > 0
@@ -784,9 +776,7 @@ def _hashed_doc_embeddings(docs: DataFrame) -> DataFrame:
     pairs AS (
       SELECT a.doc_id AS i, b.doc_id AS j
       FROM cells a JOIN cells b ON a.cell = b.cell AND a.doc_id < b.doc_id
-      WHERE list_inner_product(a.vec, b.vec)
-            / sqrt(list_inner_product(a.vec, a.vec)
-                 * list_inner_product(b.vec, b.vec)) >= 0.9
+      WHERE {cosine_sql("a.vec", "b.vec")} >= 0.9
     ){components_sql("hvec", "doc_id")}
     SELECT doc_id, component, component = doc_id AS kept FROM comp
     """,

@@ -1,16 +1,71 @@
-"""DuckDB SQL for the near-dup decision shapes the oracles share.
+"""DuckDB SQL for the decision shapes the oracles share.
 
 Each fingerprint plane keeps its own fixture CTE (the independent,
 closed-form reference computation of its fingerprints); the decisions
-layered on top of those fingerprints are stated here once, the way
-queries/parsers.py builds every G-parser oracle from one template. Each
-builder continues a ``WITH`` list that already defines its input
-relation and returns the remaining CTEs (leading comma included); the
-pair and admission builders also return the final ``SELECT``, while
-``components_sql`` stops at its ``comp`` relation.
+layered on top of those fingerprints, and the vector-similarity shapes
+(cosine, seeded-LCG hyperplanes, the top-5 tail), are stated here once,
+the way queries/parsers.py builds every G-parser oracle from one
+template. Each builder continues a ``WITH`` list that already defines
+its input relation and returns the remaining CTEs (leading comma
+included); the pair, admission and top-5 builders also return the final
+``SELECT``, while ``components_sql`` stops at its ``comp`` relation.
+``lcg_planes_sql`` needs no input, so it returns its CTEs without the
+comma, and ``cosine_sql`` is an expression.
 """
 
 from __future__ import annotations
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """Cosine of the DOUBLE[] expressions ``a`` and ``b``: the same
+    formula and accumulation as operators/similarity.py:cosine."""
+    return (
+        f"list_inner_product({a}, {b})"
+        f" / sqrt(list_inner_product({a}, {a}) * list_inner_product({b}, {b}))"
+    )
+
+
+def lcg_planes_sql(
+    banks: int, planes: int, dim: int, seed: int = 7, seed_step: int = 97
+) -> str:
+    """The hyperplanes of operators/similarity.py:_planes_hp_df,
+    bit-exact: bank t (0 <= t < ``banks``) holds ``planes`` planes of
+    ``dim`` components from the LCG of ``hyperplanes`` seeded ``seed +
+    seed_step * t`` (HUGEINT for the 126-bit product, CAST AS DOUBLE for
+    the same round-to-nearest). The caller's ``WITH`` must be
+    ``RECURSIVE``. Ends with ``planes(t, p, plane)``."""
+    return f"""lcg AS (
+      SELECT t, 0 AS step, CAST({seed} + {seed_step} * t AS HUGEINT) AS state
+      FROM generate_series(0, {banks - 1}) AS g(t)
+      UNION ALL
+      SELECT t, step + 1,
+             (state * 6364136223846793005 + 1442695040888963407) % 9223372036854775808
+      FROM lcg WHERE step < {planes * dim}
+    ),
+    plane_vals AS (
+      SELECT t, (step-1) // {dim} AS p, (step-1) % {dim} AS d,
+             CAST(state AS DOUBLE) / 9223372036854775808.0 * 2.0 - 1.0 AS v
+      FROM lcg WHERE step >= 1
+    ),
+    planes AS (
+      SELECT t, p, list(v ORDER BY d) AS plane FROM plane_vals GROUP BY t, p
+    )"""
+
+
+def top5_sql(score: str, order: str = "DESC") -> str:
+    """The similarity searches' top-5 over the caller's ``scored(query_id,
+    vec_id, score)``: each query's rows numbered by ``score`` (``order``)
+    then vec_id. Output ``(query_id, vec_id, score, rank)``, rank as
+    INTEGER, at rank <= 5."""
+    return f""",
+    ranked AS (
+      SELECT *, row_number() OVER (PARTITION BY query_id
+                                   ORDER BY {score} {order}, vec_id ASC) AS rank
+      FROM scored
+    )
+    SELECT query_id, vec_id, {score}, CAST(rank AS INTEGER) AS rank
+    FROM ranked WHERE rank <= 5
+    """
 
 
 def components_sql(nodes: str, node_col: str) -> str:

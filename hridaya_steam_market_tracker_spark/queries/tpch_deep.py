@@ -22,7 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.queries import register
-from hridaya_steam_market_tracker_spark.queries.oracle_sql import components_sql
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import (
+    components_sql,
+    cosine_sql,
+)
 from hridaya_steam_market_tracker_spark.tables import table
 
 
@@ -353,8 +356,7 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs AS (
       SELECT a.vec_id AS i, b.vec_id AS j
       FROM e a JOIN e b ON a.vec_id < b.vec_id
-      WHERE list_inner_product(a.v, b.v)
-            / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)) >= 0.4
+      WHERE {cosine_sql("a.v", "b.v")} >= 0.4
     ){components_sql("embeddings", "vec_id")}
     SELECT vec_id, component, component = vec_id AS is_canonical FROM comp
     """,

@@ -12,16 +12,16 @@ from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.operators import similarity as S
 from hridaya_steam_market_tracker_spark.queries import register
-from hridaya_steam_market_tracker_spark.queries.oracle_sql import components_sql
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import (
+    components_sql,
+    cosine_sql,
+    lcg_planes_sql,
+    top5_sql,
+)
 from hridaya_steam_market_tracker_spark.tables import table
 
-# cosine on DOUBLE[] in DuckDB — same formula/accumulation as the Spark
-# fold in operators/similarity.py.
-_COS = (
-    "list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))"
-    " / sqrt(list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))"
-    " * list_inner_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))"
-)
+# Cosine of a corpus vector `a` and a query vector `q`.
+_COS = cosine_sql("CAST(a.embedding AS DOUBLE[])", "CAST(q.embedding AS DOUBLE[])")
 
 
 _BRUTE_COS_ORACLE = f"""
@@ -30,15 +30,7 @@ _BRUTE_COS_ORACLE = f"""
              round({_COS}, 6) AS cos_sim
       FROM embeddings a
       JOIN embeddings q ON q.vec_id < 10 AND a.vec_id <> q.vec_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id ASC) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank
-    FROM ranked WHERE rank <= 5
-    """
+    ){top5_sql("cos_sim")}"""
 
 
 @register(
@@ -57,6 +49,16 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
 
 
+# Exact rerank of the LSH candidates `cands(query_id, vec_id)`.
+_RERANK_CANDS = f""",
+    scored AS (
+      SELECT c.query_id, c.vec_id, round({_COS}, 6) AS cos_sim
+      FROM cands c
+      JOIN embeddings a ON a.vec_id = c.vec_id
+      JOIN embeddings q ON q.vec_id = c.query_id
+    ){top5_sql("cos_sim")}"""
+
+
 # The LSH hyperplanes come from a seeded LCG (operators/similarity.py:
 # hyperplanes) — pure integer arithmetic plus one int->double division,
 # both exactly reproducible in DuckDB (HUGEINT for the 126-bit product,
@@ -65,22 +67,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # WHOLE approximate pipeline (buckets -> candidate join -> rerank) has a
 # value oracle, not just a recall bound.
 _LSH_ORACLE = f"""
-    WITH RECURSIVE lcg AS (
-      SELECT t, 0 AS step, CAST(7 + 97 * t AS HUGEINT) AS state
-      FROM generate_series(0, 7) AS g(t)
-      UNION ALL
-      SELECT t, step + 1,
-             (state * 6364136223846793005 + 1442695040888963407) % 9223372036854775808
-      FROM lcg WHERE step < 256
-    ),
-    plane_vals AS (
-      SELECT t, (step-1) // 64 AS p, (step-1) % 64 AS d,
-             CAST(state AS DOUBLE) / 9223372036854775808.0 * 2.0 - 1.0 AS v
-      FROM lcg WHERE step >= 1
-    ),
-    planes AS (
-      SELECT t, p, list(v ORDER BY d) AS plane FROM plane_vals GROUP BY t, p
-    ),
+    WITH RECURSIVE {lcg_planes_sql(8, 4, 64)},
     emb_buckets AS (
       SELECT e.vec_id, pl.t,
              CAST(sum(CASE WHEN list_inner_product(CAST(e.embedding AS DOUBLE[]), pl.plane) > 0
@@ -95,21 +82,7 @@ _LSH_ORACLE = f"""
       JOIN (SELECT * FROM emb_buckets WHERE vec_id < 10) qb
         ON eb.t = qb.t AND eb.bucket = qb.bucket
       WHERE eb.vec_id <> qb.vec_id
-    ),
-    scored AS (
-      SELECT c.query_id, c.vec_id, round({_COS}, 6) AS cos_sim
-      FROM cands c
-      JOIN embeddings a ON a.vec_id = c.vec_id
-      JOIN embeddings q ON q.vec_id = c.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id ASC) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank
-    FROM ranked WHERE rank <= 5
-    """
+    ){_RERANK_CANDS}"""
 
 
 @register(
@@ -188,22 +161,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query's bucket plus the least-confident-bit flip (argmin |dot| — a
 # deterministic function of bit-exact dots, so still oracle-checkable).
 _LSH_MULTIPROBE_ORACLE = f"""
-    WITH RECURSIVE lcg AS (
-      SELECT t, 0 AS step, CAST(7 + 97 * t AS HUGEINT) AS state
-      FROM generate_series(0, 7) AS g(t)
-      UNION ALL
-      SELECT t, step + 1,
-             (state * 6364136223846793005 + 1442695040888963407) % 9223372036854775808
-      FROM lcg WHERE step < 256
-    ),
-    plane_vals AS (
-      SELECT t, (step-1) // 64 AS p, (step-1) % 64 AS d,
-             CAST(state AS DOUBLE) / 9223372036854775808.0 * 2.0 - 1.0 AS v
-      FROM lcg WHERE step >= 1
-    ),
-    planes AS (
-      SELECT t, p, list(v ORDER BY d) AS plane FROM plane_vals GROUP BY t, p
-    ),
+    WITH RECURSIVE {lcg_planes_sql(8, 4, 64)},
     dots AS (
       SELECT e.vec_id, pl.t, pl.p,
              list_inner_product(CAST(e.embedding AS DOUBLE[]), pl.plane) AS dt
@@ -230,21 +188,7 @@ _LSH_MULTIPROBE_ORACLE = f"""
       FROM buckets eb
       JOIN q_probes qp ON eb.t = qp.t AND eb.bucket = qp.bucket
       WHERE eb.vec_id <> qp.query_id
-    ),
-    scored AS (
-      SELECT c.query_id, c.vec_id, round({_COS}, 6) AS cos_sim
-      FROM cands c
-      JOIN embeddings a ON a.vec_id = c.vec_id
-      JOIN embeddings q ON q.vec_id = c.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id ASC) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank
-    FROM ranked WHERE rank <= 5
-    """
+    ){_RERANK_CANDS}"""
 
 
 @register(
@@ -275,21 +219,8 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate discipline), so these approximate searches are value-checked
 # end-to-end — unlike Lloyd-trained quantizers, whose float feedback loop
 # cannot be replicated cross-engine (those stay recall-bounded in tests).
-_IVF_SIGN_ORACLE = """
-    WITH RECURSIVE lcg AS (
-      SELECT 0 AS step, CAST(7 AS HUGEINT) AS state
-      UNION ALL
-      SELECT step + 1,
-             (state * 6364136223846793005 + 1442695040888963407) % 9223372036854775808
-      FROM lcg WHERE step < 256
-    ),
-    planes AS (
-      SELECT (step-1) // 64 AS p,
-             list(CAST(state AS DOUBLE) / 9223372036854775808.0 * 2.0 - 1.0
-                  ORDER BY step) AS plane
-      FROM lcg WHERE step >= 1
-      GROUP BY (step-1) // 64
-    ),
+_IVF_SIGN_ORACLE = f"""
+    WITH RECURSIVE {lcg_planes_sql(1, 4, 64)},
     cells AS (
       SELECT e.vec_id,
              CAST(sum(CASE WHEN list_inner_product(CAST(e.embedding AS DOUBLE[]), pl.plane) > 0
@@ -312,10 +243,7 @@ _IVF_SIGN_ORACLE = """
       FROM embeddings WHERE vec_id < 10
     ),
     qcell AS (
-      SELECT query_id, qv, cell,
-             round(list_inner_product(qv, centroid)
-                   / sqrt(list_inner_product(qv, qv)
-                          * list_inner_product(centroid, centroid)), 6) AS sim
+      SELECT query_id, qv, cell, round({cosine_sql("qv", "centroid")}, 6) AS sim
       FROM q CROSS JOIN cent
     ),
     probes AS (
@@ -333,20 +261,9 @@ _IVF_SIGN_ORACLE = """
       WHERE e.vec_id <> p.query_id
     ),
     scored AS (
-      SELECT query_id, vec_id,
-             round(list_inner_product(ev, qv)
-                   / sqrt(list_inner_product(ev, ev)
-                          * list_inner_product(qv, qv)), 6) AS cos_sim
+      SELECT query_id, vec_id, round({cosine_sql("ev", "qv")}, 6) AS cos_sim
       FROM cands
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id ASC) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank
-    FROM ranked WHERE rank <= 5
-    """
+    ){top5_sql("cos_sim")}"""
 
 
 @register(
@@ -375,22 +292,8 @@ def ann_ivf_sign_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_SIGN_ORACLE = """
-    WITH RECURSIVE lcg AS (
-      SELECT s, 0 AS step, CAST(11 + 13 * s AS HUGEINT) AS state
-      FROM generate_series(0, 15) AS gs(s)
-      UNION ALL
-      SELECT s, step + 1,
-             (state * 6364136223846793005 + 1442695040888963407) % 9223372036854775808
-      FROM lcg WHERE step < 28
-    ),
-    planes AS (
-      SELECT s, (step-1) // 4 AS p,
-             list(CAST(state AS DOUBLE) / 9223372036854775808.0 * 2.0 - 1.0
-                  ORDER BY step) AS plane
-      FROM lcg WHERE step >= 1
-      GROUP BY s, (step-1) // 4
-    ),
+_PQ_SIGN_ORACLE = f"""
+    WITH RECURSIVE {lcg_planes_sql(16, 7, 4, seed=11, seed_step=13)},
     sub AS (
       SELECT vec_id, s AS subspace,
              CAST(embedding[s*4+1 : s*4+4] AS DOUBLE[]) AS subvec
@@ -401,7 +304,7 @@ _PQ_SIGN_ORACLE = """
              CAST(sum(CASE WHEN list_inner_product(sub.subvec, pl.plane) > 0
                            THEN (CAST(1 AS BIGINT) << pl.p) ELSE CAST(0 AS BIGINT) END)
                   AS BIGINT) AS code
-      FROM sub JOIN planes pl ON pl.s = sub.subspace
+      FROM sub JOIN planes pl ON pl.t = sub.subspace
       GROUP BY sub.vec_id, sub.subspace
     ),
     cb AS (
@@ -438,15 +341,7 @@ _PQ_SIGN_ORACLE = """
       FROM codes c JOIN dtab d ON c.subspace = d.subspace AND c.code = d.code
       WHERE c.vec_id <> d.query_id
       GROUP BY d.query_id, c.vec_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY adc_dist_micro ASC, vec_id ASC) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, adc_dist_micro, CAST(rank AS INTEGER) AS rank
-    FROM ranked WHERE rank <= 5
-    """
+    ){top5_sql("adc_dist_micro", "ASC")}"""
 
 
 @register(
@@ -630,22 +525,9 @@ def ann_pq_recall_vs_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Single-bank sign-quantizer cells for semantic dedup: seed 7, 8 planes
-# x 64 dims = 512 LCG steps, replicated bit-exactly (HUGEINT LCG, same
-# double conversion) like the multi-table LSH oracle above.
-_SEMDEDUP_CELLS = """
-    lcg AS (
-      SELECT 0 AS step, CAST(7 AS HUGEINT) AS state
-      UNION ALL
-      SELECT step + 1,
-             (state * 6364136223846793005 + 1442695040888963407) % 9223372036854775808
-      FROM lcg WHERE step < 512
-    ),
-    plane_vals AS (
-      SELECT (step-1) // 64 AS p, (step-1) % 64 AS d,
-             CAST(state AS DOUBLE) / 9223372036854775808.0 * 2.0 - 1.0 AS v
-      FROM lcg WHERE step >= 1
-    ),
-    planes AS (SELECT p, list(v ORDER BY d) AS plane FROM plane_vals GROUP BY p),
+# x 64 dims, replicated bit-exactly like the multi-table LSH oracle above.
+_SEMDEDUP_CELLS = f"""
+    {lcg_planes_sql(1, 8, 64)},
     cells AS (
       SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v,
              CAST(sum(CASE WHEN list_inner_product(CAST(e.embedding AS DOUBLE[]),
@@ -665,9 +547,7 @@ _SEMDEDUP_CELLS = """
     pairs AS (
       SELECT a.vec_id AS i, b.vec_id AS j
       FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE list_inner_product(a.v, b.v)
-            / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v))
-            >= 0.4
+      WHERE {cosine_sql("a.v", "b.v")} >= 0.4
     ){components_sql("embeddings", "vec_id")}
     SELECT c.vec_id, CAST(cl.cell AS BIGINT) AS cell, c.component,
            c.component = c.vec_id AS kept
@@ -909,13 +789,8 @@ def _mmr_oracle(k: int = _MMR_K) -> str:
     cands AS (SELECT query_id, cand_id, simq FROM ranked WHERE rk <= {_MMR_POOL}),
     psim AS (
       SELECT ca.query_id, ca.cand_id AS a, cb.cand_id AS b,
-             round(list_inner_product(CAST(ea.embedding AS DOUBLE[]),
-                                      CAST(eb.embedding AS DOUBLE[]))
-                   / sqrt(list_inner_product(CAST(ea.embedding AS DOUBLE[]),
-                                             CAST(ea.embedding AS DOUBLE[]))
-                        * list_inner_product(CAST(eb.embedding AS DOUBLE[]),
-                                             CAST(eb.embedding AS DOUBLE[]))), 6)
-               AS sim
+             round({cosine_sql("CAST(ea.embedding AS DOUBLE[])",
+                               "CAST(eb.embedding AS DOUBLE[])")}, 6) AS sim
       FROM cands ca
       JOIN cands cb ON ca.query_id = cb.query_id AND ca.cand_id <> cb.cand_id
       JOIN embeddings ea ON ea.vec_id = ca.cand_id

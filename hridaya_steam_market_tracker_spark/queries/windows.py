@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hridaya_steam_market_tracker_spark.operators.asof import as_of_join
 from hridaya_steam_market_tracker_spark.queries import register
+from hridaya_steam_market_tracker_spark.queries.oracle_sql import cosine_sql
 from hridaya_steam_market_tracker_spark.tables import table
 
 
@@ -174,14 +175,11 @@ def w6_asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_cosine_near_dup",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-    SELECT a.vec_id AS i, b.vec_id AS j,
-           round(list_inner_product(a.v, b.v)
-                 / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)), 6) AS cos_sim
+    SELECT a.vec_id AS i, b.vec_id AS j, round({cosine_sql("a.v", "b.v")}, 6) AS cos_sim
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_inner_product(a.v, b.v)
-          / sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)) >= 0.4
+    WHERE {cosine_sql("a.v", "b.v")} >= 0.4
     """,
     doc=(
         "Embedding-cosine near-duplicate pairs, EXACT, via the tiled block "

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hridaya_steam_market_tracker_spark.streaming.push import route_batch
+from hridaya_steam_market_tracker_spark.streaming.push import start_push
 
 
 def test_cdc_stream_over_sink_routes_appends(spark, tmp_path):
@@ -30,12 +30,7 @@ def test_cdc_stream_over_sink_routes_appends(spark, tmp_path):
     change_feed = spark.readStream.schema(
         spark.read.parquet(sink_dir).schema
     ).parquet(sink_dir)
-    q = (
-        change_feed.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(lambda df, _id: route_batch(df, subs, frames.extend))
-        .start()
-    )
+    q = start_push(change_feed, subs, frames.extend, str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
         n_initial = len(frames)

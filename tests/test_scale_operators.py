@@ -225,6 +225,22 @@ def test_pq_pretrained_adc_is_integer_exact_and_sane(spark):
     assert len(exact & approx) / len(exact) >= 0.3
 
 
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda emb: S.sign_codebooks(emb, m=5, dim=64),
+        lambda emb: S.pq_pretrained_topk(emb, emb, emb, m=5, dim=64),
+    ],
+    ids=["sign_codebooks", "pq_pretrained_topk"],
+)
+def test_pq_refuses_dim_not_divisible_by_m(spark, build):
+    """64 = 5 * 12 + 4: the last 4 dimensions would drop out of the
+    codebooks and the ADC distances, so the split is refused."""
+    emb = table(spark, SF, "embeddings")
+    with pytest.raises(ValueError, match="not divisible"):
+        build(emb)
+
+
 def test_multimodal_feature_extraction(spark):
     media = fake_media_df(spark, n=64)
     feats = extract_features(media)
